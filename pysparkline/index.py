@@ -88,21 +88,21 @@ def sweep_uncommitted_dirs(root: str, committed: set[str]) -> None:
 
 
 class BatchLedger:
-    """The committed-batch manifest discipline shared by the incremental
-    stores (SignatureStore, SubstringStore): batch directories live under
+    """The committed-batch manifest discipline of the incremental stores
+    (dedup's fingerprint stores, ``SignatureStore`` and ``SubstringStore``,
+    and search's ``TextIndex``): batch directories live under
     ``<path>/batches/<name>``, the JSON manifest lists COMMITTED batch
     entries ``{"name", "ts"}`` plus store-specific parameters, and every
     mutation is one atomic manifest rewrite (``atomic_json_dump``) — so a
     crash mid-append leaves an orphan directory readers never see, and a
     failed rewrite rolls the in-memory view back to match disk.
 
-    Extracted in round 6's follow-up because three stores carried private
-    copies of this protocol and drifted twice (orphan sweep, retention
-    stamping — and SignatureStore's manifest writer missed the fsync
-    upgrade entirely). Single-writer, like the stores themselves.
-    IvfIndex keeps its own ordinal ``cells_b<N>`` top-level layout (its
-    manifest predates the ``batches`` schema) but shares
-    ``atomic_json_dump`` and ``sweep_uncommitted_dirs``.
+    One copy of the protocol, so orphan sweep, retention stamping and the
+    fsync'd manifest write cannot drift between stores. Single-writer,
+    like the stores themselves. IvfIndex keeps its own ordinal
+    ``cells_b<N>`` top-level layout (its manifest predates the
+    ``batches`` schema) but shares ``atomic_json_dump`` and
+    ``sweep_uncommitted_dirs``.
     """
 
     def __init__(self, path: str, manifest: dict, manifest_file: str):

@@ -109,30 +109,17 @@ def bpe_train(
     n_merges: int,
     min_freq: int = 1,
     checkpoint_every: int = 16,
-    delta_counts: bool = False,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns
     [(merge_rank, lhs, rhs, freq), ...] in learned order (the merge table
     is n_merges rows — driver-sized by definition; the word table never
     leaves the cluster). Stops early when no pair reaches ``min_freq``.
 
-    ``delta_counts=True`` implements the classic fastBPE/HuggingFace
-    delta: the pair table is aggregated ONCE, then each round updates it
-    from only the words CONTAINING the merged pair (a merge cannot
-    change adjacency counts anywhere else). **Measured dead end as the
-    default** (VERDICT r6 #4 asked for it; the probe falsified the
-    premise): in the relational setting every delta round must
-    full-outer-join and RE-MATERIALIZE the whole pair-count table so the
-    next argmax can read it, plus scan the vocabulary for the
-    containment predicate — while the "naive" full re-aggregation is a
-    single map-side-combined shuffle over the (already vocab-sized,
-    NOT corpus-sized) word table. Measured on local[16], identical merge
-    tables both modes: 49k-word vocab / 3M tokens -> full 0.91 s/merge
-    vs delta 9.13; 573k-word vocab / 6M tokens -> full 3.08 s/merge vs
-    delta 46.5. The in-memory trick wins because a hashmap update is
-    free; a distributed table rewrite is not, and the gap WIDENS with
-    vocabulary (SCALE.md "BPE delta probe"). Kept as an opt-in
-    verification mode, property-tested equal in tests/test_bpe.py."""
+    Each round re-aggregates pair counts over the whole (vocabulary-sized)
+    word table in one map-side-combined shuffle. The fastBPE delta update
+    (recount only the words containing the merged pair) measured 10-15x
+    slower here, because every delta round must rewrite the whole
+    pair-count table (SCALE.md "BPE delta probe")."""
     base = (
         word_counts(df, text_col)
         .select(F.split(F.col("word"), "").alias("syms"), F.col("cnt"))
@@ -141,20 +128,14 @@ def bpe_train(
     words = base
     merges: list[tuple[int, str, str, int]] = []
 
-    def full_counts(w: DataFrame) -> DataFrame:
-        return (
-            w.select(
-                F.explode(_pairs_expr(F.col("syms"))).alias("pair"), "cnt"
-            )
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("freq"))
-        )
-
-    counts = full_counts(words).localCheckpoint() if delta_counts else None
     try:
         for rank in range(int(n_merges)):
             top = (
-                (counts if delta_counts else full_counts(words))
+                words.select(
+                    F.explode(_pairs_expr(F.col("syms"))).alias("pair"), "cnt"
+                )
+                .groupBy("pair")
+                .agg(F.sum("cnt").alias("freq"))
                 .orderBy(F.col("freq").desc(), F.col("pair").asc())
                 .limit(1)
                 .collect()
@@ -164,54 +145,6 @@ def bpe_train(
             pair, freq = top[0]["pair"], int(top[0]["freq"])
             lhs, rhs = pair.split(" ")
             merges.append((rank, lhs, rhs, freq))
-            hit = F.array_contains(_pairs_expr(F.col("syms")), F.lit(pair))
-            if delta_counts:
-                # affected words only: their old adjacency pairs leave the
-                # table weighted -cnt, the post-merge pairs enter at +cnt
-                aff = words.where(hit).select(
-                    F.col("syms").alias("old"),
-                    _merge_fold_expr(F.col("syms"), lhs, rhs).alias("new"),
-                    "cnt",
-                )
-                deltas = (
-                    aff.select(
-                        F.explode(
-                            F.concat(
-                                F.transform(
-                                    _pairs_expr(F.col("old")),
-                                    lambda p: F.struct(
-                                        p.alias("pair"),
-                                        (-F.col("cnt")).alias("d"),
-                                    ),
-                                ),
-                                F.transform(
-                                    _pairs_expr(F.col("new")),
-                                    lambda p: F.struct(
-                                        p.alias("pair"),
-                                        F.col("cnt").alias("d"),
-                                    ),
-                                ),
-                            )
-                        ).alias("pd")
-                    )
-                    .select("pd.pair", "pd.d")
-                    .groupBy("pair")
-                    .agg(F.sum("d").alias("d"))
-                )
-                counts = (
-                    counts.join(deltas, "pair", "full")
-                    .select(
-                        "pair",
-                        (
-                            F.coalesce(F.col("freq"), F.lit(0))
-                            + F.coalesce(F.col("d"), F.lit(0))
-                        ).alias("freq"),
-                    )
-                    .where(F.col("freq") > 0)
-                    # eager: the next argmax reads the materialized table,
-                    # and the join chain never deepens past one round
-                    .localCheckpoint()
-                )
             # UNCONDITIONAL fold: the fold is identity on words not
             # containing the pair, and wrapping it in F.when(hit, ...)
             # .otherwise(syms) would reference the accumulated syms

@@ -16,6 +16,9 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import functools
+import operator
+import os
 import threading
 import weakref
 
@@ -295,6 +298,9 @@ def hash_shingle(s: str) -> int:
     return h
 
 
+_BAND_KEYS = ("band", "band_hash")
+
+
 def _banded(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(id, band, band_hash) — LSH banding of (id, sig) rows. Deterministic
     given (num_perm, bands), so bands computed in different batches/sessions
@@ -319,23 +325,24 @@ def _banded(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     )
 
 
-def _bucket_capped(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop rows of (band, band_hash) buckets larger than ``max_bucket`` —
-    one window shuffle, no groupBy+join-back. Capped buckets trade recall
-    for a hard bound on candidate-join fan-out (boilerplate-dominated
-    corpora); at 100 TB this is the difference between a bounded job and
-    a quadratic one. Shared by the self-join and cross-table LSH paths."""
-    # pin the window's (band, band_hash) exchange at the configured fleet
-    # width: the band rows are byte-tiny, so AQE's byte-based coalescing
-    # would hand the window AND the candidate self-join that reuses this
+def _bucket_capped(df: DataFrame, keys, cap: int) -> DataFrame:
+    """Drop rows of ``keys`` buckets larger than ``cap`` — one window
+    shuffle, no groupBy+join-back. Capped buckets trade recall for a hard
+    bound on candidate-join fan-out (boilerplate-dominated corpora); at
+    100 TB this is the difference between a bounded job and a quadratic
+    one. Shared by the self-join and cross-table LSH paths and by both
+    incremental stores' caps (bands, window fingerprints)."""
+    # pin the window's key exchange at the configured fleet width: the
+    # key rows are byte-tiny, so AQE's byte-based coalescing would hand
+    # the window AND the candidate self-join that reuses this
     # partitioning to a single core (pinned_shuffle doc — measured one
     # 0.8 s task for the whole join+dedup+est chain at bench SF). Same
     # keys the window requires, so this REPLACES the exchange.
-    banded = pinned_shuffle(banded, "band", "band_hash")
-    bw = Window.partitionBy("band", "band_hash")
+    df = pinned_shuffle(df, *keys)
+    bw = Window.partitionBy(*keys)
     return (
-        banded.withColumn("__bsz", F.count(F.lit(1)).over(bw))
-        .where(F.col("__bsz") <= max_bucket)
+        df.withColumn("__bsz", F.count(F.lit(1)).over(bw))
+        .where(F.col("__bsz") <= cap)
         .drop("__bsz")
     )
 
@@ -382,7 +389,7 @@ def minhash_lsh_pairs(
     # candidate dedup — ids are 8 bytes. Signatures are joined back exactly
     # once per side after dropDuplicates collapses multi-band hits.
     banded = _banded(sigs, num_perm, bands)
-    small = _bucket_capped(banded, max_bucket)
+    small = _bucket_capped(banded, _BAND_KEYS, max_bucket)
     cand = (
         small.alias("l")
         .join(
@@ -468,12 +475,12 @@ def fuzzy_join(
     # under "fuzzy_join_cand", retired by the next same-session call or
     # release_dedup_caches() (ADVICE r7 #2).
     cand = (
-        _bucket_capped(_banded(ls, num_perm, bands), max_bucket)
+        _bucket_capped(_banded(ls, num_perm, bands), _BAND_KEYS, max_bucket)
         .alias("l")
         .join(
-            _bucket_capped(_banded(rs, num_perm, bands), max_bucket).alias(
-                "r"
-            ),
+            _bucket_capped(
+                _banded(rs, num_perm, bands), _BAND_KEYS, max_bucket
+            ).alias("r"),
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.band_hash") == F.col("r.band_hash")),
         )
@@ -849,14 +856,10 @@ def _substr_windows(text_col: str, L: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _substr_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, L: int, sample_mod: int = 1
-) -> DataFrame:
-    """(id, h): distinct xxhash64 window fingerprints per document,
-    optionally 0-mod-p sampled (content-defined, so selection is identical
-    for the same run in two documents)."""
-    from .util import ensure_parallelism
-
+def _substr_hashes(text_col: str, L: int, sample_mod: int = 1):
+    """array<long>: the distinct xxhash64 window fingerprints of a text
+    column, optionally 0-mod-p sampled (content-defined, so selection is
+    identical for the same run in two documents)."""
     hashes = F.array_distinct(
         F.transform(
             _substr_windows(text_col, L), lambda w: F.xxhash64(w)
@@ -864,10 +867,20 @@ def _substr_fingerprints(
     )
     if sample_mod > 1:
         hashes = F.filter(hashes, lambda h: h % sample_mod == 0)
+    return hashes
+
+
+def _substr_fingerprints(
+    df: DataFrame, id_col: str, text_col: str, L: int, sample_mod: int = 1
+) -> DataFrame:
+    """(id, h): one row per distinct window fingerprint per document."""
+    from .util import ensure_parallelism
+
     # window extraction is an interpreted per-token chain; spread narrow
     # single-file corpora before it (no-op on wide inputs)
     return ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), F.explode(hashes).alias("h")
+        F.col(id_col).alias("id"),
+        F.explode(_substr_hashes(text_col, L, sample_mod)).alias("h"),
     )
 
 
@@ -908,267 +921,6 @@ def _substr_verify_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-class SubstringStore:
-    """Persisted substring-fingerprint store — ingest-time exact-substring
-    decontamination (round 6): each new batch is checked for shared
-    >= ``min_tokens``-token runs against the FULL history without ever
-    rescanning it. The incremental complement of ``substring_dup_pairs``,
-    with SignatureStore's layout and commit protocol.
-
-    Layout: ``batches/<name>/fps`` parquet of (id, h) window fingerprints,
-    plus a JSON manifest pinning (minTokens, sampleMod, maxDf) — every
-    batch fingerprints identically, the property the incremental join
-    relies on — and listing COMMITTED batch names; an append writes a
-    fresh batch directory and only then commits its name atomically, so a
-    crash leaves an orphan readers never see. Single-writer, like
-    SignatureStore.
-
-    Verdict semantics: a new doc is flagged when it shares a window
-    fingerprint with the store or with an EARLIER doc of its own batch
-    (smaller id wins). With ``history_docs`` the flagged candidates are
-    exact-verified by window-string intersection (collisions cannot flag a
-    doc); without it the 64-bit fingerprint match decides — the store
-    deliberately keeps O(windows) fingerprints, not O(corpus) text, so the
-    estimate-vs-exact contract mirrors SignatureStore's.
-    """
-
-    MANIFEST = "substring_store.json"
-
-    def __init__(self, spark, path: str, manifest: dict):
-        from ..index import BatchLedger
-
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-        self._ledger = BatchLedger(path, manifest, self.MANIFEST)
-
-    @property
-    def _batches_path(self) -> str:
-        return self._ledger.batches_path
-
-    def _write_manifest(self) -> None:
-        self._ledger.write_manifest()
-
-    @staticmethod
-    def create(
-        spark,
-        path: str,
-        min_tokens: int = 8,
-        sample_mod: int = 1,
-        max_df: int | None = 1000,
-    ) -> "SubstringStore":
-        import os
-
-        manifest = {
-            "minTokens": min_tokens,
-            "sampleMod": sample_mod,
-            "maxDf": max_df,
-            "batches": [],
-        }
-        os.makedirs(path, exist_ok=True)
-        store = SubstringStore(spark, path, manifest)
-        store._ledger.write_manifest()
-        return store
-
-    @staticmethod
-    def load(spark, path: str) -> "SubstringStore":
-        import json
-        import os
-
-        with open(os.path.join(path, SubstringStore.MANIFEST)) as fh:
-            return SubstringStore(spark, path, json.load(fh))
-
-    # -- commit protocol: index.BatchLedger (shared with SignatureStore) ---
-
-    def _write_batch(
-        self, fps: DataFrame, ts: float | None = None,
-        extra: dict | None = None,
-    ) -> str:
-        import os
-
-        return self._ledger.commit_batch(
-            lambda bdir: fps.write.parquet(os.path.join(bdir, "fps")),
-            extra=extra,
-            ts=ts,
-        )
-
-    def _stored(self) -> DataFrame:
-        paths = self._ledger.batch_paths("fps")
-        if not paths:
-            return self.spark.createDataFrame([], "id long, h long")
-        # fingerprint layout is fixed by the store: the static schema skips
-        # a per-read footer-inference job (same manifest-schema discipline
-        # as SignatureStore._stored / OlapIndex loads)
-        return self.spark.read.schema("id long, h long").parquet(*paths)
-
-    def compact(self, max_age_seconds: float | None = None) -> None:
-        """Merge committed batches into one; ``max_age_seconds`` first
-        expires whole batches older than the retention window (their docs
-        stop blocking future ingests; the merged batch keeps the oldest
-        constituent's timestamp — see BatchLedger.compact_batches). Orphans
-        from crashed appends are swept. Single-writer."""
-        import os
-
-        def write_merged(keep, bdir):
-            merged = self.spark.read.parquet(
-                *[
-                    os.path.join(self._ledger.batch_dir(b["name"]), "fps")
-                    for b in keep
-                ]
-            ).localCheckpoint()
-            merged.write.parquet(os.path.join(bdir, "fps"))
-
-        self._ledger.compact_batches(write_merged, max_age_seconds)
-
-    # -- ingest -------------------------------------------------------------
-
-    def _fps(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        m = self.manifest
-        return _substr_fingerprints(
-            docs, id_col, text_col, m["minTokens"], m["sampleMod"]
-        )
-
-    def append(self, docs: DataFrame, id_col: str, text_col: str) -> None:
-        """Register documents WITHOUT dedup (store initialization /
-        trusted history): computes and commits their fingerprints."""
-        self._write_batch(self._fps(docs, id_col, text_col))
-
-    def dedup_and_append(
-        self,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        history_docs: DataFrame | None = None,
-        _commit_extra: dict | None = None,
-        _pre_commit=None,
-    ) -> DataFrame:
-        """Flag ``docs`` sharing a >= minTokens-token run with the store or
-        with earlier docs of the batch, then append the SURVIVORS'
-        fingerprints. Returns the verdict (id, kept) — this method RUNS
-        the job (the append is a write).
-
-        ``maxDf`` caps the per-fingerprint postings over store+batch
-        combined (the boilerplate d^2 guard — bounded recall, same trade
-        as the batch operator). With ``history_docs`` (+ the batch's own
-        texts) flagged candidates are exact-verified; pairs whose stored
-        text is missing from a PARTIAL history fall back to the
-        fingerprint match rather than silently passing."""
-        m = self.manifest
-        fps_new = self._fps(docs, id_col, text_col).persist()
-        # materialize before the fan-out: the verdict plan has multiple
-        # independent leaf stages over fps_new (union side, candidate
-        # join, verdict join, survivors semi) which AQE submits
-        # concurrently — against a lazy cache each would recompute the
-        # fingerprint pass itself (the SignatureStore stampede, profiled
-        # in r12 as five concurrent duplicate UDF stages)
-        fps_new.count()
-        # only stored rows whose fingerprint occurs in the NEW batch can
-        # matter — semi-join the store down to those before the df-cap
-        # window and candidate join, so an ingest batch shuffles O(batch
-        # matches), never the whole fingerprint history (round-6 review:
-        # the unfiltered union re-shuffled every committed fingerprint per
-        # batch, undercutting the 'never rescan history' posture)
-        stored_matched = self._stored().join(
-            fps_new.select("h").distinct(), "h", "left_semi"
-        )
-        both = fps_new.select(
-            "id", "h", F.lit(True).alias("__new")
-        ).unionByName(
-            stored_matched.select("id", "h", F.lit(False).alias("__new"))
-        )
-        if m.get("maxDf") is not None:
-            # pin the df-cap window's exchange at fleet width ((id, h)
-            # rows are byte-tiny, so AQE coalescing would run the window
-            # AND the candidate self-join reusing this partitioning on
-            # 1-2 cores — same §2.2 fix as the SignatureStore band cap)
-            both = pinned_shuffle(both, "h")
-            hw = Window.partitionBy("h")
-            both = (
-                both.withColumn("__df", F.count(F.lit(1)).over(hw))
-                .where(F.col("__df") <= m["maxDf"])
-                .drop("__df")
-            )
-        new_side = both.where("__new")
-        cand = (
-            new_side.alias("l")
-            .join(
-                both.alias("r"),
-                (F.col("l.h") == F.col("r.h"))
-                & (
-                    (F.col("r.__new") & (F.col("r.id") < F.col("l.id")))
-                    | ~F.col("r.__new")
-                ),
-            )
-            .select(F.col("r.id").alias("id_a"), F.col("l.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        if history_docs is not None:
-            texts = history_docs.select(
-                F.col(id_col), F.col(text_col)
-            ).unionByName(docs.select(F.col(id_col), F.col(text_col)))
-            text_ids = texts.select(F.col(id_col).alias("id_a")).distinct()
-            verified = _substr_verify_pairs(
-                cand.join(text_ids, "id_a", "left_semi"),
-                texts, id_col, text_col, m["minTokens"],
-            )
-            # stored-side text absent from a partial history: the
-            # fingerprint match decides (never silently keep)
-            dup_hits = verified.unionByName(
-                cand.join(text_ids, "id_a", "left_anti")
-            )
-        else:
-            dup_hits = cand
-        dup_ids = dup_hits.select(F.col("id_b").alias("id")).distinct()
-        verdict = (
-            docs.select(F.col(id_col).alias("id"))
-            .join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
-            .select("id", F.coalesce(~F.col("__dup"), F.lit(True)).alias("kept"))
-            .localCheckpoint()
-        )
-        keep_ids = verdict.where("kept").select("id")
-        if _pre_commit is not None:
-            # verdict is localCheckpoint'ed (materialized), so this runs no
-            # store-reading plan — it must land BEFORE the store commit
-            # (stream exactly-once: a replay after a crash in between
-            # recomputes the identical verdict against the unchanged store)
-            _pre_commit(verdict)
-        self._write_batch(
-            fps_new.join(keep_ids, "id", "left_semi").localCheckpoint(),
-            extra=_commit_extra,
-        )
-        fps_new.unpersist()
-        return verdict
-
-    def process_stream_batch(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        id_col: str,
-        text_col: str,
-        verdict_path: str,
-    ) -> None:
-        """foreachBatch body for incremental substring decontamination over
-        a stream, with EXACTLY-ONCE store semantics under at-least-once
-        replays — the same protocol as SignatureStore.process_stream_batch:
-        committed batch ids skip; the verdict lands (overwrite) BEFORE the
-        store commit; survivors' fingerprints and the stream-batch marker
-        commit in ONE atomic manifest rewrite. Single-writer. Works with
-        streaming.ingest.streaming_incremental_dedup unchanged (it is
-        store-agnostic)."""
-        import os
-
-        done = int(self.manifest.get("lastStreamBatch", -1))
-        if batch_id <= done:
-            return
-        self.dedup_and_append(
-            batch_df, id_col, text_col,
-            _commit_extra={"lastStreamBatch": int(batch_id)},
-            _pre_commit=lambda verdict: verdict.write.mode(
-                "overwrite"
-            ).parquet(os.path.join(verdict_path, f"batch={int(batch_id)}")),
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -1490,40 +1242,52 @@ def canonical_docs(
 
 
 # ---------------------------------------------------------------------------
-# incremental dedup against a persisted signature store
+# incremental dedup against a persisted fingerprint store
 # ---------------------------------------------------------------------------
 
 
-class SignatureStore:
-    """Persisted MinHash signature store — the production INGEST shape:
-    each new batch dedups against the full historical corpus without
-    recomputing anything about it.
+class _FingerprintStore:
+    """Committed-batch fingerprint store — the production INGEST shape:
+    each new batch dedups against the full history without recomputing
+    anything about it. This class owns the layout, the commit protocol
+    and the ingest pipeline; a subclass supplies only its fingerprint.
 
-    Layout: ``batches/<name>/sigs/`` parquet of (id, sig) and
-    ``batches/<name>/bands/`` parquet of (id, band, band_hash), plus a JSON
-    manifest pinning (num_perm, bands, shingle_k, seed) — so every batch's
-    signatures and band hashes are computed identically, the property the
-    incremental candidate join relies on — and listing the COMMITTED batch
-    names. An append writes both outputs into a fresh batch directory and
-    only then commits the name with an atomic manifest rewrite (tmp file +
-    ``os.replace``): a crash between the sigs and bands writes leaves an
-    orphan directory that readers never see (previously two independent
-    ``mode("append")`` writes could strand signatures without band rows —
-    docs that silently stopped generating candidates). ``compact()`` sweeps
-    orphans, merges committed batches, and optionally expires old ones.
+    Layout: ``batches/<name>/<kind>/`` parquet per payload kind, plus a
+    JSON manifest pinning the fingerprint parameters — every batch
+    fingerprints identically, the property the incremental candidate join
+    relies on — and listing the COMMITTED batch names. An append writes
+    every payload into a fresh batch directory and only then commits the
+    name with an atomic manifest rewrite (``index.BatchLedger``): a crash
+    between the payload writes leaves an orphan directory that readers
+    never see, so no doc can have some payloads without the others.
+    ``compact()`` sweeps orphans, merges committed batches, and optionally
+    expires old ones.
 
     Ingest is SINGLE-WRITER: the commit protocol makes a crashed append
     invisible, but two concurrent appends would race the manifest rewrite
     (last writer wins, dropping the other's commit).
 
-    A batch costs: one signature pass over the NEW docs, one equi-join of
-    the new bands against the stored bands (the store side never
-    recomputes), exact Jaccard verification for candidates only, and one
+    A batch costs: one fingerprint pass over the NEW docs, one equi-join of
+    the new candidate keys against the stored keys they touch (the store
+    side never recomputes), an exact verify for candidates only, and one
     batch-directory write of the survivors' rows. Nothing rescans the
     historical corpus text.
+
+    A subclass sets ``MANIFEST`` (file name), ``_SCHEMAS`` (payload kind ->
+    static schema: the layout is pinned, so reads skip footer inference),
+    ``_KEY_KIND``/``_KEYS`` (the payload and columns candidates match on)
+    and ``_CAP`` (manifest key of the per-key bucket cap; a None value
+    disables it), and implements ``_fingerprints`` (one row per doc),
+    ``_payloads`` (the batch files derived from those rows), ``_verify``
+    (exact, over texts) and ``_fallback`` (decides candidate pairs whose
+    stored-side text is not available).
     """
 
-    MANIFEST = "minhash_store.json"
+    MANIFEST: str
+    _SCHEMAS: dict[str, str]
+    _KEY_KIND: str
+    _KEYS: tuple[str, ...]
+    _CAP: str
 
     def __init__(self, spark, path: str, manifest: dict):
         from ..index import BatchLedger
@@ -1533,170 +1297,105 @@ class SignatureStore:
         self.manifest = manifest
         self._ledger = BatchLedger(path, manifest, self.MANIFEST)
 
-    @property
-    def _batches_path(self) -> str:
-        return self._ledger.batches_path
-
-    @staticmethod
-    def create(
-        spark,
-        path: str,
-        num_perm: int = 64,
-        bands: int = 16,
-        shingle_k: int = 5,
-        threshold: float = 0.5,
-        seed: int = 42,
-        max_bucket: int = 1000,
-    ) -> "SignatureStore":
-        import json
-        import os
-
-        if num_perm % bands != 0:
-            raise ValueError("num_perm must be divisible by bands")
-        manifest = {
-            "numPerm": num_perm,
-            "bands": bands,
-            "shingleK": shingle_k,
-            "threshold": threshold,
-            "seed": seed,
-            "maxBucket": max_bucket,
-            "batches": [],
-        }
+    @classmethod
+    def _create(cls, spark, path: str, params: dict):
         os.makedirs(path, exist_ok=True)
-        store = SignatureStore(spark, path, manifest)
+        store = cls(spark, path, {**params, "batches": []})
         store._write_manifest()
         return store
 
-    @staticmethod
-    def load(spark, path: str) -> "SignatureStore":
+    @classmethod
+    def load(cls, spark, path: str):
         import json
-        import os
 
-        with open(os.path.join(path, SignatureStore.MANIFEST)) as fh:
-            return SignatureStore(spark, path, json.load(fh))
+        with open(os.path.join(path, cls.MANIFEST)) as fh:
+            return cls(spark, path, json.load(fh))
 
-    # -- commit protocol: index.BatchLedger (shared with SubstringStore) ---
+    @property
+    def _batches_path(self) -> str:
+        return self._ledger.batches_path
 
     def _write_manifest(self) -> None:
         """Atomic manifest rewrite: readers see the old or the new commit
         list, never a torn file (delegates to the shared BatchLedger)."""
         self._ledger.write_manifest()
 
-    def _write_batch(
-        self, sigs: DataFrame, extra: dict | None = None,
-        ts: float | None = None,
-    ) -> str:
-        """Write (sigs, bands) into a fresh batch directory, then commit its
-        name — with ``extra`` manifest keys landing in the SAME atomic
-        rewrite (streaming exactly-once relies on the batch append and its
-        stream-batch marker committing together). Returns the batch name."""
-        import os
+    # -- batch files -------------------------------------------------------
 
-        m = self.manifest
+    @staticmethod
+    def _write_files(bdir: str, payloads: dict) -> None:
+        # concurrent writes (job overlap): the wall cost is max(write)
+        # instead of the sum
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(payloads)) as pool:
+            futures = [
+                pool.submit(df.write.parquet, os.path.join(bdir, kind))
+                for kind, df in payloads.items()
+            ]
+            for f in futures:
+                f.result()
+
+    def _write_batch(self, fps: DataFrame, extra: dict | None = None) -> str:
+        """Write the payloads of ``fps`` (one row per doc) into a fresh
+        batch directory, then commit its name — with ``extra`` manifest
+        keys landing in the SAME atomic rewrite (streaming exactly-once
+        relies on the batch append and its stream-batch marker committing
+        together). Returns the batch name."""
 
         def write_files(bdir: str) -> None:
-            # two write actions below — cache the signature rows so the
-            # minhash pass (the expensive subtree) runs once, not once per
-            # write (same reason compact() localCheckpoints its merge).
-            # Materialize the cache with one count() FIRST, then run both
-            # writes concurrently (guide-§2.6 job overlap): each write only
-            # reads the cache, so the wall cost is max(write) instead of
-            # write + write — and concurrent writes never race the cache
-            # build (two jobs computing the same uncached partition would
-            # both run the minhash pass).
-            from concurrent.futures import ThreadPoolExecutor
-
-            s = sigs.persist()
+            if len(self._SCHEMAS) == 1:
+                self._write_files(bdir, self._payloads(fps))
+                return
+            # several writes read fps: cache it so the fingerprint pass
+            # (the expensive subtree) runs once, not once per write, and
+            # materialize the cache with one count() FIRST — concurrent
+            # writes against a lazy cache would each run the pass
+            cached = fps.persist()
             try:
-                s.count()
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fs = [
-                        pool.submit(
-                            s.write.parquet, os.path.join(bdir, "sigs")
-                        ),
-                        pool.submit(
-                            _banded(s, m["numPerm"], m["bands"])
-                            .write.parquet,
-                            os.path.join(bdir, "bands"),
-                        ),
-                    ]
-                    for f in fs:
-                        f.result()
+                cached.count()
+                self._write_files(bdir, self._payloads(cached))
             finally:
-                s.unpersist()
+                cached.unpersist()
 
-        return self._ledger.commit_batch(write_files, extra=extra, ts=ts)
+        return self._ledger.commit_batch(write_files, extra=extra)
 
-    def _stored(self, kind: str, schema: str) -> DataFrame:
-        paths = self._ledger.batch_paths(kind)
-        if not paths:
+    def _stored(self, kind: str, batches: list | None = None) -> DataFrame:
+        """One payload kind across ``batches`` (default: every committed
+        batch), read with the static schema — the same manifest-schema
+        discipline as OlapIndex loads (no footer-inference job)."""
+        schema = self._SCHEMAS[kind]
+        if batches is None:
+            batches = self.manifest["batches"]
+        if not batches:
             return self.spark.createDataFrame([], schema)
-        # the store's layout is pinned by the manifest, so the schema is
-        # known statically: passing it skips a per-read footer-inference
-        # job (the same manifest-schema discipline as OlapIndex loads)
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self._ledger.batch_dir(b["name"]), kind)
+              for b in batches]
+        )
 
     def compact(self, max_age_seconds: float | None = None) -> None:
         """Merge committed batches into one and delete the rest — after many
-        daily ingests the bands join otherwise degrades into a
+        daily ingests the candidate join otherwise degrades into a
         thousands-of-small-files scan. ``max_age_seconds`` first EXPIRES
         whole batches committed longer ago (retention window: their docs
         stop blocking future ingests; the merged batch keeps the oldest
         constituent's timestamp — see BatchLedger.compact_batches). Orphan
         directories from crashed appends are swept. Single-writer, like
         append."""
-        import os
-
-        def write_merged(keep, bdir):
-            merged = self.spark.read.parquet(
-                *[
-                    os.path.join(self._ledger.batch_dir(b["name"]), "sigs")
-                    for b in keep
-                ]
-            ).localCheckpoint()  # two write actions below re-read this
-            merged.write.parquet(os.path.join(bdir, "sigs"))
-            _banded(
-                merged, self.manifest["numPerm"], self.manifest["bands"]
-            ).write.parquet(os.path.join(bdir, "bands"))
-
-        self._ledger.compact_batches(write_merged, max_age_seconds)
+        self._ledger.compact_batches(
+            lambda keep, bdir: self._write_files(
+                bdir, {kind: self._stored(kind, keep) for kind in self._SCHEMAS}
+            ),
+            max_age_seconds,
+        )
 
     # -- ingest ------------------------------------------------------------
 
     def append(self, docs: DataFrame, id_col: str, text_col: str) -> None:
         """Register documents WITHOUT dedup (store initialization / trusted
-        batches): computes and commits their signatures and band hashes."""
-        m = self.manifest
-        sigs = minhash_signatures(
-            docs, id_col, text_col, m["numPerm"], m["shingleK"], m["seed"]
-        ).persist()
-        self._write_batch(sigs)
-        sigs.unpersist()
-
-    @staticmethod
-    def _estimate_hits(
-        cand: DataFrame, sigs_all: DataFrame, num_perm: int, threshold: float
-    ) -> DataFrame:
-        """Signature-estimate duplicate decision for candidate pairs:
-        matching-minhash fraction >= threshold."""
-        est_pairs = cand.join(
-            sigs_all.select(
-                F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-            ),
-            "id_a",
-        ).join(
-            sigs_all.select(
-                F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-            ),
-            "id_b",
-        )
-        est = F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda v: v,
-            )
-        ) / F.lit(num_perm)
-        return est_pairs.where(est >= threshold).select("id_a", "id_b")
+        batches): computes and commits their fingerprints."""
+        self._write_batch(self._fingerprints(docs, id_col, text_col))
 
     def dedup_and_append(
         self,
@@ -1707,143 +1406,121 @@ class SignatureStore:
         _commit_extra: dict | None = None,
         _pre_commit=None,
     ) -> DataFrame:
-        """Dedup ``docs`` against the store AND against earlier docs in the
-        batch (smaller id wins), then append the survivors' signatures.
-        Returns the collected verdict as a DataFrame (id, kept) — this
+        """Flag ``docs`` that duplicate a stored doc or an EARLIER doc of
+        the batch (smaller id wins), then append the SURVIVORS'
+        fingerprints. Returns the verdict (id, kept), materialized — this
         method RUNS the job (the append is a write).
 
-        Candidates are exact-verified by shingle Jaccard: new-batch texts
-        come from ``docs``; historical texts resolve from ``history_docs``
-        (the corpus the caller already stores — signatures alone cannot
-        verify exactly). Without ``history_docs`` the signature ESTIMATE
-        decides historical matches (documented approximation); candidates
-        whose stored-side text is MISSING from a partial ``history_docs``
-        fall back to the same estimate rather than silently passing as
-        non-duplicates (the store always has their signatures — the
-        committed-batch layout guarantees sig and band rows land together).
+        Candidates are exact-verified (``_verify``): new-batch texts come
+        from ``docs``, stored texts from ``history_docs`` (the corpus the
+        caller already keeps — fingerprints alone cannot verify exactly).
+        Without ``history_docs`` the store's fallback decides (documented
+        approximation); candidates whose stored-side text is MISSING from
+        a partial ``history_docs`` fall back the same way rather than
+        silently passing as non-duplicates.
         """
-        m = self.manifest
-        sigs_new = minhash_signatures(
-            docs, id_col, text_col, m["numPerm"], m["shingleK"], m["seed"]
-        ).persist()
-        # materialize BEFORE the fan-out: the verdict plan has five
-        # independent leaf stages over sigs_new (bands, both est sides,
-        # verdict join, survivors semi) and AQE submits them concurrently —
-        # against a lazily-persisted frame each one computes the
-        # unmaterialized cache itself (profiled: five concurrent 32-task
-        # ArrowEvalPython stages, 5x the signature-UDF pass over the new
-        # batch — the same stampede write_files' count() guards against)
-        sigs_new.count()
-        bands_new = _banded(sigs_new, m["numPerm"], m["bands"])
-        # only stored rows in buckets the NEW batch touches can produce
-        # candidates or change a touched bucket's size — semi-join the
-        # store down to those before the cap window and candidate join, so
-        # an ingest shuffles O(batch bucket matches), never the full band
-        # history (cap semantics unchanged: every stored member of a
-        # touched bucket survives the semi-join, untouched buckets never
-        # mattered). Same round-6 fix as SubstringStore's df cap.
-        bands_old = self._stored(
-            "bands", "id long, band int, band_hash int"
-        ).join(
-            bands_new.select("band", "band_hash").distinct(),
-            ["band", "band_hash"],
-            "left_semi",
-        )
-        sigs_old = self._stored("sigs", "id long, sig array<long>")
-
-        bw = Window.partitionBy("band", "band_hash")
-        all_bands = bands_new.select(
-            "id", "band", "band_hash", F.lit(True).alias("__new")
-        ).unionByName(
-            bands_old.select(
-                "id", "band", "band_hash", F.lit(False).alias("__new")
+        keys = list(self._KEYS)
+        fps_new = self._fingerprints(docs, id_col, text_col).persist()
+        cached = [fps_new]
+        try:
+            # materialize BEFORE the fan-out: the verdict plan has several
+            # independent leaf stages over fps_new (key side, fallback,
+            # verdict join, survivors semi) and AQE submits them
+            # concurrently — against a lazily-persisted frame each one
+            # computes the unmaterialized cache itself (profiled: five
+            # concurrent 32-task ArrowEvalPython stages, 5x the signature
+            # UDF pass over the new batch)
+            fps_new.count()
+            new_keys = self._payloads(fps_new)[self._KEY_KIND]
+            # only stored rows whose key the NEW batch touches can produce
+            # candidates or change a touched bucket's size — semi-join the
+            # store down to those before the cap window and candidate
+            # join, so an ingest shuffles O(batch key matches), never the
+            # whole key history (cap semantics unchanged: every stored
+            # member of a touched bucket survives the semi-join)
+            old_keys = self._stored(self._KEY_KIND).join(
+                new_keys.select(*keys).distinct(), keys, "left_semi"
             )
-        )
-        # pin the bucket-cap window's exchange at fleet width (the same
-        # §2.2 fix as _bucket_capped): band rows are byte-tiny, so AQE's
-        # byte-based coalescing would run the window AND the candidate
-        # self-join that reuses this partitioning on 1-2 cores
-        all_bands = pinned_shuffle(all_bands, "band", "band_hash")
-        capped = (
-            all_bands.withColumn("__bsz", F.count(F.lit(1)).over(bw))
-            .where(F.col("__bsz") <= m["maxBucket"])
-            .drop("__bsz")
-        )
-        new_side = capped.where("__new")
-        # candidate = new doc vs (older new doc) OR (any stored doc)
-        cand = (
-            new_side.alias("l")
-            .join(
-                capped.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (
-                    (F.col("r.__new") & (F.col("r.id") < F.col("l.id")))
-                    | ~F.col("r.__new")
-                ),
+            both = new_keys.select(
+                "id", *keys, F.lit(True).alias("__new")
+            ).unionByName(
+                old_keys.select("id", *keys, F.lit(False).alias("__new"))
             )
-            .select(F.col("r.id").alias("id_a"), F.col("l.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        sigs_all = sigs_new.unionByName(sigs_old)
-        if history_docs is not None:
-            # two consumers below (exact-verify semi join + estimate anti
-            # join) — cache the candidate id pairs so the band join/cap
-            # window/dedup chain over the store's full band history runs
-            # once, not once per consumer (released after the verdict
-            # materializes)
-            cand = cand.persist()
-            texts = history_docs.select(
-                F.col(id_col), F.col(text_col)
-            ).unionByName(docs.select(F.col(id_col), F.col(text_col)))
-            text_ids = texts.select(F.col(id_col).alias("id_a")).distinct()
-            exact_hits = verify_pairs_exact_jaccard(
-                cand.join(text_ids, "id_a", "left_semi"),
-                texts, id_col, text_col, m["shingleK"], m["threshold"],
-            ).select("id_a", "id_b")
-            # stored-side text absent from a PARTIAL history: decide by the
-            # signature estimate instead of silently keeping the new doc
-            # (the inner text join would drop the pair otherwise)
-            est_hits = self._estimate_hits(
-                cand.join(text_ids, "id_a", "left_anti"),
-                sigs_all, m["numPerm"], m["threshold"],
+            cap = self.manifest.get(self._CAP)
+            if cap is not None:
+                both = _bucket_capped(both, keys, cap)
+            # candidate = new doc vs (older new doc) OR (any stored doc)
+            same_key = functools.reduce(
+                operator.and_, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
             )
-            dup_hits = exact_hits.unionByName(est_hits)
-        else:
-            dup_hits = self._estimate_hits(
-                cand, sigs_all, m["numPerm"], m["threshold"]
+            cand = (
+                both.where("__new")
+                .alias("l")
+                .join(
+                    both.alias("r"),
+                    same_key
+                    & (
+                        (F.col("r.__new") & (F.col("r.id") < F.col("l.id")))
+                        | ~F.col("r.__new")
+                    ),
+                )
+                .select(F.col("r.id").alias("id_a"), F.col("l.id").alias("id_b"))
+                .dropDuplicates(["id_a", "id_b"])
             )
-        dup_ids = dup_hits.select(F.col("id_b").alias("id")).distinct()
-
-        # localCheckpoint (eager) BEFORE the batch write below: the verdict
-        # plan reads the store's parquet lazily; materializing it first
-        # guarantees the decision is over the pre-append store even if a
-        # caller re-evaluates the returned DataFrame later.
-        verdict = (
-            sigs_new.select("id")
-            .join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
-            .select(
-                "id", F.coalesce(~F.col("__dup"), F.lit(True)).alias("kept")
+            if history_docs is None:
+                dup_hits = self._fallback(cand, fps_new)
+            else:
+                # two consumers below (exact-verify semi join + fallback
+                # anti join) — cache the candidate pairs so the key join /
+                # cap window / dedup chain runs once, not once per consumer
+                cand = cand.persist()
+                cached.append(cand)
+                texts = history_docs.select(
+                    F.col(id_col), F.col(text_col)
+                ).unionByName(docs.select(F.col(id_col), F.col(text_col)))
+                text_ids = texts.select(F.col(id_col).alias("id_a")).distinct()
+                # stored-side text absent from a PARTIAL history: the
+                # fallback decides instead of silently keeping the new doc
+                # (the verify's inner text join would drop the pair)
+                dup_hits = self._verify(
+                    cand.join(text_ids, "id_a", "left_semi"),
+                    texts, id_col, text_col,
+                ).unionByName(
+                    self._fallback(
+                        cand.join(text_ids, "id_a", "left_anti"), fps_new
+                    )
+                )
+            dup_ids = dup_hits.select(F.col("id_b").alias("id")).distinct()
+            # localCheckpoint (eager) BEFORE the batch write below: the
+            # verdict plan reads the store's parquet lazily; materializing
+            # it first guarantees the decision is over the pre-append store
+            # even if a caller re-evaluates the returned DataFrame later
+            verdict = (
+                fps_new.select("id")
+                .join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
+                .select(
+                    "id", F.coalesce(~F.col("__dup"), F.lit(True)).alias("kept")
+                )
+                .localCheckpoint()
             )
-            .localCheckpoint()
-        )
-        if _pre_commit is not None:
-            # durability hook: persist the (already-materialized) verdict
-            # BEFORE the store's manifest commit, so a crash between the two
-            # replays into "verdict exists, batch not marked done" — the
-            # recoverable order (process_stream_batch) — never the reverse
-            _pre_commit(verdict)
-        survivors = verdict.where("kept").select("id")
-        self._write_batch(
-            sigs_new.join(survivors, "id", "left_semi"), extra=_commit_extra
-        )
-        sigs_new.unpersist()
-        if history_docs is not None:
-            # cand is only persisted on this branch (ADVICE r11): release
-            # it exactly where it was taken so the cache lifecycle reads
-            # true — the other path never cached it
-            cand.unpersist()
-        return verdict
+            if _pre_commit is not None:
+                # durability hook: persist the (already-materialized)
+                # verdict BEFORE the store's manifest commit, so a crash
+                # between the two replays into "verdict exists, batch not
+                # marked done" — the recoverable order
+                # (process_stream_batch) — never the reverse
+                _pre_commit(verdict)
+            self._write_batch(
+                fps_new.join(verdict.where("kept").select("id"), "id", "left_semi"),
+                extra=_commit_extra,
+            )
+            return verdict
+        finally:
+            # also on a failed step: a foreachBatch retry would otherwise
+            # leak one more batch-sized cache per attempt. Only the
+            # verdict's checkpoint outlives the call.
+            for df in cached:
+                df.unpersist()
 
     # -- streaming ingest --------------------------------------------------
 
@@ -1874,8 +1551,6 @@ class SignatureStore:
 
         Single-writer, like every store mutation.
         """
-        import os
-
         done = int(self.manifest.get("lastStreamBatch", -1))
         if batch_id <= done:
             return
@@ -1888,3 +1563,169 @@ class SignatureStore:
                 "overwrite"
             ).parquet(os.path.join(verdict_path, f"batch={int(batch_id)}")),
         )
+
+
+class SubstringStore(_FingerprintStore):
+    """Persisted substring-fingerprint store — ingest-time exact-substring
+    decontamination (round 6): each new batch is checked for shared
+    >= ``min_tokens``-token runs against the FULL history without ever
+    rescanning it. The incremental complement of ``substring_dup_pairs``.
+
+    Layout: ``batches/<name>/fps`` parquet of (id, h) window fingerprints;
+    the manifest pins (minTokens, sampleMod, maxDf). ``maxDf`` caps the
+    per-fingerprint postings over store+batch combined (the boilerplate
+    d^2 guard — bounded recall, same trade as the batch operator); None
+    disables it.
+
+    Verdict semantics: a new doc is flagged when it shares a window
+    fingerprint with the store or with an EARLIER doc of its own batch
+    (smaller id wins). With ``history_docs`` the flagged candidates are
+    exact-verified by window-string intersection (collisions cannot flag a
+    doc); without it, or for a stored doc missing from a partial history,
+    the 64-bit fingerprint match decides — the store deliberately keeps
+    O(windows) fingerprints, not O(corpus) text.
+    """
+
+    MANIFEST = "substring_store.json"
+    _SCHEMAS = {"fps": "id long, h long"}
+    _KEY_KIND = "fps"
+    _KEYS = ("h",)
+    _CAP = "maxDf"
+
+    @staticmethod
+    def create(
+        spark,
+        path: str,
+        min_tokens: int = 8,
+        sample_mod: int = 1,
+        max_df: int | None = 1000,
+    ) -> "SubstringStore":
+        return SubstringStore._create(spark, path, {
+            "minTokens": min_tokens,
+            "sampleMod": sample_mod,
+            "maxDf": max_df,
+        })
+
+    def _fingerprints(
+        self, docs: DataFrame, id_col: str, text_col: str
+    ) -> DataFrame:
+        from .util import ensure_parallelism
+
+        m = self.manifest
+        # window extraction is an interpreted per-token chain; spread narrow
+        # single-file corpora before it (no-op on wide inputs)
+        return ensure_parallelism(docs).select(
+            F.col(id_col).alias("id"),
+            _substr_hashes(text_col, m["minTokens"], m["sampleMod"]).alias("hs"),
+        )
+
+    def _payloads(self, fps: DataFrame) -> dict:
+        return {"fps": fps.select("id", F.explode("hs").alias("h"))}
+
+    def _verify(self, cand, texts, id_col: str, text_col: str) -> DataFrame:
+        return _substr_verify_pairs(
+            cand, texts, id_col, text_col, self.manifest["minTokens"]
+        )
+
+    def _fallback(self, cand: DataFrame, fps_new: DataFrame) -> DataFrame:
+        return cand  # the fingerprint match decides
+
+    # each store has its own entry in its class __dict__, so a profiler
+    # can wrap one store's ingest without touching the other's
+    dedup_and_append = _FingerprintStore.dedup_and_append
+
+
+class SignatureStore(_FingerprintStore):
+    """Persisted MinHash signature store: near-duplicate dedup of each new
+    batch against the full historical corpus.
+
+    Layout: ``batches/<name>/sigs/`` parquet of (id, sig) and
+    ``batches/<name>/bands/`` parquet of (id, band, band_hash), committed
+    together; the manifest pins (numPerm, bands, shingleK, threshold,
+    seed, maxBucket), so every batch's signatures and band hashes are
+    computed identically.
+
+    Verdict semantics: candidates share a (band, band_hash) bucket of at
+    most ``maxBucket`` members; a candidate is a duplicate when its exact
+    shingle Jaccard reaches ``threshold``, or — without the stored side's
+    text — when the signature estimate does.
+    """
+
+    MANIFEST = "minhash_store.json"
+    _SCHEMAS = {
+        "sigs": "id long, sig array<long>",
+        "bands": "id long, band int, band_hash int",
+    }
+    _KEY_KIND = "bands"
+    _KEYS = _BAND_KEYS
+    _CAP = "maxBucket"
+
+    @staticmethod
+    def create(
+        spark,
+        path: str,
+        num_perm: int = 64,
+        bands: int = 16,
+        shingle_k: int = 5,
+        threshold: float = 0.5,
+        seed: int = 42,
+        max_bucket: int = 1000,
+    ) -> "SignatureStore":
+        if num_perm % bands != 0:
+            raise ValueError("num_perm must be divisible by bands")
+        return SignatureStore._create(spark, path, {
+            "numPerm": num_perm,
+            "bands": bands,
+            "shingleK": shingle_k,
+            "threshold": threshold,
+            "seed": seed,
+            "maxBucket": max_bucket,
+        })
+
+    def _fingerprints(
+        self, docs: DataFrame, id_col: str, text_col: str
+    ) -> DataFrame:
+        m = self.manifest
+        return minhash_signatures(
+            docs, id_col, text_col, m["numPerm"], m["shingleK"], m["seed"]
+        )
+
+    def _payloads(self, sigs: DataFrame) -> dict:
+        m = self.manifest
+        return {"sigs": sigs, "bands": _banded(sigs, m["numPerm"], m["bands"])}
+
+    def _verify(self, cand, texts, id_col: str, text_col: str) -> DataFrame:
+        m = self.manifest
+        return verify_pairs_exact_jaccard(
+            cand, texts, id_col, text_col, m["shingleK"], m["threshold"]
+        ).select("id_a", "id_b")
+
+    def _fallback(self, cand: DataFrame, fps_new: DataFrame) -> DataFrame:
+        """Signature-estimate duplicate decision for candidate pairs:
+        matching-minhash fraction >= threshold. The store always has the
+        stored side's signature (the committed-batch layout lands sig and
+        band rows together)."""
+        m = self.manifest
+        sigs_all = fps_new.unionByName(self._stored("sigs"))
+        est_pairs = cand.join(
+            sigs_all.select(
+                F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
+            ),
+            "id_a",
+        ).join(
+            sigs_all.select(
+                F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
+            ),
+            "id_b",
+        )
+        est = F.size(
+            F.filter(
+                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                lambda v: v,
+            )
+        ) / F.lit(m["numPerm"])
+        return est_pairs.where(est >= m["threshold"]).select("id_a", "id_b")
+
+    # each store has its own entry in its class __dict__, so a profiler
+    # can wrap one store's ingest without touching the other's
+    dedup_and_append = _FingerprintStore.dedup_and_append

@@ -104,17 +104,18 @@ def streaming_incremental_dedup(
     verdict_path: str,
     checkpoint: str,
 ):
-    """Near-dup dedup of a document STREAM against a persisted
-    ``dedup.SignatureStore`` — the production ingest loop: each micro-batch
-    dedups against the full historical corpus (and itself), appends its
-    survivors' signatures, and writes per-batch verdicts to
+    """Dedup of a document STREAM against a persisted fingerprint store
+    (``dedup.SignatureStore`` for near-duplicates, ``dedup.SubstringStore``
+    for shared token runs) — the production ingest loop: each micro-batch
+    dedups against the full history (and itself), appends its survivors'
+    fingerprints, and writes per-batch verdicts to
     ``verdict_path/batch=<id>``.
 
     Exactly-once store semantics under foreachBatch's at-least-once
     replays come from the store's committed-batch protocol
-    (SignatureStore.process_stream_batch: replayed batch ids skip; the
-    survivors' append and the stream-batch marker commit in one atomic
-    manifest rewrite). Returns the started StreamingQuery.
+    (``process_stream_batch``: replayed batch ids skip; the survivors'
+    append and the stream-batch marker commit in one atomic manifest
+    rewrite). Returns the started StreamingQuery.
     """
     return (
         stream_df.writeStream.foreachBatch(

@@ -337,15 +337,44 @@ def _basetext(i: int) -> str:
     return " ".join(f"w{i}x{j}q{i * 31 + j}" for j in range(40))
 
 
-def test_signature_store_crashed_append_invisible(spark, tmp_path):
+STORE_KINDS = ["sig", "substr"]
+
+
+def _new_store(spark, kind: str, path: str):
+    """A fresh store of either kind. ``_basetext`` texts are exact
+    duplicates (same i) or share nothing (different i) under both
+    fingerprints, so one fixture serves every store contract."""
+    from pysparkline.operators.dedup import SignatureStore, SubstringStore
+
+    if kind == "sig":
+        return SignatureStore.create(spark, path, threshold=0.5)
+    return SubstringStore.create(spark, path, min_tokens=8)
+
+
+def _quiesce(spark) -> int:
+    """Live persisted-RDD count once it stops changing (unpersist with
+    blocking=False releases asynchronously)."""
+    import time
+
+    jsc = spark.sparkContext._jsc
+    last, deadline = -1, time.time() + 15.0
+    while time.time() < deadline:
+        cur = jsc.getPersistentRDDs().size()
+        if cur == last:
+            return cur
+        last = cur
+        time.sleep(0.5)
+    return last
+
+
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_crashed_append_invisible(spark, tmp_path, kind):
     """A failure between the batch-directory write and the manifest commit
     leaves an orphan the readers never see (ADVICE r3: the old two-append
     layout could strand sigs without band rows); compact() sweeps it."""
     import os
 
-    from pysparkline.operators.dedup import SignatureStore
-
-    store = SignatureStore.create(spark, str(tmp_path / "s"), threshold=0.5)
+    store = _new_store(spark, kind, str(tmp_path / "s"))
     store.append(_mk_docs(spark, [(1, _basetext(1))]), "doc_id", "text")
 
     # simulate the crash: data lands, commit never happens (the commit
@@ -388,15 +417,14 @@ def test_signature_store_crashed_append_invisible(spark, tmp_path):
     assert v2 == {20: False, 21: True}
 
 
-def test_signature_store_compaction_equivalence(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_compaction_equivalence(spark, tmp_path, kind):
     """Three daily batches, then compact: the merged store must give the
     same verdicts as the uncompacted one (VERDICT r3 #7)."""
     import os
 
-    from pysparkline.operators.dedup import SignatureStore
-
     def build(path):
-        s = SignatureStore.create(spark, path, threshold=0.5)
+        s = _new_store(spark, kind, path)
         for day in range(3):
             s.dedup_and_append(
                 _mk_docs(
@@ -421,12 +449,11 @@ def test_signature_store_compaction_equivalence(spark, tmp_path):
     assert va == vb
 
 
-def test_signature_store_retention_expiry(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_retention_expiry(spark, tmp_path, kind):
     """compact(max_age_seconds) drops batches older than the window: their
     docs stop blocking future ingests."""
-    from pysparkline.operators.dedup import SignatureStore
-
-    store = SignatureStore.create(spark, str(tmp_path / "s"), threshold=0.5)
+    store = _new_store(spark, kind, str(tmp_path / "s"))
     store.append(_mk_docs(spark, [(1, _basetext(1))]), "doc_id", "text")
     # age the first batch far into the past
     store.manifest["batches"][0]["ts"] -= 10_000
@@ -445,13 +472,12 @@ def test_signature_store_retention_expiry(spark, tmp_path):
     assert v == {10: True, 11: False}
 
 
-def test_signature_store_partial_history_falls_back_to_estimate(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_partial_history_falls_back(spark, tmp_path, kind):
     """ADVICE r3: a candidate whose stored-side text is missing from a
-    partial history_docs must fall back to the signature estimate, not be
-    silently kept."""
-    from pysparkline.operators.dedup import SignatureStore
-
-    store = SignatureStore.create(spark, str(tmp_path / "s"), threshold=0.5)
+    partial history_docs must fall back to the store's text-free decider
+    (signature estimate / fingerprint match), not be silently kept."""
+    store = _new_store(spark, kind, str(tmp_path / "s"))
     b1 = _mk_docs(spark, [(1, _basetext(1)), (2, _basetext(2))])
     store.append(b1, "doc_id", "text")
 
@@ -464,8 +490,9 @@ def test_signature_store_partial_history_falls_back_to_estimate(spark, tmp_path)
             history_docs=b1.where("doc_id = 1"),
         ).collect()
     }
-    # 10 verified exactly; 11 caught by the estimate fallback (an exact dup
-    # estimates to 1.0) — previously it slipped through as kept
+    # 10 verified exactly; 11 caught by the fallback (an exact dup
+    # estimates to 1.0 and matches every fingerprint) — previously it
+    # slipped through as kept
     assert v == {10: False, 11: False}
 
 
@@ -658,14 +685,14 @@ def test_substring_store_crash_and_compact(spark, tmp_path):
     )
     # orphan: batch dir exists, never committed
     orphan = os.path.join(store._batches_path, "deadbeef0000", "fps")
-    store._stored().limit(0).write.parquet(orphan)
+    store._stored("fps").limit(0).write.parquet(orphan)
     reloaded = SubstringStore.load(spark, store.path)
     assert [b["name"] for b in reloaded.manifest["batches"]] == [
         b["name"] for b in store.manifest["batches"]
     ]
-    n_before = reloaded._stored().count()
+    n_before = reloaded._stored("fps").count()
     reloaded.compact()
-    assert reloaded._stored().count() == n_before
+    assert reloaded._stored("fps").count() == n_before
     assert len(reloaded.manifest["batches"]) == 1
     assert not os.path.exists(os.path.dirname(orphan))
     # the store still blocks a duplicate after compaction
@@ -682,24 +709,15 @@ def test_substring_store_crash_and_compact(spark, tmp_path):
     assert v == {9: False, 8: True}
 
 
-def test_substring_store_compact_preserves_retention_clock(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_compact_preserves_retention_clock(spark, tmp_path, kind):
     """compact() stamps the merged batch with the OLDEST constituent's
     timestamp, so retention expiry still fires after regular compactions
     (round-6 review: a fresh stamp reset the clock forever)."""
-    from pysparkline.operators.dedup import SubstringStore
-
-    run = " ".join(f"r{i}" for i in range(10))
-    store = SubstringStore.create(spark, str(tmp_path / "ssr"), min_tokens=8)
-    store.append(
-        spark.createDataFrame([(1, "old " + run)], "doc_id long, text string"),
-        "doc_id", "text",
-    )
+    store = _new_store(spark, kind, str(tmp_path / "r"))
+    store.append(_mk_docs(spark, [(1, _basetext(1))]), "doc_id", "text")
     old_ts = store.manifest["batches"][0]["ts"]
-    store.append(
-        spark.createDataFrame([(2, "unrelated novel content words")],
-                              "doc_id long, text string"),
-        "doc_id", "text",
-    )
+    store.append(_mk_docs(spark, [(2, _basetext(2))]), "doc_id", "text")
     store.compact()
     assert store.manifest["batches"][0]["ts"] == old_ts
     # a second compact with retention now EXPIRES the merged batch
@@ -710,66 +728,23 @@ def test_substring_store_compact_preserves_retention_clock(spark, tmp_path):
     v = {
         r.id: r.kept
         for r in store.dedup_and_append(
-            spark.createDataFrame(
-                [(9, "later " + run + " again")], "doc_id long, text string"
-            ),
-            "doc_id", "text",
+            _mk_docs(spark, [(9, _basetext(1))]), "doc_id", "text"
         ).collect()
     }
     assert v == {9: True}  # expired history no longer blocks
 
 
-def test_signature_store_compact_preserves_retention_clock(spark, tmp_path):
-    """Same clock-preservation contract for SignatureStore.compact."""
-    from pysparkline.operators.dedup import SignatureStore
-
-    txt = "the same exact document text repeated across batches " * 3
-    store = SignatureStore.create(spark, str(tmp_path / "sgr"))
-    store.append(
-        spark.createDataFrame([(1, txt)], "doc_id long, text string"),
-        "doc_id", "text",
-    )
-    old_ts = store.manifest["batches"][0]["ts"]
-    store.append(
-        spark.createDataFrame(
-            [(2, "different content entirely here" * 4)],
-            "doc_id long, text string",
-        ),
-        "doc_id", "text",
-    )
-    store.compact()
-    assert store.manifest["batches"][0]["ts"] == old_ts
-    store.compact(max_age_seconds=0.0)
-    v = {
-        r.id: r.kept
-        for r in store.dedup_and_append(
-            spark.createDataFrame([(9, txt)], "doc_id long, text string"),
-            "doc_id", "text",
-        ).collect()
-    }
-    assert v == {9: True}  # expired history no longer blocks
-
-
-def test_substring_store_stream_batch_exactly_once(spark, tmp_path):
-    """SubstringStore.process_stream_batch: a replayed batch id is a no-op
-    (store unchanged, verdict directory already present), and the verdict
-    lands under verdict_path/batch=<id> — SignatureStore's exactly-once
-    protocol carried over."""
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_stream_batch_exactly_once(spark, tmp_path, kind):
+    """process_stream_batch: a replayed batch id is a no-op (store
+    unchanged, verdict directory already present), and the verdict lands
+    under verdict_path/batch=<id>."""
     import os
 
-    from pysparkline.operators.dedup import SubstringStore
-
-    run = " ".join(f"s{i}" for i in range(10))
-    store = SubstringStore.create(spark, str(tmp_path / "sss"), min_tokens=8)
-    store.append(
-        spark.createDataFrame([(1, "hist " + run)], "doc_id long, text string"),
-        "doc_id", "text",
-    )
+    store = _new_store(spark, kind, str(tmp_path / "sss"))
+    store.append(_mk_docs(spark, [(1, _basetext(1))]), "doc_id", "text")
     vdir = str(tmp_path / "verdicts")
-    b0 = spark.createDataFrame(
-        [(10, "leak " + run), (11, "novel words entirely here")],
-        "doc_id long, text string",
-    )
+    b0 = _mk_docs(spark, [(10, _basetext(1)), (11, _basetext(2))])
     store.process_stream_batch(b0, 0, "doc_id", "text", vdir)
     v = {
         r.id: r.kept
@@ -782,12 +757,14 @@ def test_substring_store_stream_batch_exactly_once(spark, tmp_path):
     store.process_stream_batch(b0, 0, "doc_id", "text", vdir)
     assert len(store.manifest["batches"]) == n_batches
     # the next batch dedups against batch-0 SURVIVORS too
-    b1 = spark.createDataFrame(
-        [(20, "again novel words entirely here padding tokens galore")],
-        "doc_id long, text string",
-    )
+    b1 = _mk_docs(spark, [(20, _basetext(2)), (21, _basetext(3))])
     store.process_stream_batch(b1, 1, "doc_id", "text", vdir)
     assert store.manifest["lastStreamBatch"] == 1
+    v1 = {
+        r.id: r.kept
+        for r in spark.read.parquet(os.path.join(vdir, "batch=1")).collect()
+    }
+    assert v1 == {20: False, 21: True}
 
 
 def test_canonical_docs_quality_champion(spark):
@@ -847,15 +824,15 @@ def test_cluster_pairs_multi_component_still_exact(spark):
     assert got == {0: 0, 5: 0, 9: 0, 2: 2, 7: 2, 100: 100, 101: 100}
 
 
-def test_failed_compaction_rolls_back_batch_list(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_failed_compaction_rolls_back_batch_list(spark, tmp_path, kind):
     """ADVICE r6 (low): if compaction's merged write or manifest rewrite
     throws, the in-memory batch list must roll back to the full pre-compact
     snapshot — not be left empty while disk still lists the old batches (a
     later append would then commit a manifest dropping every prior batch)."""
     from pysparkline.index import BatchLedger
-    from pysparkline.operators.dedup import SignatureStore
 
-    store = SignatureStore.create(spark, str(tmp_path / "s"), threshold=0.5)
+    store = _new_store(spark, kind, str(tmp_path / "s"))
     store.append(_mk_docs(spark, [(1, _basetext(1))]), "doc_id", "text")
     store.append(_mk_docs(spark, [(2, _basetext(2))]), "doc_id", "text")
     before = [dict(b) for b in store.manifest["batches"]]
@@ -884,39 +861,22 @@ def test_failed_compaction_rolls_back_batch_list(spark, tmp_path):
     assert v == {10: False, 11: False}
 
 
-def test_signature_store_releases_intermediate_caches(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_releases_intermediate_caches(spark, tmp_path, kind):
     """append/dedup_and_append cache their expensive intermediates (the
-    signature rows feeding the sigs+bands double write; the candidate
-    pairs feeding both the exact-verify semi join and the estimate anti
-    join) but must RELEASE them before returning — only the verdict's
-    localCheckpoint may outlive the call (round-11: the double write
-    recomputed the minhash pass, the verify pair re-ran the whole band
-    join chain)."""
-    import time
-
+    fingerprint rows feeding the batch write; the candidate pairs feeding
+    both the exact-verify semi join and the fallback anti join) but must
+    RELEASE them before returning — only the verdict's localCheckpoint may
+    outlive the call (round-11: the double write recomputed the minhash
+    pass, the verify pair re-ran the whole band join chain)."""
     from pysparkline.operators import dedup
-    from pysparkline.operators.dedup import SignatureStore
-
-    jsc = spark.sparkContext._jsc
-
-    def _quiesce():
-        last, deadline = -1, time.time() + 15.0
-        while time.time() < deadline:
-            cur = jsc.getPersistentRDDs().size()
-            if cur == last:
-                return cur
-            last = cur
-            time.sleep(0.5)
-        return last
 
     dedup.release_dedup_caches()
-    base = _quiesce()
-    store = SignatureStore.create(
-        spark, str(tmp_path / "sighygiene"), threshold=0.5
-    )
+    base = _quiesce(spark)
+    store = _new_store(spark, kind, str(tmp_path / "hygiene"))
     old = _mk_docs(spark, [(i, _basetext(i)) for i in range(1, 6)])
     store.append(old, "doc_id", "text")
-    assert _quiesce() <= base  # append leaves no persist residue
+    assert _quiesce(spark) <= base  # append leaves no persist residue
     new = _mk_docs(
         spark, [(10, _basetext(1)), (11, _basetext(99))]
     )
@@ -928,4 +888,37 @@ def test_signature_store_releases_intermediate_caches(spark, tmp_path):
     }
     assert v == {10: False, 11: True}
     # only the returned verdict's localCheckpoint remains live
-    assert _quiesce() <= base + 1
+    assert _quiesce(spark) <= base + 1
+
+
+@pytest.mark.parametrize("kind", STORE_KINDS)
+def test_store_failed_commit_releases_caches(spark, tmp_path, kind):
+    """A dedup_and_append whose manifest commit fails must still release
+    the new batch's caches — a foreachBatch retry would otherwise leak
+    one more batch-sized cache per attempt. Only the verdict's checkpoint
+    may stay live, and the failed batch stays invisible."""
+    from pysparkline.index import BatchLedger
+
+    def persisted_ids():
+        # unpersist drops the id from this map synchronously, so the new
+        # ids are exact even while older RDDs are still being cleaned up
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    store = _new_store(spark, kind, str(tmp_path / "failcommit"))
+    old = _mk_docs(spark, [(i, _basetext(i)) for i in range(1, 4)])
+    store.append(old, "doc_id", "text")
+    committed = [dict(b) for b in store.manifest["batches"]]
+    before = persisted_ids()
+    new = _mk_docs(spark, [(10, _basetext(1)), (11, _basetext(99))])
+
+    orig = BatchLedger.write_manifest
+    BatchLedger.write_manifest = lambda self: (_ for _ in ()).throw(
+        OSError("disk gone")
+    )
+    try:
+        with pytest.raises(OSError):
+            store.dedup_and_append(new, "doc_id", "text", history_docs=old)
+    finally:
+        BatchLedger.write_manifest = orig
+    assert len(persisted_ids() - before) <= 1
+    assert store.manifest["batches"] == committed

@@ -363,5 +363,6 @@ def test_dsir_bucket_cap_guards_driver_collect(spark):
         sampling.dsir_weights(
             docs, target, n_buckets=sampling.DSIR_MAX_BUCKETS + 1
         )
-    # the cap itself is accepted (construction only — no job)
+    # the cap itself is accepted (this runs jobs: dsir_weights collects
+    # its bucket-count tables)
     sampling.dsir_weights(docs, target, n_buckets=10_000)

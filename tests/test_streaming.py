@@ -370,11 +370,19 @@ def test_curate_stream_matches_batch(spark, tmp_path):
         assert splits[r.doc_id] == r.split
 
 
-def test_streaming_incremental_dedup(spark, tmp_path):
-    """Micro-batches dedup against the persisted SignatureStore: a dup of a
-    batch-1 survivor arriving in batch 2 is dropped; replaying a committed
-    batch id is a no-op (exactly-once store semantics)."""
-    from pysparkline.operators.dedup import SignatureStore
+def _dedup_store(spark, kind: str, path: str):
+    from pysparkline.operators.dedup import SignatureStore, SubstringStore
+
+    if kind == "sig":
+        return SignatureStore.create(spark, path, threshold=0.5)
+    return SubstringStore.create(spark, path, min_tokens=8)
+
+
+@pytest.mark.parametrize("kind", ["sig", "substr"])
+def test_streaming_incremental_dedup(spark, tmp_path, kind):
+    """Micro-batches dedup against a persisted store: a dup of a batch-1
+    survivor arriving in batch 2 is dropped; replaying a committed batch
+    id is a no-op (exactly-once store semantics)."""
     from pysparkline.streaming import streaming_incremental_dedup
 
     def base(i: int) -> str:
@@ -382,9 +390,7 @@ def test_streaming_incremental_dedup(spark, tmp_path):
 
     src = tmp_path / "in"
     src.mkdir()
-    store = SignatureStore.create(
-        spark, str(tmp_path / "store"), threshold=0.5
-    )
+    store = _dedup_store(spark, kind, str(tmp_path / "store"))
     verdicts = str(tmp_path / "verdicts")
     ckpt = str(tmp_path / "ckpt")
 
@@ -437,20 +443,19 @@ def test_streaming_incremental_dedup(spark, tmp_path):
     assert got3[20] is False and got3[21] is True
 
 
-def test_stream_batch_crash_between_verdict_and_commit(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["sig", "substr"])
+def test_stream_batch_crash_between_verdict_and_commit(
+    spark, tmp_path, monkeypatch, kind
+):
     """The verdict parquet lands BEFORE the store's manifest commit: a crash
     between the two replays into 'verdict exists, batch not marked done' —
     the replay recomputes the identical verdict (the store is unchanged) and
     commits. The reverse order would lose the verdict forever, since a
     replay after the commit skips the batch (ADVICE r4)."""
-    from pysparkline.operators.dedup import SignatureStore
-
     def base(i: int) -> str:
         return " ".join(f"c{i}x{j}q{i * 31 + j}" for j in range(40))
 
-    store = SignatureStore.create(
-        spark, str(tmp_path / "store"), threshold=0.5
-    )
+    store = _dedup_store(spark, kind, str(tmp_path / "store"))
     verdicts = str(tmp_path / "verdicts")
     store.process_stream_batch(
         spark.createDataFrame(
@@ -460,20 +465,16 @@ def test_stream_batch_crash_between_verdict_and_commit(spark, tmp_path):
     )
 
     # simulate a crash AFTER the verdict write, BEFORE the manifest commit
-    real_write = SignatureStore._write_batch
-
     def crash_write(self, *a, **k):
         raise RuntimeError("simulated crash before manifest commit")
 
-    SignatureStore._write_batch = crash_write
     batch2 = spark.createDataFrame(
         [(10, base(1)), (11, base(77))], "doc_id long, text string"
     )
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(type(store), "_write_batch", crash_write)
         with pytest.raises(RuntimeError, match="simulated crash"):
             store.process_stream_batch(batch2, 1, "doc_id", "text", verdicts)
-    finally:
-        SignatureStore._write_batch = real_write
 
     # the recoverable state: verdict directory exists, batch NOT committed
     assert os.path.exists(os.path.join(verdicts, "batch=1"))
