@@ -3246,8 +3246,8 @@ FROM events GROUP BY event_type ORDER BY event_type
 def theta_users_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct users per event type, served from the cube's
     pre-built theta_user_id_k4096 partials (the thetaSketch column type of
-    the reference's type map, SURVEY §1.2). KMV sketches are EXACT while
-    group NDV < k (every distinct hash retained, theta = 1), so at test SFs
+    the reference's type map, SURVEY §1.2). Theta sketches are EXACT while
+    group NDV <= k (every distinct hash retained, theta = 1), so at test SFs
     (<= 1500 users) the estimate equals COUNT(DISTINCT) and the oracle is a
     full hash-match, not an error band."""
     from pyspark.sql import functions as F
@@ -3294,10 +3294,8 @@ def theta_retention_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     churned = |prev \\ cur|, new = |cur \\ prev|. The day-pair join is over
     ~30 aggregated rows (broadcast, trivial at any corpus scale — the heavy
     lifting happened in the mergeable cube partials). Set-op estimates are
-    exact while NDV < k, so every count hash-matches the DuckDB oracle."""
+    exact while NDV <= k, so every count hash-matches the DuckDB oracle."""
     from pyspark.sql import functions as F
-
-    from pysparkline.functions import theta as T
 
     k = 4096
     ctx = _events_ctx(spark, sf_dir)
@@ -3317,14 +3315,11 @@ def theta_retention_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur.join(prv, "day")
         .select(
             "day",
-            T.theta_intersect_estimate(F.col("prev_sk"), F.col("sk"), k)
-            .cast("bigint")
+            F.theta_sketch_estimate(F.theta_intersection("prev_sk", "sk"))
             .alias("returning_users"),
-            T.theta_diff_estimate(F.col("prev_sk"), F.col("sk"), k)
-            .cast("bigint")
+            F.theta_sketch_estimate(F.theta_difference("prev_sk", "sk"))
             .alias("churned_users"),
-            T.theta_diff_estimate(F.col("sk"), F.col("prev_sk"), k)
-            .cast("bigint")
+            F.theta_sketch_estimate(F.theta_difference("sk", "prev_sk"))
             .alias("new_users"),
         )
         .orderBy("day")
@@ -3358,8 +3353,6 @@ def theta_funnel_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches merge per day bucket. Exact at test NDVs => plain-SQL oracle."""
     from pyspark.sql import functions as F
 
-    from pysparkline.functions import theta as T
-
     k = 4096
     ctx = _events_ctx(spark, sf_dir)
     spec = ir.GroupByQuery(
@@ -3379,21 +3372,15 @@ def theta_funnel_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ],
         post_aggregations=[
-            ir.ArithmeticPostAgg(
-                "viewers", f"CAST({T.estimate_sql('sk_view', k)} AS BIGINT)"
-            ),
-            ir.ArithmeticPostAgg(
-                "buyers", f"CAST({T.estimate_sql('sk_buy', k)} AS BIGINT)"
-            ),
+            ir.ArithmeticPostAgg("viewers", "theta_sketch_estimate(sk_view)"),
+            ir.ArithmeticPostAgg("buyers", "theta_sketch_estimate(sk_buy)"),
             ir.ArithmeticPostAgg(
                 "both_vb",
-                f"CAST({T.intersect_estimate_sql('sk_view', 'sk_buy', k)}"
-                " AS BIGINT)",
+                "theta_sketch_estimate(theta_intersection(sk_view, sk_buy))",
             ),
             ir.ArithmeticPostAgg(
                 "view_only",
-                f"CAST({T.diff_estimate_sql('sk_view', 'sk_buy', k)}"
-                " AS BIGINT)",
+                "theta_sketch_estimate(theta_difference(sk_view, sk_buy))",
             ),
         ],
         output_order=["day", "viewers", "buyers", "both_vb", "view_only"],
@@ -3411,10 +3398,11 @@ FROM events GROUP BY event_type ORDER BY event_type
 """,
 )
 def theta_error_small_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KMV estimator branch (sketch full, theta < 1): k=512 over event_id
-    (NDV = row count >> k at sf >= 0.01), as an oracle-checkable invariant —
-    |est - exact| / exact <= 15% (~3.4 sigma at RSE 1/sqrt(k-2) = 4.4%;
-    measured max 6.7% across SFs; deterministic given the data). event_id has
+    """The theta estimation branch (sketch full, theta < 1): k=512 over
+    event_id (NDV = row count >> k at sf >= 0.01), as an oracle-checkable
+    invariant — |est - exact| / exact <= 15% (~3.4 sigma at DataSketches'
+    RSE 1/sqrt(k) = 4.4%; measured max 7.6% at sf0.01 and 8.1% at sf0.1;
+    deterministic given the data). event_id has
     no cube sketch, so the planner falls back to the flat backing — the
     fallback path of the theta eligibility check."""
     from pyspark.sql import functions as F

@@ -40,9 +40,10 @@ def events_index_config() -> IndexConfig:
         # mergeable histogram over the value column: quantile queries ride
         # the cube (HistQuantileAgg), bit-identical to row-grain evaluation
         hist_specs=[HistSpec("value", 0.0, 512.0, 64)],
-        # mergeable theta sketch over user_id: distinct users AND set-op
-        # cardinalities (retention = month-over-month intersection) ride the
-        # cube; exact while per-group NDV < k
+        # mergeable theta sketch (Spark's DataSketches theta, BinaryType)
+        # over user_id: distinct users AND set-op cardinalities (retention =
+        # day-over-day intersection) ride the cube; exact while per-group
+        # NDV <= k
         theta_specs=[ThetaSpec("user_id", k=4096)],
     )
 

@@ -43,6 +43,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import ir
 from .metadata import StarSchema
 
 MANIFEST = "manifest.json"
@@ -308,29 +309,66 @@ class HistSpec:
 
 @dataclass(frozen=True)
 class ThetaSpec:
-    """A mergeable KMV theta-sketch metric over a column — the thetaSketch
+    """A mergeable theta-sketch metric over a column — the thetaSketch
     column type of the reference's type mapping (DruidRelationInfo column
     links: ``sketchMetric``; Druid serves set-operation cardinalities from
-    these). Sketch = sorted array<long> of the k smallest distinct 63-bit
-    value hashes; partials merge EXACTLY (see functions/theta.py), so cube
-    and row-grain evaluation are bit-identical."""
+    these). The sketch is a BinaryType DataSketches theta sketch built by
+    Spark's ``theta_sketch_agg`` with ``lgNomEntries = log2(k)`` (k a power
+    of two in [16, 2^26]); partials merge through ``theta_union_agg``, so
+    every aggregation buffer is bounded by k and cube and row-grain
+    evaluation give the same estimate."""
 
     col: str
     k: int = 4096
+
+    def __post_init__(self):
+        ir.theta_lg_nom_entries(self.k)
 
     @property
     def col_name(self) -> str:
         return f"theta_{self.col}_k{self.k}"
 
-    def sketch_agg(self):
-        from .functions import theta as T
+    def sketch_agg(self, where=None):
+        """Aggregate: build the sketch from the raw column, skipping rows
+        where ``where`` is not true. Every non-NULL value reaches the
+        sketch as a non-empty long (xxhash64 of its string form): the
+        built-ins reject timestamp, decimal, boolean and date inputs and
+        skip ``''``, which COUNT(DISTINCT) counts. NULL stays NULL and is
+        not counted."""
+        c = F.col(self.col)
+        keep = c.isNotNull() if where is None else where & c.isNotNull()
+        return F.theta_sketch_agg(
+            F.when(keep, F.xxhash64(c.cast("string"))),
+            ir.theta_lg_nom_entries(self.k),
+        )
 
-        return T.theta_sketch_agg(F.col(self.col), self.k)
+    def merge_agg(self, where=None):
+        """Aggregate: union the partial sketches in ``col_name`` (cube rows,
+        streaming partials), skipping rows where ``where`` is not true."""
+        c = F.col(self.col_name)
+        return F.theta_union_agg(
+            c if where is None else F.when(where, c),
+            ir.theta_lg_nom_entries(self.k),
+        )
 
-    def merge_agg(self):
-        from .functions import theta as T
 
-        return T.theta_merge_agg(F.col(self.col_name), self.k)
+# sketch format recorded with each manifest thetaSpec; a spec without it was
+# written by the KMV (array<long>) implementation this format replaced
+THETA_FORMAT = "datasketches"
+
+
+class IndexFormatError(ValueError):
+    """The manifest was written in a format this code cannot read; the index
+    must be rebuilt."""
+
+
+def _theta_spec_from_dict(t: dict) -> ThetaSpec:
+    if t.get("format") != THETA_FORMAT:
+        raise IndexFormatError(
+            f"theta sketch theta_{t['col']}_k{t['k']} is in the retired KMV "
+            "array<long> format; rebuild the index (OlapIndex.build)"
+        )
+    return ThetaSpec(t["col"], t["k"])
 
 
 @dataclass(frozen=True)
@@ -541,9 +579,12 @@ class IndexConfig:
                 for h in self.hist_specs
             ]
         if self.theta_specs:
-            # guarded like histSpecs: theta-free manifests stay byte-identical
+            # guarded like histSpecs: theta-free manifests stay byte-identical.
+            # The sketch format participates in build-cache keys, so indexes
+            # holding the retired array<long> KMV sketches rebuild
             d["thetaSpecs"] = [
-                {"col": t.col, "k": t.k} for t in self.theta_specs
+                {"col": t.col, "k": t.k, "format": THETA_FORMAT}
+                for t in self.theta_specs
             ]
         if self.topk_specs:
             # guarded like histSpecs: topk-free manifests stay byte-identical
@@ -606,7 +647,7 @@ class IndexConfig:
                 for h in d.get("histSpecs", [])
             ],
             theta_specs=[
-                ThetaSpec(t["col"], t["k"]) for t in d.get("thetaSpecs", [])
+                _theta_spec_from_dict(t) for t in d.get("thetaSpecs", [])
             ],
             topk_specs=[
                 TopKSpec(t["dim"], t["metric"], t["m"])
@@ -1665,7 +1706,6 @@ class OlapIndex:
         metrics = config.cube_metrics(cube)
         hll_cols = config.cube_hll_cols(cube)
         hist_specs = config.cube_hist_specs(cube)
-        theta_specs = config.cube_theta_specs(cube)
         aggs = [F.count(F.lit(1)).alias(COUNT_COL)]
         for m in metrics:
             aggs.append(METRIC_BUILD_FNS[m.agg](F.expr(m.expr)).alias(m.col_name))
@@ -1673,51 +1713,11 @@ class OlapIndex:
             aggs.append(F.hll_sketch_agg(F.col(c).cast("string")).alias(f"hll_{c}"))
         for h in hist_specs:
             aggs.append(h.count_array().alias(h.col_name))
-        for t in theta_specs:
+        for t in config.cube_theta_specs(cube):
             aggs.append(t.sketch_agg().alias(t.col_name))
-        one_stage = flat.groupBy(*keys).agg(*aggs)
-        if not theta_specs:
-            return OlapIndex._join_topk_maps(flat, config, cube, one_stage)
-        # Theta build state is the one unbounded aggregation buffer in the
-        # codebase: collect_set holds EVERY distinct hash per group before the
-        # slice-to-k. Bound it by pre-aggregating per (keys, input partition)
-        # — partial state is then capped by partition-local NDV (itself capped
-        # by maxPartitionBytes), and the merge stage only ever sees <=k-element
-        # partials. Every other metric re-aggregates through its exact merge
-        # form (sum/min/max of partials; HLL union is the same buffer merge
-        # the single-stage partial aggregation performs; histogram bin counts
-        # sum element-wise), so the cube is value-identical — and for theta
-        # BIT-identical (KMV k-smallest-of-k-smallest property).
-        key_names = [BUCKET_COL, *cube.dims]
-        stage1 = flat.groupBy(
-            *keys, F.spark_partition_id().alias("__bpid")
-        ).agg(*aggs)
-        merges = [F.sum(F.col(COUNT_COL)).alias(COUNT_COL)]
-        for m in metrics:
-            merges.append(
-                METRIC_MERGE_FNS[m.agg](F.col(m.col_name)).alias(m.col_name)
-            )
-        for c in hll_cols:
-            merges.append(F.hll_union_agg(F.col(f"hll_{c}")).alias(f"hll_{c}"))
-        for h in hist_specs:
-            merges.append(
-                F.array(
-                    *[
-                        F.sum(F.element_at(F.col(h.col_name), i + 1))
-                        for i in range(h.nbins)
-                    ]
-                ).alias(h.col_name)
-            )
-        for t in theta_specs:
-            merges.append(t.merge_agg().alias(t.col_name))
-        merged = stage1.groupBy(*key_names).agg(*merges)
-        # the single-stage schema is the cube contract (second-stage sums
-        # widen decimals and go nullable): cast every column back
-        want = {f.name: f.dataType for f in one_stage.schema.fields}
-        merged = merged.select(
-            *[F.col(c).cast(want[c]).alias(c) for c in one_stage.columns]
+        return OlapIndex._join_topk_maps(
+            flat, config, cube, flat.groupBy(*keys).agg(*aggs)
         )
-        return OlapIndex._join_topk_maps(flat, config, cube, merged)
 
     @staticmethod
     def _join_topk_maps(
@@ -2351,11 +2351,21 @@ class OlapIndex:
         test). Falls back to ``.rdd`` when the files aren't stat-able
         (non-local cache roots)."""
         conf = self.spark.conf
+
+        def hidden(name: str) -> bool:
+            # Spark's file listing skips these (shouldFilterOutPathName):
+            # `_temporary/` and dot-file leftovers are never scanned, while
+            # `__tpart=...` partition directories (they hold an `=`) are
+            return name.startswith(".") or (
+                name.startswith("_") and "=" not in name
+            )
+
         try:
             sizes = []
-            for root, _dirs, files in os.walk(os.path.join(self.path, rel_path)):
+            for root, dirs, files in os.walk(os.path.join(self.path, rel_path)):
+                dirs[:] = [d for d in dirs if not hidden(d)]
                 for f in files:
-                    if f.endswith(".parquet"):
+                    if f.endswith(".parquet") and not hidden(f):
                         sizes.append(os.path.getsize(os.path.join(root, f)))
             if not sizes:
                 return base.rdd.getNumPartitions()

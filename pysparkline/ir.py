@@ -422,33 +422,55 @@ class HyperUniqueAgg(AggSpec):
     field_name: str = ""
 
 
+class ThetaKError(ValueError):
+    """A theta sketch size k that Spark's theta built-ins cannot take."""
+
+
+def theta_lg_nom_entries(k: int) -> int:
+    """``lgNomEntries = log2(k)`` for Spark's ``theta_sketch_agg`` /
+    ``theta_union_agg``. k must be a power of two in [16, 2^26] (the
+    built-ins' lgNomEntries range 4-26); any other k raises, never rounds."""
+    if not isinstance(k, int) or not 16 <= k <= 1 << 26 or k & (k - 1):
+        raise ThetaKError(
+            f"theta k must be a power of two in [16, 2^26], got {k!r}"
+        )
+    return k.bit_length() - 1
+
+
 @_node
 @dataclass
 class ThetaAgg(AggSpec):
-    """Distinct-count estimate from a KMV theta sketch — the thetaSketch
-    column type of the reference's type map (DruidDataType thetaSketch ->
-    BinaryType; columnInfos ``sketchMetric`` link). Row-grain backings build
-    the sketch on the fly, cube backings merge pre-built ``theta_<col>_k<k>``
-    partials — the merge is exact, so both paths produce the bit-identical
-    estimate. Exact (= COUNT DISTINCT) while group NDV < k."""
+    """Distinct-count estimate (DOUBLE) from a theta sketch — the
+    thetaSketch column type of the reference's type map (DruidDataType
+    thetaSketch -> BinaryType; columnInfos ``sketchMetric`` link). Lowered to
+    Spark's DataSketches theta built-ins with ``lgNomEntries = log2(k)``:
+    row-grain backings build the sketch on the fly, cube backings union
+    pre-built ``theta_<col>_k<k>`` partials, and both give the same
+    estimate. Exact (= COUNT DISTINCT) while group NDV <= k."""
 
     name: str = ""
     field_name: str = ""
     k: int = 4096
+
+    def __post_init__(self):
+        theta_lg_nom_entries(self.k)
 
 
 @_node
 @dataclass
 class ThetaSketchAgg(AggSpec):
-    """Emit the merged theta sketch itself (sorted array<long>) so set
-    operations — intersect / difference / union cardinality, Druid's
-    thetaSketchSetOp post-aggregations — can run above the aggregation
-    (functions/theta.py theta_intersect_estimate & co.). This is the
-    operation family HLL sketches cannot serve."""
+    """Emit the merged theta sketch itself (a BinaryType DataSketches
+    sketch) so set operations — intersect / difference / union cardinality,
+    Druid's thetaSketchSetOp post-aggregations — can run above the
+    aggregation (``theta_sketch_estimate(theta_intersection(a, b))`` and
+    co.). This is the operation family HLL sketches cannot serve."""
 
     name: str = ""
     field_name: str = ""
     k: int = 4096
+
+    def __post_init__(self):
+        theta_lg_nom_entries(self.k)
 
 
 @_node

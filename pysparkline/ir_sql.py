@@ -134,7 +134,7 @@ def agg_to_sql(a: ir.AggSpec, dialect: str = "duckdb") -> str:
         return f"COUNT(DISTINCT {a.field_name}) AS {a.name}"
     if isinstance(a, ir.ThetaAgg):
         # portable ONLY in the sketch's exact regime (per-group NDV < k):
-        # there the KMV estimate IS the distinct count (double-typed). The
+        # there the theta estimate IS the distinct count (double-typed). The
         # fuzzer draws k far above any test-table NDV; real approximate use
         # has no portable SQL and goes through invariant queries instead.
         if a.k < 1 << 17:

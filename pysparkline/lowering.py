@@ -29,7 +29,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import Column, DataFrame, functions as F
 
 from . import ir
-from .index import BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex
+from .index import BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex, ThetaSpec
 
 # granularities coarser-or-equal relationships, coarsest first
 _GRAN_ORDER = [
@@ -463,6 +463,24 @@ def _hist_quantile_expr(hist: Column, a: "ir.HistQuantileAgg") -> Column:
     return F.when(total > 0, walk)
 
 
+def _theta_out(a: ir.AggSpec, sk: Column) -> Column:
+    """ThetaSketchAgg emits the sketch itself, ThetaAgg its DOUBLE estimate."""
+    if isinstance(a, ir.ThetaSketchAgg):
+        return sk
+    return F.theta_sketch_estimate(sk).cast("double")
+
+
+def _cube_theta_spec(
+    idx: OlapIndex, a: ir.AggSpec, cube_cols: set
+) -> ThetaSpec:
+    """The cube's pre-built sketch for ``a`` — only one built with the SAME
+    (col, k) serves the query (another k retains a different sample)."""
+    ts = ThetaSpec(a.field_name, a.k)
+    if ts not in idx.config.theta_specs or ts.col_name not in cube_cols:
+        raise AggLoweringError(f"no theta sketch {ts.col_name} in cube")
+    return ts
+
+
 def _raw_agg(a: ir.AggSpec) -> Column:
     fns = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
     if isinstance(a, ir.CountAgg):
@@ -482,15 +500,9 @@ def _raw_agg(a: ir.AggSpec) -> Column:
             return fns[inner.fn](F.when(cond, F.expr(inner.expr))).alias(a.name)
         if isinstance(inner, (ir.ThetaAgg, ir.ThetaSketchAgg)):
             # filtered theta (Druid filtered aggregator over a thetaSketch —
-            # the funnel shape): non-matching rows hash to NULL and drop out
-            from .functions import theta as T
-
-            sk = T.theta_sketch_agg(
-                F.when(cond, F.col(inner.field_name)), inner.k
-            )
-            if isinstance(inner, ir.ThetaSketchAgg):
-                return sk.alias(a.name)
-            return T.theta_estimate(sk, inner.k).alias(a.name)
+            # the funnel shape): non-matching rows drop out of the sketch
+            sk = ThetaSpec(inner.field_name, inner.k).sketch_agg(cond)
+            return _theta_out(inner, sk).alias(a.name)
         raise AggLoweringError(f"unsupported filtered inner agg {inner!r}")
     if isinstance(a, ir.CardinalityAgg):
         return F.approx_count_distinct(_multi_col_key(a.field_names)).alias(a.name)
@@ -514,16 +526,9 @@ def _raw_agg(a: ir.AggSpec) -> Column:
         return F.hll_sketch_estimate(
             F.hll_sketch_agg(F.col(a.field_name).cast("string"))
         ).alias(a.name)
-    if isinstance(a, ir.ThetaAgg):
-        from .functions import theta as T
-
-        return T.theta_estimate(
-            T.theta_sketch_agg(F.col(a.field_name), a.k), a.k
-        ).alias(a.name)
-    if isinstance(a, ir.ThetaSketchAgg):
-        from .functions import theta as T
-
-        return T.theta_sketch_agg(F.col(a.field_name), a.k).alias(a.name)
+    if isinstance(a, (ir.ThetaAgg, ir.ThetaSketchAgg)):
+        sk = ThetaSpec(a.field_name, a.k).sketch_agg()
+        return _theta_out(a, sk).alias(a.name)
     if isinstance(a, ir.AvgAgg):
         raise AggLoweringError("AvgAgg must be pre-decomposed (see lower_groupby)")
     raise AggLoweringError(f"unknown agg spec {a!r}")
@@ -572,28 +577,10 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
             merge = F.sum if inner.fn == "count" else fns[inner.fn]
             return merge(F.when(cond, F.col(m.col_name))).alias(a.name)
         if isinstance(inner, (ir.ThetaAgg, ir.ThetaSketchAgg)):
-            # merge only matching partials (collect_list skips the NULLed-out
-            # non-matching rows) — condition already grain-checked above
-            from .functions import theta as T
-
-            ts = next(
-                (
-                    t
-                    for t in idx.config.theta_specs
-                    if t.col == inner.field_name and t.k == inner.k
-                ),
-                None,
-            )
-            if ts is None or ts.col_name not in cube_cols:
-                raise AggLoweringError(
-                    f"no theta sketch theta_{inner.field_name}_k{inner.k} in cube"
-                )
-            sk = T.theta_merge_agg(
-                F.when(cond, F.col(ts.col_name)), inner.k
-            )
-            if isinstance(inner, ir.ThetaSketchAgg):
-                return sk.alias(a.name)
-            return T.theta_estimate(sk, inner.k).alias(a.name)
+            # union only matching partials — condition already grain-checked
+            # above
+            sk = _cube_theta_spec(idx, inner, cube_cols).merge_agg(cond)
+            return _theta_out(inner, sk).alias(a.name)
         raise AggLoweringError(f"unsupported filtered inner agg {inner!r}")
     if isinstance(a, ir.CardinalityAgg):
         if set(a.field_names) <= cube_cols:
@@ -649,26 +636,8 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
             raise AggLoweringError(f"no HLL sketch {sk} in cube")
         return F.hll_sketch_estimate(F.hll_union_agg(F.col(sk))).alias(a.name)
     if isinstance(a, (ir.ThetaAgg, ir.ThetaSketchAgg)):
-        # theta partials merge exactly — but only a sketch pre-built with the
-        # SAME (col, k) serves the query (smaller k = different retained set)
-        from .functions import theta as T
-
-        ts = next(
-            (
-                t
-                for t in idx.config.theta_specs
-                if t.col == a.field_name and t.k == a.k
-            ),
-            None,
-        )
-        if ts is None or ts.col_name not in cube_cols:
-            raise AggLoweringError(
-                f"no theta sketch theta_{a.field_name}_k{a.k} in cube"
-            )
-        merged = T.theta_merge_agg(F.col(ts.col_name), a.k)
-        if isinstance(a, ir.ThetaSketchAgg):
-            return merged.alias(a.name)
-        return T.theta_estimate(merged, a.k).alias(a.name)
+        sk = _cube_theta_spec(idx, a, cube_cols).merge_agg()
+        return _theta_out(a, sk).alias(a.name)
     if isinstance(a, ir.AvgAgg):
         raise AggLoweringError("AvgAgg must be pre-decomposed (see lower_groupby)")
     raise AggLoweringError(f"unknown agg spec {a!r}")
@@ -813,138 +782,6 @@ def _two_stage_distinct(
     )
 
 
-def _theta_build_parts(a: ir.AggSpec) -> tuple[Column, int, bool] | None:
-    """(hash source column, k, wrap-in-estimate) for a raw theta build agg —
-    ThetaAgg / ThetaSketchAgg / FilteredAgg over either — else None."""
-    if isinstance(a, (ir.ThetaAgg, ir.ThetaSketchAgg)):
-        return F.col(a.field_name), a.k, isinstance(a, ir.ThetaAgg)
-    if isinstance(a, ir.FilteredAgg) and isinstance(
-        a.agg, (ir.ThetaAgg, ir.ThetaSketchAgg)
-    ):
-        inner = a.agg
-        return (
-            F.when(filter_to_column(a.filter), F.col(inner.field_name)),
-            inner.k,
-            isinstance(inner, ir.ThetaAgg),
-        )
-    return None
-
-
-def _pid_merge_agg(a: ir.AggSpec) -> Column | None:
-    """Stage-2 merge column for ``a``'s per-input-partition partial, or None.
-
-    Unlike ``_distinct_merge_agg`` (whose stage 1 buckets the VALUE space, so
-    per-bucket distinct counts sum exactly), partition-id partials see
-    overlapping value sets across partitions — DistinctAgg/CardinalityAgg do
-    NOT merge here and must aggregate separately."""
-    name = a.name
-    if isinstance(a, ir.CountAgg):
-        return F.coalesce(F.sum(F.col(name)), F.lit(0)).alias(name)
-    fn = None
-    if isinstance(a, (ir.FieldAgg, ir.ExprAgg)):
-        fn = a.fn
-    elif isinstance(a, ir.FilteredAgg):
-        inner = a.agg
-        fn = "count" if isinstance(inner, ir.CountAgg) else getattr(inner, "fn", None)
-    if fn == "count":
-        return F.coalesce(F.sum(F.col(name)), F.lit(0)).alias(name)
-    if fn in ("sum", "min", "max"):
-        return {"sum": F.sum, "min": F.min, "max": F.max}[fn](F.col(name)).alias(name)
-    return None
-
-
-def _bounded_theta_groupby(
-    df: DataFrame,
-    key_cols: list[Column],
-    out_names: list[str],
-    aggs: list[ir.AggSpec],
-) -> DataFrame | None:
-    """Raw-backing groupBy with theta build aggs, with BOUNDED partial state.
-
-    The naive lowering's ``collect_set`` holds every distinct hash per group
-    before slicing to k — an executor OOM over a high-NDV column. Instead:
-    stage 1 builds sketches per (keys, spark_partition_id()), capping each
-    aggregation buffer at partition-local NDV; stage 2 merges the <=k-element
-    partials (exact: the k smallest of a union are among each part's k
-    smallest). Non-theta aggs whose partials merge exactly (count/sum/min/
-    max) ride the same two stages; anything else (exact distinct, percentile)
-    aggregates in a separate single-stage plan joined back null-safely on the
-    group keys — both sides are post-aggregation group-count-sized.
-
-    Returns None when ``aggs`` contains no theta build, so the caller keeps
-    the one-stage plan. Grouping-sets unions and TopN keep the one-stage
-    build (documented scope: theta-over-grouping-sets is not a cube-servable
-    shape the reference exposed either)."""
-    from .functions import theta as T
-
-    theta = [(a, _theta_build_parts(a)) for a in aggs]
-    if not any(p is not None for _, p in theta):
-        return None
-    stage1_cols: list[Column] = []
-    merge_cols: list[Column] = []
-    rest: list[ir.AggSpec] = []
-    rest_cols: list[Column] = []
-    for a, parts in theta:
-        if parts is not None:
-            src, k, wrap = parts
-            stage1_cols.append(T.theta_sketch_agg(src, k).alias(a.name))
-            m = T.theta_merge_agg(F.col(a.name), k)
-            merge_cols.append(
-                (T.theta_estimate(m, k) if wrap else m).alias(a.name)
-            )
-            continue
-        m = _pid_merge_agg(a)
-        if m is not None:
-            stage1_cols.append(_raw_agg(a))
-            merge_cols.append(m)
-        else:
-            rest.append(a)
-            rest_cols.append(_raw_agg(a))
-    pid = F.spark_partition_id().alias("__tpid")
-    stage1 = df.groupBy(*key_cols, pid).agg(*stage1_cols)
-    out = (
-        stage1.groupBy(*out_names).agg(*merge_cols)
-        if out_names
-        else stage1.agg(*merge_cols)
-    )
-    # cast pid-merged partials back to the one-stage schema (sum-of-sum
-    # widens decimals; counts go nullable); theta outputs already have their
-    # one-stage types (estimate -> double, sketch -> array<long>)
-    cast_names = {
-        a.name for a, p in theta if p is None and _pid_merge_agg(a) is not None
-    }
-    if cast_names:
-        ref = (
-            df.groupBy(*key_cols).agg(*stage1_cols)
-            if key_cols
-            else df.agg(*stage1_cols)
-        )
-        want = {
-            f.name: f.dataType for f in ref.schema.fields if f.name in cast_names
-        }
-        out = out.select(
-            *[
-                F.col(c).cast(want[c]).alias(c) if c in want else F.col(c)
-                for c in out.columns
-            ]
-        )
-    if rest:
-        other = (
-            df.groupBy(*key_cols).agg(*rest_cols)
-            if key_cols
-            else df.agg(*rest_cols)
-        )
-        if out_names:
-            cond = None
-            for n in out_names:
-                c = out[n].eqNullSafe(other[n])
-                cond = c if cond is None else cond & c
-            out = out.join(other, cond).drop(*[other[n] for n in out_names])
-        else:
-            out = out.crossJoin(other)
-    return out
-
-
 def lower_groupby(q: ir.GroupByQuery, backing: Backing) -> DataFrame:
     df = _apply_filters(backing.df, backing, q)
 
@@ -973,8 +810,6 @@ def lower_groupby(q: ir.GroupByQuery, backing: Backing) -> DataFrame:
             out = _two_stage_distinct(
                 df, key_cols, out_names, aggs, agg_cols, backing.distinct_buckets
             )
-        if out is None and not backing.preagg:
-            out = _bounded_theta_groupby(df, key_cols, out_names, aggs)
         if out is None:
             out = df.groupBy(*key_cols).agg(*agg_cols) if key_cols else df.agg(*agg_cols)
 

@@ -610,17 +610,18 @@ def _agg_spec(node: dict, name: str) -> ir.AggSpec:
             )
         raise SQLFrontError(f"avg arity {len(ch)}")
     if fn == "theta_count_distinct":
-        # engine extension: distinct-count from a theta (KMV) sketch —
+        # engine extension: distinct-count from a theta sketch —
         # theta_count_distinct(col [, k]); rides a pre-built cube sketch when
-        # (col, k) matches, else row-grain (exact while NDV < k either way)
+        # (col, k) matches, else row-grain (exact while NDV <= k either way)
         if ch and ch[0].get("class") == "COLUMN_REF":
             col = ch[0]["column_names"][-1]
             if len(ch) == 1:
                 return ir.ThetaAgg(name, col)
             if len(ch) == 2:
-                k = _const_value(ch[1])
-                if isinstance(k, (int, Decimal)) and int(k) > 1:
-                    return ir.ThetaAgg(name, col, k=int(k))
+                try:
+                    return ir.ThetaAgg(name, col, k=_const_value(ch[1]))
+                except ir.ThetaKError as e:
+                    raise SQLFrontError(str(e)) from None
         raise SQLFrontError("theta_count_distinct shape unsupported")
     if fn in ("quantile_cont", "median"):
         # function-style percentile: quantile_cont(col, f) / median(col);

@@ -307,8 +307,8 @@ class StreamingIngest:
                 ).alias(h.col_name)
             )
         for t in cfg.cube_theta_specs(cube):
-            # theta partials merge exactly (k smallest of the union of the
-            # parts' k-smallest sets — same merge the query path runs)
+            # theta partials merge by theta_union_agg, the same merge the
+            # query path runs
             aggs.append(t.merge_agg().alias(t.col_name))
         merged = df.groupBy(*keys).agg(*aggs)
         topks = cfg.cube_topk_specs(cube)

@@ -454,3 +454,27 @@ def test_scan_partitions_estimate_matches_spark(ctx):
         est = idx._scan_partitions(idx.manifest["cubes"][name]["path"], base)
         actual = base.rdd.getNumPartitions()
         assert est == actual, (name, est, actual)
+
+
+def test_scan_partitions_skips_hidden_leftovers(ctx, tmp_path):
+    """Leftovers Spark's file listing ignores — a `_temporary/` attempt
+    directory and a dot-file — must not count toward the estimate, while
+    `__tpart=` partition directories (the flat's layout) still do."""
+    import shutil
+
+    idx = ctx.index
+    copy = OlapIndex(ctx.spark, str(tmp_path), idx.manifest)
+    for rel in (idx.manifest["cubes"]["flags"]["path"], "flat"):
+        dst = os.path.join(str(tmp_path), rel)
+        shutil.copytree(os.path.join(idx.path, rel), dst)
+        files = glob.glob(os.path.join(dst, "**", "*.parquet"), recursive=True)
+        part = sorted(files)[0]
+        os.makedirs(os.path.join(dst, "_temporary", "0"))
+        shutil.copy(part, os.path.join(dst, "_temporary", "0", "part-x.parquet"))
+        shutil.copy(part, os.path.join(os.path.dirname(part), ".x.parquet"))
+        base = ctx.spark.read.parquet(dst)
+        assert base.count() == idx.spark.read.parquet(
+            os.path.join(idx.path, rel)
+        ).count()
+        est = copy._scan_partitions(rel, base)
+        assert est == base.rdd.getNumPartitions(), (rel, est)

@@ -407,6 +407,44 @@ def test_sql_theta_count_distinct(ctx, duck):
     assert got == want
 
 
+@pytest.mark.parametrize("k", [8, 100, 1 << 27, 64.5, "64"])
+def test_sql_theta_bad_k_rejected(ctx, k):
+    """k must be a power of two in [16, 2^26] (Spark's lgNomEntries range
+    4-26); any other k is rejected by the IR and by the SQL front, never
+    rounded to a neighbouring size."""
+    from pyspark.errors import AnalysisException
+
+    from pysparkline import ir
+    from pysparkline.index import ThetaSpec
+    from pysparkline.sqlfront import SQLFrontError
+
+    msg = r"power of two in \[16, 2\^26\]"
+    for build in (
+        lambda: ir.ThetaAgg("d", "o_orderstatus", k=k),
+        lambda: ir.ThetaSketchAgg("d", "o_orderstatus", k=k),
+        lambda: ThetaSpec("o_orderstatus", k),
+        lambda: ir.node_from_dict(
+            {"_type": "ThetaAgg", "name": "d", "field_name": "x", "k": k}
+        ),
+    ):
+        with pytest.raises(ir.ThetaKError, match=msg):
+            build()
+    lit = f"'{k}'" if isinstance(k, str) else str(k)
+    sql = (
+        f"SELECT l_returnflag, theta_count_distinct(o_orderstatus, {lit}) AS d"
+        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+        " GROUP BY l_returnflag"
+    )
+    with pytest.raises(SQLFrontError, match=msg):
+        ctx._parse_sql(sql)
+    # no answer at all: the rewrite declines and spark.sql knows no such
+    # function
+    with pytest.raises((SQLFrontError, AnalysisException)):
+        ctx.sql(sql).collect()
+    assert ir.ThetaAgg("d", "o_orderstatus", k=16).k == 16
+    assert ir.ThetaAgg("d", "o_orderstatus", k=1 << 26).k == 1 << 26
+
+
 def test_sql_theta_filtered(ctx, duck):
     """theta_count_distinct with FILTER — the SQL funnel shape."""
     sql = (

@@ -1,19 +1,25 @@
-"""Theta (KMV) sketches: exact-while-not-full semantics, bit-identical
-cube/flat evaluation, exact partial merge through append+compaction, set
-operations vs ground truth, and the full-sketch estimator error bound.
+"""Theta sketches (Spark's DataSketches theta built-ins behind ThetaSpec /
+ThetaAgg / ThetaSketchAgg): exact-at-or-below-k semantics, every column type
+and '' counted as COUNT(DISTINCT) counts them, cube estimates equal to
+row-grain estimates, partial merges equal to direct builds through
+append+compaction, set operations vs ground truth, and the estimation-mode
+error bound.
 
-Reference surface: thetaSketch column type (DruidRelationInfo type map) and
-Druid's thetaSketchSetOp post-aggregations, rebuilt Spark-native in
-pysparkline/functions/theta.py.
+Reference surface: thetaSketch column type (DruidRelationInfo type map,
+thetaSketch -> BinaryType) and Druid's thetaSketchSetOp post-aggregations.
 """
 
 from __future__ import annotations
+
+import datetime
+import decimal
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from pysparkline import ir, lowering
-from pysparkline.functions import theta as T
+from pysparkline.index import ThetaSpec
 from pysparkline.lowering import Backing
 from tests.conftest import SF_DIR
 
@@ -36,27 +42,90 @@ def _spec(k=4096, field="user_id"):
 # ------------------------------------------------------------------ unit level
 
 
+def _estimate(df, col: str, k: int) -> int:
+    return df.agg(
+        F.theta_sketch_estimate(ThetaSpec(col, k).sketch_agg()).alias("e")
+    ).collect()[0].e
+
+
+def _raw_theta(df, field: str, k: int = 4096, dims=()) -> dict:
+    """ThetaAgg lowered on a row-grain backing over ``df``: {dims: est}."""
+    spec = ir.GroupByQuery(
+        dimensions=[ir.DefaultDim(d) for d in dims],
+        aggregations=[ir.ThetaAgg("du", field, k=k)],
+    )
+    base = Backing.base(df.withColumn("__ts", F.current_timestamp()), "__ts")
+    return {
+        tuple(r[d] for d in dims): r.du
+        for r in lowering.lower(spec, base).collect()
+    }
+
+
 def test_exact_below_k_and_null_excluded(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "a"), (4, None), (5, "c")], ["id", "v"]
     )
-    row = df.agg(
-        T.theta_estimate(T.theta_sketch_agg(F.col("v"), 16), 16).alias("e")
-    ).collect()[0]
-    assert row.e == 3.0  # exact, NULL not counted (approx_count_distinct parity)
+    # exact, NULL not counted (approx_count_distinct parity)
+    assert _estimate(df, "v", 16) == 3
 
 
-def test_merge_equals_rebuild(spark):
-    """k smallest of the union == merge of per-part k-smallest — the property
-    that makes cube partials exact. Asserted on the raw arrays (bit level)."""
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 10).alias("g"), (F.col("id") % 997).alias("v")
+def test_empty_string_counts_null_does_not(spark):
+    """'' is a value COUNT(DISTINCT) counts; Spark's theta_sketch_agg skips
+    it when fed raw strings. The input encoding must count it, and NULL must
+    stay uncounted."""
+    df = spark.createDataFrame(
+        [("",), ("a",), (None,), ("b",), ("a",)], "v string"
     )
+    want = df.agg(F.countDistinct("v")).collect()[0][0]
+    assert want == 3
+    assert _raw_theta(df, "v") == {(): 3.0}
+    assert _estimate(df, "v", 16) == want
+
+
+@pytest.mark.parametrize(
+    "dtype,values",
+    [
+        (
+            "timestamp",
+            [datetime.datetime(2024, 1, d, h) for d in (1, 2) for h in (0, 5)],
+        ),
+        ("decimal(18,6)", [decimal.Decimal(x) / 8 for x in range(-3, 9)]),
+        ("boolean", [True, False]),
+        ("date", [datetime.date(2024, 1, d) for d in range(1, 6)]),
+    ],
+)
+def test_theta_over_rejected_input_types(spark, dtype, values):
+    """Spark's theta built-ins reject timestamp, decimal, boolean and date
+    inputs; through ThetaAgg they count like COUNT(DISTINCT)."""
+    rows = [(i % 3, v) for i, v in enumerate(values * 2)] + [(0, None)]
+    df = spark.createDataFrame(rows, f"g int, c {dtype}")
+    want = {
+        (r.g,): float(r.n)
+        for r in df.groupBy("g").agg(F.countDistinct("c").alias("n")).collect()
+    }
+    assert _raw_theta(df, "c", dims=("g",)) == want
+
+
+@pytest.mark.parametrize("n", [50, 64, 5000])
+@pytest.mark.parametrize("ways", [7, 64])
+def test_merge_equals_rebuild(spark, n, ways):
+    """Unioned partials give the direct build's estimate — below k, at k
+    and past it (estimation mode) — the property that makes cube partials
+    and streamed appends serve the same answer as a rebuild."""
     k = 64
-    parts = df.groupBy("g").agg(T.theta_sketch_agg(F.col("v"), k).alias("sk"))
-    merged = parts.agg(T.theta_merge_agg(F.col("sk"), k).alias("sk")).collect()[0].sk
-    direct = df.agg(T.theta_sketch_agg(F.col("v"), k).alias("sk")).collect()[0].sk
-    assert merged == direct and len(merged) == k
+    ts = ThetaSpec("v", k)
+    df = spark.range(0, n, 1, 8).select(
+        F.col("id").alias("v"), (F.col("id") % ways).alias("g")
+    )
+    parts = df.groupBy("g").agg(ts.sketch_agg().alias(ts.col_name))
+    assert parts.count() == min(n, ways)
+    merged = parts.agg(
+        F.theta_sketch_estimate(ts.merge_agg()).alias("e")
+    ).collect()[0].e
+    direct = _estimate(df, "v", k)
+    assert merged == direct
+    if n <= k:
+        assert direct == n
 
 
 def test_set_ops_exact_vs_ground_truth(spark):
@@ -65,13 +134,13 @@ def test_set_ops_exact_vs_ground_truth(spark):
     rows = [(x, "a") for x in a_vals] + [(x, "b") for x in b_vals]
     df = spark.createDataFrame(rows, ["v", "side"])
     k = 4096  # not full: every set op is exact
-    sk = df.groupBy("side").agg(T.theta_sketch_agg(F.col("v"), k).alias("sk"))
+    sk = df.groupBy("side").agg(ThetaSpec("v", k).sketch_agg().alias("sk"))
     a = sk.where("side = 'a'").select(F.col("sk").alias("a"))
     b = sk.where("side = 'b'").select(F.col("sk").alias("b"))
     row = a.crossJoin(b).select(
-        T.theta_intersect_estimate(F.col("a"), F.col("b"), k).alias("i"),
-        T.theta_diff_estimate(F.col("a"), F.col("b"), k).alias("d"),
-        T.theta_union_estimate(F.col("a"), F.col("b"), k).alias("u"),
+        F.theta_sketch_estimate(F.theta_intersection("a", "b")).alias("i"),
+        F.theta_sketch_estimate(F.theta_difference("a", "b")).alias("d"),
+        F.theta_sketch_estimate(F.theta_union("a", "b", 12)).alias("u"),
     ).collect()[0]
     assert row.i == len(a_vals & b_vals)
     assert row.d == len(a_vals - b_vals)
@@ -79,35 +148,34 @@ def test_set_ops_exact_vs_ground_truth(spark):
 
 
 def test_full_sketch_estimator_error_bound(spark):
-    """Estimator branch (theta < 1): k=256 over 50k distincts lands within
-    5x the theoretical RSE (1/sqrt(k-2) ~ 6.3%) — deterministic given data."""
-    df = spark.range(0, 50_000)
+    """Estimation mode (theta < 1): k=256 over 50k distincts lands within
+    3x DataSketches' RSE (1/sqrt(k) ~ 6.25%) — deterministic given data."""
     k = 256
-    est = df.agg(
-        T.theta_estimate(T.theta_sketch_agg(F.col("id"), k), k).alias("e")
-    ).collect()[0].e
-    assert abs(est - 50_000) / 50_000 < 0.32
+    est = _estimate(spark.range(0, 50_000).withColumnRenamed("id", "v"), "v", k)
+    assert abs(est - 50_000) / 50_000 < 3 / math.sqrt(k)
 
 
 def test_clipped_intersection_estimator(spark):
-    """Set ops on FULL sketches: clip to min-theta, scale — the estimate must
-    land near the true overlap, and stay consistent when one side is much
-    smaller (the small side's theta dominates)."""
+    """Set ops on FULL sketches: intersection, difference and union
+    estimates land within 3x DataSketches' RSE (1/sqrt(k)) of the truth."""
     n, overlap = 20_000, 5_000
     a = spark.range(0, n).select(F.col("id").alias("v"), F.lit("a").alias("s"))
     b = spark.range(n - overlap, 2 * n - overlap).select(
         F.col("id").alias("v"), F.lit("b").alias("s")
     )
     k = 512
-    sk = a.union(b).groupBy("s").agg(T.theta_sketch_agg(F.col("v"), k).alias("sk"))
+    sk = a.union(b).groupBy("s").agg(ThetaSpec("v", k).sketch_agg().alias("sk"))
     aa = sk.where("s = 'a'").select(F.col("sk").alias("a"))
     bb = sk.where("s = 'b'").select(F.col("sk").alias("b"))
-    est = aa.crossJoin(bb).select(
-        T.theta_intersect_estimate(F.col("a"), F.col("b"), k).alias("i")
-    ).collect()[0].i
-    # RSE of clipped intersection ~ sqrt(U/I)/sqrt(k) (union/intersection
-    # ratio amplifies); allow a generous deterministic band
-    assert abs(est - overlap) / overlap < 0.35
+    row = aa.crossJoin(bb).select(
+        F.theta_sketch_estimate(F.theta_intersection("a", "b")).alias("i"),
+        F.theta_sketch_estimate(F.theta_difference("a", "b")).alias("d"),
+        F.theta_sketch_estimate(F.theta_union("a", "b", 9)).alias("u"),
+    ).collect()[0]
+    bound = 3 / math.sqrt(k)
+    assert abs(row.i - overlap) / overlap < bound
+    assert abs(row.d - (n - overlap)) / (n - overlap) < bound
+    assert abs(row.u - (2 * n - overlap)) / (2 * n - overlap) < bound
 
 
 # ------------------------------------------------------------ engine level
@@ -183,7 +251,6 @@ def test_theta_survives_append_and_compaction(spark, tmp_path):
 def test_filtered_sketch_cube_equals_base(ectx, spark):
     """FilteredAgg(ThetaSketchAgg) — the funnel shape: filtered partial
     merge over the cube must equal a from-raw filtered build."""
-    from pysparkline.functions import theta as T
     from pysparkline.tpch import read_events
     from tests.conftest import SF_DIR as _SF
 
@@ -200,9 +267,7 @@ def test_filtered_sketch_cube_equals_base(ectx, spark):
             ),
         ],
         post_aggregations=[
-            ir.ArithmeticPostAgg(
-                "viewers", f"CAST({T.estimate_sql('sk', k)} AS BIGINT)"
-            )
+            ir.ArithmeticPostAgg("viewers", "theta_sketch_estimate(sk)")
         ],
         output_order=["day", "viewers"],
     )
@@ -233,39 +298,40 @@ def test_retention_join_is_broadcast(ectx):
     cur = days.select(F.col("day").cast("date").alias("day"), "sk")
     prv = cur.select(F.date_add("day", 1).alias("day"), F.col("sk").alias("p"))
     joined = cur.join(prv, "day").select(
-        "day", T.theta_intersect_estimate(F.col("p"), F.col("sk"), k).alias("r")
+        "day",
+        F.theta_sketch_estimate(F.theta_intersection("p", "sk")).alias("r"),
     )
     joined.collect()
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_bounded_raw_build_engages_and_matches(ectx, spark):
-    """From-raw theta builds go through the bounded two-stage plan (stage 1
-    keyed by spark_partition_id caps the collect_set buffer at
-    partition-local NDV) and stay bit-identical to the one-stage answer."""
+def test_raw_build_matches_direct(ectx, spark):
+    """From-raw theta builds on a row-grain backing equal a direct
+    theta_sketch_agg groupBy over the raw events."""
     from pysparkline.tpch import read_events
 
     spec, _, _ = ectx.plan(_spec())
-    df = lowering.lower(spec, Backing.flat(ectx.index))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan.upper(), plan
-    got = {r.event_type: r.du for r in df.collect()}
+    got = {
+        r.event_type: r.du
+        for r in lowering.lower(spec, Backing.flat(ectx.index)).collect()
+    }
     ev = read_events(spark, SF_DIR)
     want = {
-        r.event_type: r.x
+        r.event_type: float(r.x)
         for r in ev.groupBy("event_type")
-        .agg(T.theta_estimate(T.theta_sketch_agg(F.col("user_id"), 4096), 4096).alias("x"))
+        .agg(
+            F.theta_sketch_estimate(ThetaSpec("user_id").sketch_agg()).alias("x")
+        )
         .collect()
     }
     assert got == want and got
 
 
-def test_bounded_raw_build_mixed_aggs(ectx, spark):
-    """Theta alongside mergeable aggs (count/sum) AND a non-mergeable agg
-    (exact percentile): the mergeables ride the two stages, the percentile
-    aggregates separately and joins back null-safely — values all match the
-    one-stage plan."""
+def test_raw_build_mixed_aggs(ectx, spark):
+    """Theta alongside count/sum AND a non-mergeable agg (exact percentile)
+    in one row-grain aggregation: every value matches a direct one-stage
+    aggregation."""
     spec = ir.GroupByQuery(
         dimensions=[ir.DefaultDim("event_type")],
         aggregations=[
@@ -282,7 +348,9 @@ def test_bounded_raw_build_mixed_aggs(ectx, spark):
         for r in lowering.lower(planned, flat).collect()
     }
     base = flat.df.groupBy("event_type").agg(
-        T.theta_estimate(T.theta_sketch_agg(F.col("user_id"), 4096), 4096).alias("du"),
+        F.theta_sketch_estimate(ThetaSpec("user_id").sketch_agg())
+        .cast("double")
+        .alias("du"),
         F.count(F.lit(1)).alias("n"),
         F.sum("value").alias("sv"),
         F.percentile(F.col("value").cast("double"), F.lit(0.5)).alias("p50"),
@@ -294,36 +362,30 @@ def test_bounded_raw_build_mixed_aggs(ectx, spark):
     assert got == want and got
 
 
-def test_bounded_build_ndv_smoke(spark):
-    """NDV >> k: 200k distinct values into a k=64 sketch through the bounded
-    path — the merge stage only ever carries <=k-element partials per input
-    partition, and the estimate still lands within the KMV error band."""
+def test_raw_build_ndv_smoke(spark):
+    """NDV >> k: 200k distinct values into a k=64 sketch through the raw
+    lowering — the estimate lands within the k=64 error band and equals a
+    direct build."""
     df = spark.range(0, 200_000, 1, 8).select(
         (F.col("id") % 4).alias("g"), F.col("id").alias("v")
     )
-    spec = ir.GroupByQuery(
-        dimensions=[ir.DefaultDim("g")],
-        aggregations=[ir.ThetaAgg("du", "v", k=64)],
-    )
-    out = lowering.lower(spec, Backing.base(df.withColumn("ts", F.current_timestamp()), "ts"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan.upper()
-    for r in out.collect():
-        assert abs(r.du - 50_000) / 50_000 < 0.5  # k=64 KMV band
-    # bit-identity with the unbounded one-stage build at NDV >> k
+    got = _raw_theta(df, "v", k=64, dims=("g",))
+    assert len(got) == 4
+    for est in got.values():
+        assert abs(est - 50_000) / 50_000 < 0.5  # k=64 band
     direct = {
-        r.g: r.du
+        (r.g,): float(r.du)
         for r in df.groupBy("g")
-        .agg(T.theta_estimate(T.theta_sketch_agg(F.col("v"), 64), 64).alias("du"))
+        .agg(F.theta_sketch_estimate(ThetaSpec("v", 64).sketch_agg()).alias("du"))
         .collect()
     }
-    assert {r.g: r.du for r in out.collect()} == direct
+    assert got == direct
 
 
-def test_cube_build_two_stage_bit_identical(spark, tmp_path):
-    """The index cube build (now two-stage when theta specs are present)
-    produces bit-identical sketch AND metric columns to the direct one-stage
-    aggregation."""
+def test_cube_build_matches_direct_groupby(spark, tmp_path):
+    """Every cube cell built in one stage carries the sketch, count and sum
+    a direct groupBy over the raw events gives: each cell's estimate equals
+    the direct estimate, and the sketch column is BinaryType."""
     from pysparkline.events_index import events_index_config, events_star
     from pysparkline.index import OlapIndex
     from pysparkline.tpch import read_events
@@ -333,28 +395,29 @@ def test_cube_build_two_stage_bit_identical(spark, tmp_path):
         spark, ev, events_index_config(), str(tmp_path / "idx"), star=events_star()
     )
     cube = idx.cube_df("types")
+    assert cube.schema["theta_user_id_k4096"].dataType.simpleString() == "binary"
     direct = ev.groupBy(
         F.date_trunc("day", F.col("ts")).alias("__bucket"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("__count"),
-        T.theta_sketch_agg(F.col("user_id"), 4096).alias("theta_user_id_k4096"),
+        ThetaSpec("user_id").sketch_agg().alias("theta_user_id_k4096"),
         F.sum(F.expr("CAST(value AS DECIMAL(18,6))")).alias("sum_value"),
     )
-    got = {
-        (str(r["__bucket"]), r.event_type): (
-            r["__count"], tuple(r.theta_user_id_k4096), r.sum_value
-        )
-        for r in cube.select(
-            "__bucket", "event_type", "__count", "theta_user_id_k4096", "sum_value"
-        ).collect()
-    }
-    want = {
-        (str(r["__bucket"]), r.event_type): (
-            r["__count"], tuple(r.theta_user_id_k4096), r.sum_value
-        )
-        for r in direct.collect()
-    }
-    assert got == want and got
+
+    def cells(df):
+        return {
+            (str(r["__bucket"]), r.event_type): (r["__count"], r.est, r.sum_value)
+            for r in df.select(
+                "__bucket",
+                "event_type",
+                "__count",
+                F.theta_sketch_estimate("theta_user_id_k4096").alias("est"),
+                "sum_value",
+            ).collect()
+        }
+
+    got = cells(cube)
+    assert got == cells(direct) and got
 
 
 def test_metadata_view_lists_sketch_columns(ectx):
@@ -367,3 +430,39 @@ def test_metadata_view_lists_sketch_columns(ectx):
     ).collect()[0]
     cols = set(row.sketch_columns.split(","))
     assert {"hll_user_id", "hist_value", "theta_user_id_k4096"} <= cols
+
+
+def test_old_kmv_index_fails_loudly(ectx, spark, tmp_path):
+    """An index written with the retired KMV format (manifest thetaSpecs
+    without a sketch format, array<long> sketch column) must never be
+    misread: loading it, or opening it for queries, raises the named
+    rebuild error. New manifests record the format, so build-cache keys of
+    theta-bearing configs changed and old cached indexes rebuild."""
+    import copy
+    import json
+    import os
+
+    from pysparkline.events_index import events_index_config
+    from pysparkline.index import MANIFEST, IndexFormatError, OlapIndex
+    from pysparkline.session import OlapContext
+
+    specs = events_index_config().to_dict()["thetaSpecs"]
+    assert specs and all(t["format"] == "datasketches" for t in specs)
+
+    manifest = copy.deepcopy(ectx.index.manifest)
+    # the retired format: thetaSpecs carry no sketch format
+    manifest["config"]["thetaSpecs"] = [{"col": "user_id", "k": 4096}]
+    root = tmp_path / "old_idx"
+    cube_path = root / manifest["cubes"]["types"]["path"]
+    spark.createDataFrame(
+        [("view", [3, 7, 11])],
+        "event_type string, theta_user_id_k4096 array<bigint>",
+    ).write.parquet(str(cube_path))
+    with open(os.path.join(root, MANIFEST), "w") as fh:
+        json.dump(manifest, fh, default=str)
+
+    with pytest.raises(IndexFormatError, match="rebuild"):
+        OlapIndex.load(spark, str(root))
+    with pytest.raises(IndexFormatError, match="rebuild"):
+        OlapContext(spark, OlapIndex(spark, str(root), manifest)).query(_spec())
+
