@@ -927,15 +927,19 @@ class CorrScalarCond(IRNode):
     # (subquery under OR); the per-key join still happens, its leaf
     # columns stay visible until the OR filter has run
     standalone: bool = True
-    # ROW-GRAIN residual mode (round 11, HAVING serving): a NON-EQUI
-    # residual conjunct referencing selected outer group columns means the
-    # per-key bundle cannot precompute — ``inner`` stays a row-grain
-    # select (keys + leaf arguments + residual columns) and the server
-    # builds the bundle per DISTINCT (pair outer cols + residual frame
-    # cols) tuple: distinct frame tuples LEFT-join the rows on the equi
-    # pairs AND residual_sql, the leaf aggregates recompute per tuple
-    # (leaf_aggs), and the bundle joins back null-safely — no frame-row
-    # duplication is possible by construction.
+    # ROW-GRAIN residual mode (round 11): a NON-EQUI residual conjunct
+    # referencing outer frame columns means the per-key bundle cannot
+    # precompute — ``inner`` stays a row-grain select (keys + leaf
+    # arguments + residual columns) and the server builds the bundle per
+    # DISTINCT (pair outer cols + residual frame cols) tuple: distinct
+    # frame tuples LEFT-join the rows on the equi pairs AND residual_sql,
+    # the leaf aggregates recompute per tuple (leaf_aggs), and the bundle
+    # joins back null-safely — no frame-row duplication is possible by
+    # construction. One SQL-front builder emits it
+    # (sqlfront._residual_bundle) for HAVING EXISTS / [NOT] IN /
+    # quantified, the select-list and WHERE scalars, and the OR-composed
+    # EXISTS / [NOT] IN / quantified atoms; the frame is the aggregated
+    # frame in HAVING and the select list, the row-grain scan elsewhere.
     row_grain: bool = False
     # residual condition over frame output aliases + __hcr* inner aliases
     residual_sql: str = ""
@@ -943,8 +947,8 @@ class CorrScalarCond(IRNode):
     residual_frame_cols: list = field(default_factory=list)
     # inner-side residual column aliases exposed by the row-grain inner
     residual_cols: list = field(default_factory=list)
-    # [[fn, arg_alias | None, leaf_alias]] with fn in
-    # count_star/count/min/max — the re-aggregation recipe
+    # [[fn, arg_sql | None, leaf_alias]] with fn in
+    # count_star/count/sum/min/max/avg — the re-aggregation recipe
     leaf_aggs: list = field(default_factory=list)
     # RESIDUAL-ONLY correlation (round 11, late): no equi anchor — the
     # row-grain bundle joins distinct outer residual tuples to the dim

@@ -1057,7 +1057,13 @@ class OlapContext:
             self.query_history.append(
                 QueryRecord({"sql": sql}, f"fallback: {e}", "sparksql")
             )
-            return self.spark.sql(sql)
+            try:
+                return self.spark.sql(sql)
+            except Exception as err:
+                # Spark cannot run the statement either: keep its error
+                # (type and message) and say why the rewrite declined
+                err.add_note(f"pysparkline declined the rewrite: {e}")
+                raise
 
         try:
             spec = self._parse_sql(sql)

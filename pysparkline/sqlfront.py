@@ -2364,43 +2364,29 @@ def _build_inner_aggs(
     )
 
 
-def _split_corr_conjuncts(
-    wc: dict | None, scope: _SubqScope, what: str
-) -> tuple[list[str], list[str], list[dict]]:
-    """Split a correlated subquery's WHERE into equi-correlation pairs and
-    inner-only rest; a MIXED-scope conjunct that is not an equi pair
-    declines (``what`` names the shape for the error). Returns
-    (corr_inner, corr_outer, rest)."""
-    corr_inner: list[str] = []
-    corr_outer: list[str] = []
-    rest: list[dict] = []
-    for c in _conjuncts(wc) if wc is not None else []:
-        pair = _corr_pair(c, scope)
-        if pair is not None:
-            corr_inner.append(pair[0])
-            corr_outer.append(pair[1])
-            continue
-        if scope.has_outer(c):
-            raise SQLFrontError(f"non-equi correlation in {what}")
-        rest.append(c)
-    if not corr_inner:
-        raise SQLFrontError(
-            f"correlated {what} without an equi-correlation conjunct"
-        )
-    return corr_inner, corr_outer, rest
-
-
 def _split_corr_conjuncts_res(
-    wc: dict | None, scope: _SubqScope, what: str,
-    require_anchor: bool = True,
+    wc: dict | None,
+    scope: _SubqScope,
+    what: str,
+    star: StarSchema | None,
+    lhs_cols=(),
 ) -> tuple[list[str], list[str], list[dict], list[dict]]:
-    """Like :func:`_split_corr_conjuncts`, but mixed-scope NON-equi
-    conjuncts come back as ``residuals`` instead of declining (round 11 —
-    HAVING quantified subqueries serve them by keeping the inner row
-    grain and re-aggregating after a residual-conditioned join). An
-    equi-correlation conjunct is required unless ``require_anchor`` is
-    False (the broadcast-theta path over a provably tiny inner — the
-    only anchor-free form that is acceptable at scale)."""
+    """Split a correlated subquery's WHERE into equi-correlation pairs
+    (corr_inner, corr_outer), inner-only ``rest`` and mixed-scope NON-equi
+    ``residuals`` (served by keeping the inner row grain — the row-grain
+    bundle or an EXISTS-style arm; a caller that cannot carry them
+    declines). The one place the correlated-subquery guards run, so every
+    form applies them alike (``what`` names the shape for the error):
+
+    - neither an equi anchor nor a residual declines (an anchor-free
+      residual form takes the broadcast-theta path over a provably tiny
+      inner);
+    - an aggregate inside the filter declines: it can only be an OUTER
+      aggregate, which has no column to bind to (Spark's fallback
+      rejects the shape too);
+    - an outer column the star does not know — correlation, residual or
+      the caller's ``lhs_cols`` (the IN left side), as source names —
+      declines."""
     corr_inner: list[str] = []
     corr_outer: list[str] = []
     rest: list[dict] = []
@@ -2410,15 +2396,22 @@ def _split_corr_conjuncts_res(
         if pair is not None:
             corr_inner.append(pair[0])
             corr_outer.append(pair[1])
-            continue
-        if scope.has_outer(c):
+        elif scope.has_outer(c):
             residuals.append(c)
-            continue
-        rest.append(c)
-    if not corr_inner and require_anchor:
-        raise SQLFrontError(
-            f"correlated {what} without an equi-correlation conjunct"
-        )
+        else:
+            rest.append(c)
+    if not corr_inner and not residuals:
+        raise SQLFrontError(f"{what} subquery without a correlation conjunct")
+    if any(_contains_agg(c) for c in rest + residuals):
+        raise SQLFrontError(f"aggregate inside the {what} subquery filter")
+    all_cols = _star_columns(star)
+    if all_cols is not None:
+        outer = set(corr_outer) | scope.outer_names(residuals) | set(lhs_cols)
+        bad = sorted(outer - all_cols)
+        if bad:
+            raise SQLFrontError(
+                f"{what} subquery references unknown outer columns {bad}"
+            )
     return corr_inner, corr_outer, rest, residuals
 
 
@@ -2489,72 +2482,111 @@ def _build_inner_rows(
     return _parse_select(node2, time_col, fact_table, star)
 
 
-def _having_corr_in_residual(
-    item_ast: dict,
-    negated: bool,
-    cidx: str,
-    lhs_sql: str,
-    lhs_frame_cols: list[str],
+def _residual_bundle(
+    what: str,
+    tag,
+    leaves,
     inner_node: dict,
     scope: _SubqScope,
     tables: list[str],
     pairs: list[tuple[str, str]],
-    corr_inner: list[str],
-    corr_outer: list[str],
-    rest: list[dict],
-    residuals: list[dict],
-    frame_col,
+    split: tuple,
     time_col: str | None,
     fact_table: str | None,
     star: StarSchema | None,
-) -> tuple["ir.CorrScalarCond", str]:
-    """Correlated ``[NOT] IN`` in HAVING with NON-EQUI residual conjuncts
-    (round 11): the membership arm's deduped key set cannot carry a
-    residual, so the shape rides the row-grain bundle instead — per
-    DISTINCT (correlation + residual/lhs frame column) tuple, count the
-    residual-matched rows (a0), their non-NULL items (a1), and the exact
-    item-equals-lhs matches (a2 — the equality evaluates inside the
-    bundle aggregation, where the tuple's frame columns are in scope).
-    IN is ``a2 > 0`` (UNKNOWN flattens to FALSE, exactly what filter
-    context requires); NOT IN keeps full three-valued semantics: TRUE iff
-    the residual-matched set is empty, or lhs is non-NULL with no NULL
-    member and no equal member."""
-    if any(_contains_agg(c) for c in rest + residuals):
-        # an OUTER aggregate inside the subquery's WHERE has no column
-        # to bind through the frame map — decline at parse (uniform
-        # with the EXISTS branch; previously a lowering-time crash)
-        raise SQLFrontError(
-            "aggregate inside a HAVING subquery filter"
-        )
+    frame_col=lambda name: name,
+    lhs_frame_cols=(),
+    **cond,
+) -> "ir.CorrScalarCond":
+    """THE row-grain residual bundle (ir.CorrScalarCond.row_grain) — the
+    one builder every correlated form with NON-EQUI residual conjuncts
+    shares: HAVING EXISTS / [NOT] IN / quantified, the select-list and
+    WHERE scalars, and the OR-composed EXISTS / [NOT] IN / quantified
+    atoms. The per-key GROUP BY cannot absorb an outer-dependent filter,
+    so the inner stays row grain and the server recomputes the leaf
+    aggregates per DISTINCT (correlation + residual frame column) tuple
+    after the residual-conditioned join.
+
+    ``split`` comes from :func:`_split_corr_conjuncts_res` (its guards
+    have run). The residuals render first, then the leaf arguments, all
+    over the same reserved ``__hcr{tag}_*`` inner aliases (their
+    insertion order is the row-grain inner's column order); outer
+    columns bind through ``frame_col`` — the frame's output aliases in
+    HAVING / the select list, the identity where the row-grain scan is
+    the frame. ``leaves(arg)`` returns the caller's re-aggregation recipe
+    ``[[fn, arg_sql | None, leaf_alias]]``, rendering inner expressions
+    with ``arg``; ``cond`` carries the caller's condition fields.
+    ``lhs_frame_cols`` (the IN family) extend the bundle key with the
+    frame columns its counted equality reads. No equi anchor = the
+    broadcast-theta form."""
+    corr_inner, corr_outer, rest, residuals = split
     inner_alias: dict = {}
     res_sqls = [
-        _rewrite_residual(c, scope, frame_col, inner_alias, cidx)
+        _rewrite_residual(c, scope, frame_col, inner_alias, tag)
         for c in residuals
     ]
-    item2 = dict(item_ast)
-    item2["alias"] = ""
-    val_sql = _rewrite_residual(item2, scope, frame_col, inner_alias, cidx)
+    leaf_aggs = leaves(
+        lambda ast: _rewrite_residual(ast, scope, frame_col, inner_alias, tag)
+    )
     keys = list(dict.fromkeys(corr_inner))
-    a = [f"__ca{cidx}_{i}" for i in range(3)]
-    theta = not corr_inner
-    inner = _residual_rows_inner(
-        "[NOT] IN", inner_node, keys, inner_alias,
-        tables, pairs, rest, time_col, fact_table, star,
+    return ir.CorrScalarCond(
+        inner=_residual_rows_inner(
+            what, inner_node, keys, inner_alias,
+            tables, pairs, rest, time_col, fact_table, star,
+        ),
+        inner_keys=keys,
+        pairs=[[frame_col(o), i] for i, o in zip(corr_inner, corr_outer)],
+        leaf_cols=[a for _, _, a in leaf_aggs],
+        row_grain=True,
+        residual_sql=" AND ".join(res_sqls),
+        residual_frame_cols=sorted(
+            {frame_col(n) for n in scope.outer_names(residuals)}
+            | set(lhs_frame_cols)
+        ),
+        residual_cols=sorted(inner_alias.values()),
+        leaf_aggs=leaf_aggs,
+        broadcast_theta=not corr_inner,
+        **cond,
     )
-    leaf_aggs = [
-        ["count_star", None, a[0]],
-        ["count", val_sql, a[1]],
-        ["count", f"CASE WHEN ({val_sql}) = ({lhs_sql}) THEN 1 END", a[2]],
-    ]
-    rfcols = sorted(
-        {
-            frame_col(ref["column_names"][-1])
-            for r in residuals
-            for ref in _refs_of(r)
-            if scope.side(ref) == "outer"
-        }
-        | set(lhs_frame_cols)
+
+
+def _exists_bundle(negated: bool, tag, *args, **kw) -> "ir.CorrScalarCond":
+    """[NOT] EXISTS with residual conjuncts as a row-grain bundle: EXISTS
+    is exactly ``count of residual-matched rows > 0``, NOT EXISTS ``= 0``.
+    ``args``/``kw`` are :func:`_residual_bundle`'s scope arguments."""
+    a0 = f"__ca{tag}_0"
+    return _residual_bundle(
+        "EXISTS", tag, lambda arg: [["count_star", None, a0]], *args,
+        cond_sql=f"(coalesce(`{a0}`, 0) {'=' if negated else '>'} 0)",
+        left_join=True,
+        standalone=False,
+        **kw,
     )
+
+
+def _in_bundle(
+    item: dict, negated: bool, lhs_sql: str, tag, *args, **kw
+) -> "ir.CorrScalarCond":
+    """Correlated ``[NOT] IN`` with NON-EQUI residual conjuncts as a
+    row-grain bundle (the membership arm's deduped key set cannot carry a
+    residual): per tuple, count the residual-matched rows (a0), their
+    non-NULL items (a1), and the exact item-equals-lhs matches (a2 — the
+    equality evaluates inside the bundle aggregation, where the tuple's
+    frame columns are in scope). IN is ``a2 > 0`` (UNKNOWN flattens to
+    FALSE, exactly what filter context requires); NOT IN keeps full
+    three-valued semantics: TRUE iff the residual-matched set is empty,
+    or lhs is non-NULL with no NULL member and no equal member."""
+    a = [f"__ca{tag}_{i}" for i in range(3)]
+
+    def leaves(arg):
+        val_sql = arg(item)
+        eq = f"CASE WHEN ({val_sql}) = ({lhs_sql}) THEN 1 END"
+        return [
+            ["count_star", None, a[0]],
+            ["count", val_sql, a[1]],
+            ["count", eq, a[2]],
+        ]
+
     if negated:
         cond = (
             f"(coalesce(`{a[0]}`, 0) = 0 OR (({lhs_sql}) IS NOT NULL"
@@ -2563,109 +2595,79 @@ def _having_corr_in_residual(
         )
     else:
         cond = f"(coalesce(`{a[2]}`, 0) > 0)"
-    cc = ir.CorrScalarCond(
-        inner=inner,
-        inner_keys=keys,
-        pairs=[[frame_col(o), i] for i, o in zip(corr_inner, corr_outer)],
-        leaf_cols=a,
-        cond_sql=cond,
-        left_join=True,
-        standalone=False,
-        row_grain=True,
-        residual_sql=" AND ".join(res_sqls),
-        residual_frame_cols=rfcols,
-        residual_cols=sorted(inner_alias.values()),
-        leaf_aggs=leaf_aggs,
-        broadcast_theta=theta,
+    return _residual_bundle(
+        "[NOT] IN", tag, leaves, *args, cond_sql=cond,
+        left_join=True, standalone=False, **kw,
     )
-    return cc, cond
 
 
-def _or_exists_count_bundle(
-    s2: dict,
-    negated: bool,
-    cidx: str,
-    time_col: str | None,
-    fact_table: str | None,
-    star: StarSchema | None,
-    outer_quals: set,
-) -> tuple["ir.CorrScalarCond", str]:
-    """[NOT] EXISTS with residual conjuncts under OR (round 11, late):
-    the marker join cannot carry a residual (the key set is not distinct
-    per key), but EXISTS is exactly ``count of matched rows > 0`` — a
-    row-grain count bundle per DISTINCT (correlation + residual outer
-    column) tuple joins back null-safely, one bundle row per tuple, so
-    the inline OR composition cannot duplicate. This is the HAVING-side
-    machinery with the row-grain scan as the frame (frame binding is the
-    identity — outer refs read the scan bare). Anchor-free forms take
-    the broadcast-theta proof path."""
-    inner_node = (s2.get("subquery") or {}).get("node") or {}
-    if inner_node.get("type") != "SELECT_NODE":
-        raise SQLFrontError("set-operation subquery in WHERE")
-    tables, pairs, inner_cols, scope = _subquery_scope(
-        inner_node, fact_table, star, outer_quals
-    )
-    if inner_cols is None:
-        raise SQLFrontError(
-            "EXISTS needs star column lists to resolve correlation"
-        )
-    wc = inner_node.get("where_clause")
-    ci, co, rest, residuals = _split_corr_conjuncts_res(
-        wc, scope, "EXISTS", require_anchor=False
-    )
-    if not ci and not residuals:
-        raise SQLFrontError("uncorrelated EXISTS (constant predicate)")
-    if any(_contains_agg(c) for c in rest + residuals):
-        # an aggregate in a WHERE-clause subquery filter is invalid SQL
-        # Spark's fallback rejects cleanly — decline at parse instead
-        # of embedding it into a join condition (uniform with the
-        # HAVING-side copies; review finding)
-        raise SQLFrontError("aggregate inside an EXISTS subquery filter")
-    all_cols = _star_columns(star)
-    inner_alias: dict = {}
-    res_sqls = [
-        _rewrite_residual(c, scope, lambda n: n, inner_alias, cidx)
-        for c in residuals
-    ]
-    rfcols = sorted({
-        ref["column_names"][-1]
-        for r in residuals
-        for ref in _refs_of(r)
-        if scope.side(ref) == "outer"
-    })
-    if all_cols is not None:
-        bad = sorted((set(co) | set(rfcols)) - all_cols)
-        if bad:
+def _scalar_leaves(
+    item: dict, scope: _SubqScope, tag
+) -> tuple[dict, list[tuple[dict, str]], bool]:
+    """Rewrite a correlated scalar's select item over per-group leaf
+    columns: each aggregate leaf becomes ``__ca{tag}_{i}`` (count-class
+    leaves COALESCE to 0, so an empty group evaluates like the 1-row
+    scalar it replaces). Returns (value AST, [(leaf AST, alias)], whether
+    a count-class leaf occurred). Outer references inside an aggregate
+    argument and bare columns (no single-value guarantee) decline."""
+    import copy
+
+    leaves: list[tuple[dict, str]] = []
+    has_count = False
+
+    def rewrite(n):
+        nonlocal has_count
+        if isinstance(n, dict):
+            fn = (n.get("function_name") or "").lower()
+            if n.get("class") == "FUNCTION" and fn in _AGG_FNS:
+                for ref in _refs_of([n.get("children"), n.get("filter")]):
+                    if scope.side(ref) != "inner":
+                        raise SQLFrontError(
+                            "outer reference inside aggregate argument"
+                        )
+                alias = f"__ca{tag}_{len(leaves)}"
+                leaves.append((copy.deepcopy(n), alias))
+                ph = _colref(alias)
+                if fn in _COUNT_CLASS_FNS:
+                    has_count = True
+                    return _coalesce0(ph)
+                return ph
+            if n.get("class") == "COLUMN_REF":
+                raise SQLFrontError(
+                    "non-aggregate column in scalar select item"
+                )
+            return {k: rewrite(v) for k, v in n.items()}
+        if isinstance(n, list):
+            return [rewrite(v) for v in n]
+        return n
+
+    item = copy.deepcopy(item)
+    item["alias"] = ""
+    return rewrite(item), leaves, has_count
+
+
+def _row_grain_leaf_aggs(leaves: list[tuple[dict, str]], arg) -> list:
+    """A scalar's leaves as the row-grain bundle's re-aggregation recipe
+    (``leaves`` callback of :func:`_residual_bundle`): plain
+    count/sum/min/max/avg leaves only — FILTER/DISTINCT and other
+    families cannot recompute per tuple and decline."""
+    out = []
+    for ast, alias in leaves:
+        fn = (ast.get("function_name") or "").lower()
+        if ast.get("filter") or ast.get("distinct"):
             raise SQLFrontError(
-                f"EXISTS residual references unknown columns {bad}"
+                "FILTER/DISTINCT aggregate with residual correlation"
             )
-    keys = list(dict.fromkeys(ci))
-    a0 = f"__ca{cidx}_0"
-    theta = not ci
-    inner = _residual_rows_inner(
-        "EXISTS", inner_node, keys, inner_alias,
-        tables, pairs, rest, time_col, fact_table, star,
-    )
-    cond = (
-        f"(coalesce(`{a0}`, 0) = 0)" if negated
-        else f"(coalesce(`{a0}`, 0) > 0)"
-    )
-    cc = ir.CorrScalarCond(
-        inner=inner,
-        inner_keys=keys,
-        pairs=[[o, i] for i, o in zip(ci, co)],
-        leaf_cols=[a0],
-        cond_sql=cond,
-        left_join=True,
-        standalone=False,
-        row_grain=True,
-        residual_sql=" AND ".join(res_sqls),
-        residual_frame_cols=rfcols,
-        residual_cols=sorted(inner_alias.values()),
-        leaf_aggs=[["count_star", None, a0]],
-        broadcast_theta=theta,
-    )
-    return cc, cond
+        ch = ast.get("children") or []
+        if fn == "count" and not ch:
+            fn = "count_star"
+        if fn == "count_star":
+            out.append([fn, None, alias])
+        elif fn in ("count", "sum", "min", "max", "avg") and len(ch) == 1:
+            out.append([fn, arg(ch[0]), alias])
+        else:
+            raise SQLFrontError(f"aggregate {fn} with residual correlation")
+    return out
 
 
 def _corr_pair(node: dict, scope: _SubqScope) -> tuple[str, str] | None:
@@ -2706,7 +2708,9 @@ def _parse_in_arm(
     fact_table: str | None,
     star: StarSchema | None,
     outer_quals: set,
-) -> tuple[ir.SemiJoinArm, "ir.GuardCond | ir.CorrScalarCond | None"]:
+    or_tag: str | None = None,
+) -> tuple["ir.SemiJoinArm | ir.CorrScalarCond",
+           "ir.GuardCond | ir.CorrScalarCond | None"]:
     """``x [NOT] IN (SELECT key ...)`` -> semi/anti arm. Uncorrelated
     NOT IN additionally emits a GuardCond carrying its three-valued NULL
     semantics (one NULL inner key empties the result; a NULL x passes
@@ -2718,11 +2722,16 @@ def _parse_in_arm(
     form: counts per correlation key, LEFT-joined so a missing group
     behaves as the empty set).
 
+    ``or_tag`` (an OR-composed atom): a correlated form that would carry a
+    residual returns the row-grain IN bundle (:func:`_in_bundle`, tagged
+    ``__ca{or_tag}_*``) in place of the arm.
+
     Row-value IN (``(a, b) IN (SELECT x, y ...)``, arriving as a row()
     child) becomes a multi-pair arm; row-value NOT IN declines (its
     three-valued logic is per-COMPONENT — a row comparison is NULL when
     any pair is NULL and none is definitely unequal, which the global
-    count guard cannot encode).
+    count guard cannot encode), and so does a residual-carrying row-value
+    IN under OR (the bundle models a scalar lhs only).
 
     Only reached for comparison_type COMPARE_EQUAL (the _parse_semijoin
     dispatch routes other comparisons to _parse_quantified_guard)."""
@@ -2744,9 +2753,12 @@ def _parse_in_arm(
                 "row-value IN components must be plain columns"
             )
         _check_outer_child(child, outer_quals)
-        return _parse_row_in_arm(
+        arm = _parse_row_in_arm(
             s, row_children, time_col, fact_table, star, outer_quals
         )
+        if or_tag is not None and arm[0].residual_sql:
+            raise SQLFrontError("row-value IN with a residual under OR")
+        return arm
     if child.get("class") != "COLUMN_REF":
         raise SQLFrontError("IN (subquery) left side must be a plain column")
     _check_outer_child(child, outer_quals)
@@ -2789,19 +2801,30 @@ def _parse_in_arm(
     # to capture — every unqualified name is inner by SQL scoping
     correlated = wc is not None and scope.has_outer(wc)
     if correlated:
+        split = _split_corr_conjuncts_res(
+            wc, scope, "NOT IN" if neg else "IN", star, lhs_cols=[outer_key]
+        )
+        corr_inner, corr_outer, rest, residuals = split
+        if or_tag is not None and (residuals or not (neg or is_col)):
+            # under OR (round 11 late) a residual-carrying arm's key set
+            # can hold several rows per key, so no marker join: the
+            # row-grain IN bundle with the scan as the frame (a positive
+            # expression key's equality is itself a residual)
+            if not neg and is_col:
+                # positive IN: the IN equality is an exact equi anchor
+                # (a NULL key never matches = non-membership), so the
+                # bundle hash-joins on it instead of paying the theta
+                # proof; the counted item leaf stays (redundant within
+                # the keyed group, still exact)
+                split = (corr_inner + [inner_key], corr_outer + [outer_key],
+                         rest, residuals)
+            return _in_bundle(
+                dict(sel[0]), neg, render(child), or_tag,
+                inner_node, scope, tables, pairs, split,
+                time_col, fact_table, star,
+                lhs_frame_cols=sorted(_columns_of(child)),
+            ), None
         if neg:
-            corr_inner, corr_outer, rest, residuals = (
-                _split_corr_conjuncts_res(
-                    wc, scope, "NOT IN", require_anchor=False
-                )
-            )
-            all_cols = _star_columns(star)
-            if all_cols is not None:
-                bad = sorted(set(corr_outer) - all_cols)
-                if bad:
-                    raise SQLFrontError(
-                        f"correlation references unknown outer columns {bad}"
-                    )
             if residuals:
                 # round 11: NOT IN with a non-equi residual is exactly
                 # NOT(x = ANY(residual-filtered set)) — the quantified
@@ -2809,31 +2832,12 @@ def _parse_in_arm(
                 # condition carries the full three-valued logic (a NULL
                 # member or NULL x matches -> excludes; the empty matched
                 # set keeps the row), so no count guard is needed
-                if not corr_inner:
-                    # residual-only (round 11, late): no equi anchor —
-                    # the broadcast-theta anti arm over a provably tiny
-                    # dim inner (the server's row-cap probe is the proof;
-                    # past it the spark.sql fallback runs NOT IN exactly)
-                    _require_single_dim_inner(
-                        "NOT IN", tables, pairs, fact_table
-                    )
-                arm = _quantified_residual_arm(
-                    {"comparison_type": "COMPARE_EQUAL"}, True,
-                    dict(sel[0]), render(child),
-                    set(_columns_of(child)),
-                    inner_node, scope, tables, pairs,
-                    corr_inner, corr_outer, rest, residuals,
+                return _quantified_residual_arm(
+                    "NOT IN", {"comparison_type": "COMPARE_EQUAL"}, True,
+                    dict(sel[0]), render(child), set(_columns_of(child)),
+                    inner_node, scope, tables, pairs, split,
                     time_col, fact_table, star,
-                )
-                if not corr_inner:
-                    arm.broadcast_theta = True
-                return arm, None
-            if not corr_inner:
-                # defensive: has_outer held, so some conjunct was a pair
-                # or a residual
-                raise SQLFrontError(
-                    "correlated NOT IN without an equi-correlation conjunct"
-                )
+                ), None
             x_sql = render(child)
             key_node = _colref(inner_key) if is_col else dict(key_items[0][0])
             kset_keys = list(
@@ -3132,6 +3136,7 @@ def _quant_bundle(
 
 
 def _quantified_residual_arm(
+    what: str,
     s: dict,
     neg: bool,
     item: dict,
@@ -3141,10 +3146,7 @@ def _quantified_residual_arm(
     scope: _SubqScope,
     tables: list[str],
     pairs: list[tuple[str, str]],
-    corr_inner: list[str],
-    corr_outer: list[str],
-    rest: list[dict],
-    residuals: list[dict],
+    split: tuple,
     time_col: str | None,
     fact_table: str | None,
     star: StarSchema | None,
@@ -3162,11 +3164,16 @@ def _quantified_residual_arm(
       excludes the outer row, the empty matched set keeps it, and a NULL
       member or NULL x correctly drops it (the ANSI UNKNOWN).
 
-    The row set joins on the equi pairs (hash join; never a theta join —
-    an equi anchor is required) and the item/residual inner columns ride
-    the key set under reserved __sjr_* aliases, exactly like round 8's
-    non-equi EXISTS residuals."""
-    all_cols = _star_columns(star)
+    The row set joins on the equi pairs (hash join) and the item/residual
+    inner columns ride the key set under reserved __sjr_* aliases, exactly
+    like round 8's non-equi EXISTS residuals. Residual-only (round 11,
+    late — the EXISTS theta analog): no equi anchor, so the arm joins on
+    the residual + comparison alone — acceptable only as a broadcast
+    nested loop over a provably tiny dimension inner; the server's
+    row-cap probe is the proof (ir.SemiJoinArm.broadcast_theta)."""
+    corr_inner, corr_outer, rest, residuals = split
+    if not corr_inner:
+        _require_single_dim_inner(what, tables, pairs, fact_table)
     extra_map: dict[str, str] = {}
 
     def rename(ref: dict) -> str:
@@ -3177,20 +3184,9 @@ def _quantified_residual_arm(
             extra_map[col] = f"__sjr_{len(extra_map)}"
         return extra_map[col]
 
-    residual_parts: list[str] = []
-    residual_outer: set[str] = set(x_cols)
-    for c in residuals:
-        outer_refs = sorted(scope.outer_names(c))
-        residual_outer.update(outer_refs)
-        if all_cols is not None:
-            bad = sorted(set(outer_refs) - all_cols)
-            if bad:
-                raise SQLFrontError(
-                    f"quantified residual references unknown columns {bad}"
-                )
-    # render AFTER collecting outer refs: rename() mutates extra_map
-    for c in residuals:
-        residual_parts.append(render(_rewrite_inner_refs(c, rename)))
+    residual_parts = [
+        render(_rewrite_inner_refs(c, rename)) for c in residuals
+    ]
     item_sql = render(_rewrite_inner_refs(dict(item), rename))
     op = _CMP[s.get("comparison_type")]
     cmp_sql = f"(({x_sql}) {op} ({item_sql}))"
@@ -3208,7 +3204,8 @@ def _quantified_residual_arm(
         inner_keys=list(corr_inner),
         anti=neg,
         residual_sql=" AND ".join(f"({p})" for p in residual_parts),
-        residual_outer_cols=sorted(residual_outer),
+        residual_outer_cols=sorted(scope.outer_names(residuals) | x_cols),
+        broadcast_theta=not corr_inner,
     )
 
 
@@ -3260,60 +3257,22 @@ def _parse_quantified_guard(
         )
     wc = inner_node.get("where_clause")
     if wc is not None and scope.has_outer(wc):
-        if allow_arm:
-            ci, co, rest2, residuals2 = _split_corr_conjuncts_res(
-                wc, scope, "quantified comparison", require_anchor=False
+        split = _split_corr_conjuncts_res(wc, scope, "quantified", star)
+        if split[3] and allow_arm:
+            # round 11: the residual means per-key bundles cannot
+            # precompute; standalone conjuncts rewrite to an EXISTS-style
+            # arm with the comparison in the join condition
+            return _quantified_residual_arm(
+                "quantified comparison", s, neg, item, x_sql,
+                set(_columns_of(child)), inner_node, scope, tables, pairs,
+                split, time_col, fact_table, star,
             )
-            if residuals2:
-                # round 11: the residual means per-key bundles cannot
-                # precompute; standalone conjuncts rewrite to an
-                # EXISTS-style arm with the comparison in the join
-                # condition (OR-composed conjuncts keep the decline —
-                # marker arms can't carry residuals)
-                if not ci:
-                    # residual-only (round 11, late — the EXISTS theta
-                    # analog): no equi anchor, so the arm joins on the
-                    # residual + comparison alone. Acceptable only as a
-                    # broadcast nested loop over a provably tiny
-                    # dimension inner; the server's row-cap probe is the
-                    # proof (ir.SemiJoinArm.broadcast_theta).
-                    _require_single_dim_inner(
-                        "quantified comparison", tables, pairs, fact_table
-                    )
-                arm = _quantified_residual_arm(
-                    s, neg, item, x_sql,
-                    set(_columns_of(child)),
-                    inner_node, scope, tables, pairs,
-                    ci, co, rest2, residuals2,
-                    time_col, fact_table, star,
-                )
-                if not ci:
-                    arm.broadcast_theta = True
-                return arm
-            if not ci:
-                # every correlated conjunct was an equi pair, none found:
-                # impossible (has_outer held) — defensive
-                raise SQLFrontError(
-                    "correlated quantified comparison without an"
-                    " equi-correlation conjunct"
-                )
         # frame_col (round 11 late): the OR path passes the identity so
         # residual (and residual-only) correlation rides the row-grain
-        # bundle with the scan as the frame instead of declining
+        # bundle with the scan as the frame
         return _parse_corr_quantified(
-            s,
-            neg,
-            cidx,
-            item,
-            x_sql,
-            scope,
-            tables,
-            pairs,
-            _star_columns(star),
-            time_col,
-            fact_table,
-            star,
-            frame_col=frame_col,
+            s, neg, cidx, item, x_sql, scope, tables, pairs, split,
+            time_col, fact_table, star, frame_col=frame_col,
         )
     cmp = s.get("comparison_type")
     pairs_items, aliases, cond = _quant_bundle(cmp, neg, x_sql, item, f"__g{idx}")
@@ -3340,13 +3299,13 @@ def _parse_quantified_guard(
 def _parse_corr_quantified(
     s: dict,
     neg: bool,
-    cidx: int,
+    cidx,
     item: dict,
     x_sql: str,
     scope: _SubqScope,
     tables: list[str],
     pairs: list[tuple[str, str]],
-    all_cols,
+    split: tuple,
     time_col: str | None,
     fact_table: str | None,
     star: StarSchema | None,
@@ -3361,35 +3320,14 @@ def _parse_corr_quantified(
     ALL parse; correlated ANY only via EXISTS rewrites), so this is
     engine surface beyond the fallback.
 
-    ``frame_col`` (HAVING serving only): enables the round-11 NON-EQUI
-    residual mode — mixed-scope non-equi conjuncts render into
-    ``residual_sql`` (outer refs bound to frame output aliases via
-    ``frame_col``), the inner stays row grain, and the bundle recomputes
-    per distinct (correlation + residual frame column) tuple after the
-    residual-conditioned join (CorrScalarCond.row_grain). Without it the
-    WHERE-side decline stands."""
+    ``frame_col`` (HAVING: the frame's output aliases; OR: the identity)
+    binds the outer correlation columns and enables the round-11 NON-EQUI
+    residual mode: the compared item's count_star/count/min/max leaves
+    recompute in the row-grain bundle (:func:`_residual_bundle`). The
+    standalone WHERE conjunct took the EXISTS-style arm for residuals
+    (:func:`_quantified_residual_arm`), so it never reaches that mode."""
     inner_node = (s.get("subquery") or {}).get("node") or {}
-    wc = inner_node.get("where_clause")
-    residuals: list[dict] = []
-    if frame_col is not None:
-        corr_inner, corr_outer, rest, residuals = _split_corr_conjuncts_res(
-            wc, scope, "quantified comparison", require_anchor=False
-        )
-        if not corr_inner and not residuals:
-            raise SQLFrontError(
-                "correlated quantified comparison without an"
-                " equi-correlation conjunct"
-            )
-    else:
-        corr_inner, corr_outer, rest = _split_corr_conjuncts(
-            wc, scope, "quantified comparison"
-        )
-    if all_cols is not None:
-        bad = sorted(set(corr_outer) - all_cols)
-        if bad:
-            raise SQLFrontError(
-                f"correlation references unknown outer columns {bad}"
-            )
+    corr_inner, corr_outer, rest, residuals = split
     cmp = s.get("comparison_type")
     a = [f"`__ca{cidx}_{i}`" for i in range(4)]
     cond = None
@@ -3444,71 +3382,34 @@ def _parse_corr_quantified(
             left_join = True
         else:
             raise SQLFrontError(f"quantified subquery comparison {cmp}")
-    keys = list(dict.fromkeys(corr_inner))
     aliases = [f"__ca{cidx}_{i}" for i in range(len(items))]
+    fields = dict(
+        value_sql=value_sql or "",
+        op=op,
+        outer_sql=x_sql,
+        outer_columns=sorted(set(_columns_of(s.get("child") or {}))),
+        flip=False,
+        left_join=left_join,
+        cond_sql=cond or "",
+    )
+    frame_col = frame_col or (lambda name: name)
     if residuals:
-        # row-grain residual mode (round 11): the inner stays a plain
-        # select of keys + the compared item + the residual's inner
-        # columns; the bundle aggregates (count_star/count/min/max of the
-        # item) recompute server-side per distinct (correlation + residual
-        # frame column) tuple after the residual joins
-        if any(_contains_agg(c) for c in rest + residuals):
-            # an OUTER aggregate inside the subquery's WHERE has no
-            # column to bind through the frame map — decline at parse
-            # (uniform with the EXISTS branch; previously a
-            # lowering-time crash)
-            raise SQLFrontError(
-                "aggregate inside a HAVING subquery filter"
-            )
-        inner_alias: dict = {}
-        res_sqls = [
-            _rewrite_residual(c, scope, frame_col, inner_alias, cidx)
-            for c in residuals
-        ]
-        # the compared item re-renders over the same reserved inner
-        # aliases and evaluates inside the bundle aggregation (the
-        # row-grain select carries only PLAIN columns)
-        val_sql = _rewrite_residual(item, scope, frame_col, inner_alias, cidx)
-        theta = not corr_inner
-        inner = _residual_rows_inner(
-            "quantified comparison", inner_node, keys, inner_alias,
-            tables, pairs, rest, time_col, fact_table, star,
+
+        def leaves(arg):
+            # the compared item evaluates inside the bundle aggregation
+            # (the row-grain select carries only PLAIN columns)
+            val_sql = arg(item)
+            return [
+                [n["function_name"], val_sql if n["children"] else None, al]
+                for n, al in zip(items, aliases)
+            ]
+
+        return _residual_bundle(
+            "quantified comparison", cidx, leaves, inner_node, scope,
+            tables, pairs, split, time_col, fact_table, star,
+            frame_col=frame_col, **fields,
         )
-        leaf_aggs = []
-        for ast, alias in zip(items, aliases):
-            fn = (ast.get("function_name") or "").lower()
-            arg = val_sql if ast.get("children") else None
-            if fn not in ("count_star", "count", "min", "max"):
-                raise SQLFrontError(f"row-grain bundle leaf {fn}")
-            leaf_aggs.append([fn, arg, alias])
-        rfcols = sorted(
-            {
-                c
-                for r in residuals
-                for ref in _refs_of(r)
-                if scope.side(ref) == "outer"
-                for c in [frame_col(ref["column_names"][-1])]
-            }
-        )
-        return ir.CorrScalarCond(
-            inner=inner,
-            inner_keys=keys,
-            pairs=[[o, i] for i, o in zip(corr_inner, corr_outer)],
-            leaf_cols=aliases,
-            value_sql=value_sql or "",
-            op=op,
-            outer_sql=x_sql,
-            outer_columns=sorted(set(_columns_of(s.get("child") or {}))),
-            flip=False,
-            left_join=left_join,
-            cond_sql=cond or "",
-            row_grain=True,
-            residual_sql=" AND ".join(res_sqls),
-            residual_frame_cols=rfcols,
-            residual_cols=sorted(inner_alias.values()),
-            leaf_aggs=leaf_aggs,
-            broadcast_theta=theta,
-        )
+    keys = list(dict.fromkeys(corr_inner))
     inner = _build_inner_aggs(
         inner_node,
         list(zip(items, aliases)),
@@ -3523,17 +3424,10 @@ def _parse_corr_quantified(
     return ir.CorrScalarCond(
         inner=inner,
         inner_keys=keys,
-        pairs=[[o, i] for i, o in zip(corr_inner, corr_outer)],
+        pairs=[[frame_col(o), i] for i, o in zip(corr_inner, corr_outer)],
         leaf_cols=aliases,
-        value_sql=value_sql or "",
-        op=op,
-        outer_sql=x_sql,
-        outer_columns=sorted(set(_columns_of(s.get("child") or {}))),
-        flip=False,
-        left_join=left_join,
-        cond_sql=cond or "",
+        **fields,
     )
-
 
 
 def _require_single_dim_inner(
@@ -3584,8 +3478,10 @@ def _residual_rows_inner(
     fact_table: str | None,
     star: StarSchema | None,
 ) -> "ir.QuerySpec":
-    """ONE row-grain inner builder for every residual bundle (round 11
-    late — consolidating the per-site copies the review flagged):
+    """The row-grain inner of the residual bundle — called only by
+    :func:`_residual_bundle`, the one builder behind every row-grain
+    bundle (HAVING EXISTS / [NOT] IN / quantified, the select-list and
+    WHERE scalars, the OR-composed EXISTS / [NOT] IN / quantified atoms):
 
     - no correlation keys (theta): single tiny dim, proof-gated at
       lowering (``_require_single_dim_inner`` + broadcast probe);
@@ -3614,7 +3510,16 @@ def _parse_exists_arm(
     fact_table: str | None,
     star: StarSchema | None,
     outer_quals: set,
-) -> ir.SemiJoinArm:
+    or_tag: str | None = None,
+) -> "ir.SemiJoinArm | ir.CorrScalarCond":
+    """``[NOT] EXISTS (...)`` -> semi/anti arm on the equi-correlation
+    pairs; inner-only conjuncts stay with the key-set filter. A MIXED-scope
+    non-equi conjunct (round 8) becomes part of the join CONDITION, with
+    inner refs rebased onto the __sjr_* aliases the inner spec exposes and
+    outer refs read bare off the scan. ``or_tag`` (an OR-composed atom):
+    a residual-carrying EXISTS returns the row-grain count bundle
+    (:func:`_exists_bundle`, scan as the frame) in place of the arm — its
+    key set can hold several rows per key, so no marker join."""
     inner_node = (s.get("subquery") or {}).get("node") or {}
     if inner_node.get("type") != "SELECT_NODE":
         raise SQLFrontError("set-operation subquery in WHERE")
@@ -3625,51 +3530,16 @@ def _parse_exists_arm(
         raise SQLFrontError(
             "EXISTS needs star column lists to resolve correlation"
         )
-    wc = inner_node.get("where_clause")
-    if wc is None:
-        raise SQLFrontError("uncorrelated EXISTS (constant predicate)")
-    all_cols = _star_columns(star)
-    corr_inner: list[str] = []
-    corr_outer: list[str] = []
-    rest: list[dict] = []
-    residual_parts: list[str] = []
-    extra_map: dict[str, str] = {}  # inner col -> reserved __sjr_* alias
-
-    def rename(ref: dict) -> str:
-        if scope.side(ref) == "outer":
-            # outer-scoped: bare name resolves against the scan
-            return ref["column_names"][-1]
-        col = ref["column_names"][-1]
-        if col not in extra_map:
-            extra_map[col] = f"__sjr_{len(extra_map)}"
-        return extra_map[col]
-
-    residual_outer: set[str] = set()
-    for c in _conjuncts(wc):
-        pair = _corr_pair(c, scope)
-        if pair is not None:
-            corr_inner.append(pair[0])
-            corr_outer.append(pair[1])
-            continue
-        outer_refs = sorted(scope.outer_names(c))
-        if not outer_refs:
-            rest.append(c)  # inner-only: stays with the key-set filter
-            continue
-        residual_outer.update(outer_refs)
-        # MIXED-scope conjunct (round 8): a non-equi residual — becomes
-        # part of the join CONDITION, with inner refs rebased onto the
-        # __sjr_* aliases the inner spec exposes. Outer refs must be
-        # star-resolvable (they read the outer scan directly).
-        if all_cols is not None:
-            bad = sorted(set(outer_refs) - all_cols)
-            if bad:
-                raise SQLFrontError(
-                    f"EXISTS residual references unknown columns {bad}"
-                )
-        residual_parts.append(render(_rewrite_inner_refs(c, rename)))
+    split = _split_corr_conjuncts_res(
+        inner_node.get("where_clause"), scope, "EXISTS", star
+    )
+    corr_inner, corr_outer, rest, residuals = split
+    if residuals and or_tag is not None:
+        return _exists_bundle(
+            neg, or_tag, inner_node, scope, tables, pairs, split,
+            time_col, fact_table, star,
+        )
     if not corr_inner:
-        if not residual_parts:
-            raise SQLFrontError("uncorrelated EXISTS (constant predicate)")
         # residual-only correlation (round 11): no equi anchor — the join
         # condition is pure theta. A theta join over an arbitrary inner is
         # never acceptable at scale (unbounded per-row fan-out), but a
@@ -3681,26 +3551,20 @@ def _parse_exists_arm(
         # correct). Only a single NON-fact base table qualifies: proving
         # a filtered fact tiny would itself cost a fact scan.
         _require_single_dim_inner("EXISTS", tables, pairs, fact_table)
-        inner = _build_inner_keyset(
-            inner_node,
-            [],
-            tables,
-            pairs,
-            _and_node(rest),
-            time_col,
-            fact_table,
-            star,
-            extra=[(col, alias) for col, alias in extra_map.items()],
-        )
-        return ir.SemiJoinArm(
-            inner=inner,
-            outer_keys=[],
-            inner_keys=[],
-            anti=neg,
-            residual_sql=" AND ".join(f"({p})" for p in residual_parts),
-            residual_outer_cols=sorted(residual_outer),
-            broadcast_theta=True,
-        )
+    extra_map: dict[str, str] = {}  # inner col -> reserved __sjr_* alias
+
+    def rename(ref: dict) -> str:
+        if scope.side(ref) == "outer":
+            # outer-scoped: bare name resolves against the scan
+            return ref["column_names"][-1]
+        col = ref["column_names"][-1]
+        if col not in extra_map:
+            extra_map[col] = f"__sjr_{len(extra_map)}"
+        return extra_map[col]
+
+    residual_parts = [
+        render(_rewrite_inner_refs(c, rename)) for c in residuals
+    ]
     # EXISTS ignores the select list entirely (SELECT 1 / * / anything)
     inner = _build_inner_keyset(
         inner_node,
@@ -3719,7 +3583,8 @@ def _parse_exists_arm(
         inner_keys=corr_inner,
         anti=neg,
         residual_sql=" AND ".join(f"({p})" for p in residual_parts),
-        residual_outer_cols=sorted(residual_outer),
+        residual_outer_cols=sorted(scope.outer_names(residuals)),
+        broadcast_theta=not corr_inner,
     )
 
 
@@ -3805,7 +3670,6 @@ def _parse_scalar_cond(
             scope,
             tables,
             pairs,
-            all_cols,
             time_col,
             fact_table,
             star,
@@ -3868,148 +3732,48 @@ def _parse_corr_scalar(
     scope: _SubqScope,
     tables: list[str],
     pairs: list[tuple[str, str]],
-    all_cols,
     time_col: str | None,
     fact_table: str | None,
     star: StarSchema | None,
 ) -> "ir.CorrScalarCond":
     """Equi-correlated scalar aggregate -> ir.CorrScalarCond (the TPC-H
     Q17 decorrelation): the WHERE splits into equi-correlation pairs and
-    inner-only filters (anything mixed/non-equi declines); each aggregate
-    LEAF of the select item is computed per correlation key and the item
-    re-renders over the leaf aliases (count-class leaves COALESCE to 0 so
-    empty groups evaluate like the 1-row scalar they replace)."""
+    inner-only filters; each aggregate LEAF of the select item is computed
+    per correlation key and the item re-renders over the leaf aliases
+    (count-class leaves COALESCE to 0 so empty groups evaluate like the
+    1-row scalar they replace)."""
     inner_node = (s.get("subquery") or {}).get("node") or {}
     sel = inner_node.get("select_list") or []
-    wc = inner_node.get("where_clause")
-    corr_inner, corr_outer, rest, residuals = _split_corr_conjuncts_res(
-        wc, scope, "scalar subquery", require_anchor=False
+    # correlation living only in the select item declines in the split
+    # (_scalar_leaves declines outer refs inside aggregate arguments;
+    # nothing else can anchor the decorrelation)
+    split = _split_corr_conjuncts_res(
+        inner_node.get("where_clause"), scope, "scalar", star
     )
-    if not corr_inner and not residuals:
-        # correlation lives only in the select item — rewrite() below
-        # declines outer refs inside aggregate arguments; nothing else
-        # can anchor the decorrelation
-        raise SQLFrontError(
-            "correlated scalar subquery without an equi-correlation"
-            " conjunct"
-        )
-    if all_cols is not None:
-        bad = sorted(set(corr_outer) - all_cols)
-        if bad:
-            raise SQLFrontError(
-                f"correlation references unknown outer columns {bad}"
-            )
-    # rewrite the select item: each aggregate leaf -> a per-group column
-    import copy
-
-    leaves: list[tuple[dict, str]] = []
-    has_count = False
-
-    def rewrite(n):
-        nonlocal has_count
-        if isinstance(n, dict):
-            fn = (n.get("function_name") or "").lower()
-            if n.get("class") == "FUNCTION" and fn in _AGG_FNS:
-                for ref in _refs_of([n.get("children"), n.get("filter")]):
-                    if scope.side(ref) != "inner":
-                        raise SQLFrontError(
-                            "outer reference inside aggregate argument"
-                        )
-                alias = f"__ca{idx}_{len(leaves)}"
-                leaves.append((copy.deepcopy(n), alias))
-                ph = _colref(alias)
-                if fn in _COUNT_CLASS_FNS:
-                    has_count = True
-                    return _coalesce0(ph)
-                return ph
-            if n.get("class") == "COLUMN_REF":
-                # a bare column in an ungrouped select item has no
-                # single-value guarantee — decline whatever the scope
-                raise SQLFrontError(
-                    "non-aggregate column in scalar select item"
-                )
-            return {k: rewrite(v) for k, v in n.items()}
-        if isinstance(n, list):
-            return [rewrite(v) for v in n]
-        return n
-
-    item = copy.deepcopy(sel[0])
-    item["alias"] = ""
-    value_sql = render(rewrite(item))
-    keys = list(dict.fromkeys(corr_inner))
+    corr_inner, corr_outer, rest, residuals = split
+    value_ast, leaves, has_count = _scalar_leaves(sel[0], scope, idx)
+    fields = dict(
+        value_sql=render(value_ast),
+        op=op,
+        outer_sql=render(other),
+        outer_columns=sorted(_columns_of(other)),
+        flip=flip,
+        left_join=has_count,
+    )
     if residuals:
-        # round 11: NON-EQUI residual conjuncts — the per-key GROUP BY
-        # cannot absorb an outer-dependent filter, so the inner stays row
-        # grain and the server recomputes the leaves per DISTINCT
-        # (correlation + residual outer column) tuple after the
-        # residual-conditioned join (CorrScalarCond.row_grain — the same
-        # machinery HAVING uses, with the row-grain scan as the frame;
-        # Spark itself serves the shape through its own decorrelation, so
-        # this is acceleration, not new surface). Leaves must be plain
-        # (FILTER/DISTINCT decline) and of a recomputable family.
-        inner_alias: dict = {}
-        res_sqls = [
-            _rewrite_residual(c, scope, lambda name: name, inner_alias, idx)
-            for c in residuals
-        ]
-        rfcols = sorted({
-            ref["column_names"][-1]
-            for r in residuals
-            for ref in _refs_of(r)
-            if scope.side(ref) == "outer"
-        })
-        if all_cols is not None:
-            bad = sorted(set(rfcols) - all_cols)
-            if bad:
-                raise SQLFrontError(
-                    f"residual references unknown outer columns {bad}"
-                )
-        leaf_aggs = []
-        for ast, alias in leaves:
-            fn = (ast.get("function_name") or "").lower()
-            if ast.get("filter") or ast.get("distinct"):
-                raise SQLFrontError(
-                    "FILTER/DISTINCT aggregate with residual correlation"
-                )
-            ch = ast.get("children") or []
-            if fn == "count" and not ch:
-                fn = "count_star"
-            if fn == "count_star":
-                leaf_aggs.append([fn, None, alias])
-                continue
-            if fn not in ("count", "sum", "min", "max", "avg") or len(ch) != 1:
-                raise SQLFrontError(
-                    f"aggregate {fn} with residual correlation"
-                )
-            arg = _rewrite_residual(
-                dict(ch[0]), scope, lambda name: name, inner_alias, idx
-            )
-            leaf_aggs.append([fn, arg, alias])
-        theta = not corr_inner
-        # theta = the rate-card idiom `(SELECT MAX(rate) FROM rates
-        # WHERE threshold <= o.amt)`: no equi anchor, proof-gated
-        inner = _residual_rows_inner(
-            "correlated scalar", inner_node, keys, inner_alias,
-            tables, pairs, rest, time_col, fact_table, star,
+        # round 11: NON-EQUI residual conjuncts ride the row-grain bundle
+        # with the row-grain scan as the frame (Spark itself serves the
+        # shape through its own decorrelation, so this is acceleration,
+        # not new surface). Residual-only = the rate-card idiom
+        # `(SELECT MAX(rate) FROM rates WHERE threshold <= o.amt)`: no
+        # equi anchor, proof-gated.
+        return _residual_bundle(
+            "correlated scalar", idx,
+            lambda arg: _row_grain_leaf_aggs(leaves, arg),
+            inner_node, scope, tables, pairs, split,
+            time_col, fact_table, star, **fields,
         )
-        return ir.CorrScalarCond(
-            inner=inner,
-            inner_keys=keys,
-            pairs=[[o, i] for i, o in zip(corr_inner, corr_outer)],
-            leaf_cols=[a for _, a in leaves],
-            value_sql=value_sql,
-            op=op,
-            outer_sql=render(other),
-            outer_columns=sorted(_columns_of(other)),
-            flip=flip,
-            left_join=has_count,
-            row_grain=True,
-            residual_sql=" AND ".join(res_sqls),
-            residual_frame_cols=rfcols,
-            residual_cols=sorted(inner_alias.values()),
-            leaf_aggs=leaf_aggs,
-            broadcast_theta=theta,
-        )
+    keys = list(dict.fromkeys(corr_inner))
     inner = _build_inner_aggs(
         inner_node,
         leaves,
@@ -4026,12 +3790,7 @@ def _parse_corr_scalar(
         inner_keys=keys,
         pairs=[[o, i] for i, o in zip(corr_inner, corr_outer)],
         leaf_cols=[a for _, a in leaves],
-        value_sql=value_sql,
-        op=op,
-        outer_sql=render(other),
-        outer_columns=sorted(_columns_of(other)),
-        flip=flip,
-        left_join=has_count,
+        **fields,
     )
 
 
@@ -4162,113 +3921,35 @@ def _extract_select_scalars(
                 "star carries no column lists: cannot verify scalar "
                 "correlation"
             )
-        wc1 = inner_node.get("where_clause")
         tag = f"s{len(having_corr)}"
-        corr_inner, corr_outer, rest1, residuals1 = (
-            _split_corr_conjuncts_res(
-                wc1, scope, "select-list scalar", require_anchor=False
-            )
+        # correlation living only in the select item declines in the
+        # split (_scalar_leaves declines outer refs inside aggregate
+        # arguments)
+        split = _split_corr_conjuncts_res(
+            inner_node.get("where_clause"), scope, "select-list scalar", star
         )
-        if not corr_inner and not residuals1:
-            # correlation lives only in the select item — leaf_rw below
-            # declines outer refs inside aggregate arguments
-            raise SQLFrontError(
-                "correlated select-list scalar without an"
-                " equi-correlation conjunct"
-            )
-        leaves: list = []
-
-        def leaf_rw(x):
-            if isinstance(x, dict):
-                fn = (x.get("function_name") or "").lower()
-                if x.get("class") == "FUNCTION" and fn in _AGG_FNS:
-                    for ref in _refs_of([x.get("children"), x.get("filter")]):
-                        if scope.side(ref) != "inner":
-                            raise SQLFrontError(
-                                "outer reference inside aggregate argument"
-                            )
-                    al = f"__ca{tag}_{len(leaves)}"
-                    leaves.append((copy.deepcopy(x), al))
-                    ph = _colref(al)
-                    return _coalesce0(ph) if fn in _COUNT_CLASS_FNS else ph
-                if x.get("class") == "COLUMN_REF":
-                    raise SQLFrontError(
-                        "non-aggregate column in scalar select item"
-                    )
-                return {k: leaf_rw(v) for k, v in x.items()}
-            if isinstance(x, list):
-                return [leaf_rw(v) for v in x]
-            return x
-
-        item1 = copy.deepcopy(sel1[0])
-        item1["alias"] = ""
-        value_ast = leaf_rw(item1)
-        cc_pairs = [
-            [_frame_src(o), i] for i, o in zip(corr_inner, corr_outer)
-        ]
-        keys = list(dict.fromkeys(corr_inner))
+        corr_inner, corr_outer, rest1, residuals1 = split
+        value_ast, leaves, _ = _scalar_leaves(sel1[0], scope, tag)
+        fields = dict(cond_sql="", standalone=False, left_join=True)
         if residuals1:
-            inner_alias: dict = {}
-            res_sqls = [
-                _rewrite_residual(c, scope, _frame_src, inner_alias, tag)
-                for c in residuals1
-            ]
-            rfcols = sorted({
-                _frame_src(ref["column_names"][-1])
-                for r in residuals1
-                for ref in _refs_of(r)
-                if scope.side(ref) == "outer"
-            })
-            leaf_aggs = []
-            for ast, al in leaves:
-                fn = (ast.get("function_name") or "").lower()
-                if ast.get("filter") or ast.get("distinct"):
-                    raise SQLFrontError(
-                        "FILTER/DISTINCT aggregate with residual correlation"
-                    )
-                ch = ast.get("children") or []
-                if fn == "count" and not ch:
-                    fn = "count_star"
-                if fn == "count_star":
-                    leaf_aggs.append([fn, None, al])
-                    continue
-                if fn not in ("count", "sum", "min", "max", "avg") or (
-                    len(ch) != 1
-                ):
-                    raise SQLFrontError(
-                        f"aggregate {fn} with residual correlation"
-                    )
-                leaf_aggs.append([
-                    fn,
-                    _rewrite_residual(
-                        dict(ch[0]), scope, _frame_src, inner_alias, tag
-                    ),
-                    al,
-                ])
-            theta = not corr_inner
-            inner = _residual_rows_inner(
-                "select-list scalar", inner_node, keys, inner_alias,
-                tables, pairs, rest1, time_col, fact_table, star,
-            )
-            having_corr.append(ir.CorrScalarCond(
-                inner=inner, inner_keys=keys, pairs=cc_pairs,
-                leaf_cols=[a for _, a in leaves],
-                cond_sql="", standalone=False, left_join=True,
-                row_grain=True, residual_sql=" AND ".join(res_sqls),
-                residual_frame_cols=rfcols,
-                residual_cols=sorted(inner_alias.values()),
-                leaf_aggs=leaf_aggs,
-                broadcast_theta=theta,
+            having_corr.append(_residual_bundle(
+                "select-list scalar", tag,
+                lambda arg: _row_grain_leaf_aggs(leaves, arg),
+                inner_node, scope, tables, pairs, split,
+                time_col, fact_table, star, frame_col=_frame_src, **fields,
             ))
         else:
+            keys = list(dict.fromkeys(corr_inner))
             inner = _build_inner_aggs(
                 inner_node, leaves, keys, tables, pairs,
                 _and_node(rest1), time_col, fact_table, star,
             )
             having_corr.append(ir.CorrScalarCond(
-                inner=inner, inner_keys=keys, pairs=cc_pairs,
-                leaf_cols=[a for _, a in leaves],
-                cond_sql="", standalone=False, left_join=True,
+                inner=inner, inner_keys=keys,
+                pairs=[
+                    [_frame_src(o), i] for i, o in zip(corr_inner, corr_outer)
+                ],
+                leaf_cols=[a for _, a in leaves], **fields,
             ))
         return value_ast
 
@@ -4419,6 +4100,11 @@ def _extract_select_scalars(
                 "HAVING correlation on an unselected column"
             )
 
+        # one split (and one run of its guards) for every correlated form
+        split = (
+            _split_corr_conjuncts_res(wc2, scope, "HAVING", star)
+            if correlated else None
+        )
         if sq == "EXISTS":
             if correlated:
                 # round 9: equi-correlated [NOT] EXISTS in HAVING — the
@@ -4427,79 +4113,16 @@ def _extract_select_scalars(
                 # marker LEFT join on the DISTINCT correlation-key set
                 # (distinct on ALL join keys — no duplication); inner-only
                 # conjuncts stay in the key set. Round 11 late: residual
-                # conjuncts (incl. residual-ONLY, no anchor) ride a
-                # count_star row-grain bundle instead — EXISTS is exactly
-                # `count of matched rows > 0`, NOT EXISTS `= 0`; the
-                # anchor-free form takes the broadcast-theta proof path.
-                corr_inner, corr_outer, rest, residuals = (
-                    _split_corr_conjuncts_res(
-                        wc2, scope, "HAVING EXISTS", require_anchor=False
-                    )
-                )
-                if not corr_inner and not residuals:
-                    raise SQLFrontError(
-                        "correlated HAVING EXISTS without an"
-                        " equi-correlation conjunct"
-                    )
-                if any(_contains_agg(c) for c in rest + residuals):
-                    # an OUTER aggregate inside the subquery's WHERE has
-                    # no column to bind through the frame map — decline
-                    # at parse (DuckDB can bind the shape; Spark's
-                    # fallback errors, and the engine's error surfacing
-                    # honestly beats a lowering-time crash)
-                    raise SQLFrontError(
-                        "aggregate inside a HAVING EXISTS subquery filter"
-                    )
-                all_cols = _star_columns(star)
-                if all_cols is not None:
-                    bad = sorted(set(corr_outer) - all_cols)
-                    if bad:
-                        raise SQLFrontError(
-                            f"correlation references unknown columns {bad}"
-                        )
+                # conjuncts (incl. residual-ONLY, no anchor) ride the
+                # row-grain count bundle instead.
+                corr_inner, corr_outer, rest, residuals = split
                 if residuals:
-                    tagi = f"h{len(having_corr)}"
-                    inner_alias: dict = {}
-                    res_sqls = [
-                        _rewrite_residual(c, scope, frame_col, inner_alias, tagi)
-                        for c in residuals
-                    ]
-                    rfcols = sorted({
-                        frame_col(ref["column_names"][-1])
-                        for r in residuals
-                        for ref in _refs_of(r)
-                        if scope.side(ref) == "outer"
-                    })
-                    keys = list(dict.fromkeys(corr_inner))
-                    a0 = f"__ca{tagi}_0"
-                    theta = not corr_inner
-                    inner2 = _residual_rows_inner(
-                        "EXISTS", inner_node, keys, inner_alias,
-                        tables, pairs, rest, time_col, fact_table, star,
-                    )
-                    cond = (
-                        f"(coalesce(`{a0}`, 0) = 0)" if negated
-                        else f"(coalesce(`{a0}`, 0) > 0)"
-                    )
-                    having_corr.append(ir.CorrScalarCond(
-                        inner=inner2,
-                        inner_keys=keys,
-                        pairs=[
-                            [frame_col(o), i]
-                            for i, o in zip(corr_inner, corr_outer)
-                        ],
-                        leaf_cols=[a0],
-                        cond_sql=cond,
-                        left_join=True,
-                        standalone=False,
-                        row_grain=True,
-                        residual_sql=" AND ".join(res_sqls),
-                        residual_frame_cols=rfcols,
-                        residual_cols=sorted(inner_alias.values()),
-                        leaf_aggs=[["count_star", None, a0]],
-                        broadcast_theta=theta,
+                    having_corr.append(_exists_bundle(
+                        negated, f"h{len(having_corr)}", inner_node, scope,
+                        tables, pairs, split, time_col, fact_table, star,
+                        frame_col=frame_col,
                     ))
-                    return cond
+                    return having_corr[-1].cond_sql
                 if len(set(corr_inner)) != len(corr_inner):
                     # one inner key equated to several outer columns: the
                     # deduped key set cannot carry both equalities
@@ -4544,47 +4167,25 @@ def _extract_select_scalars(
             # round 9: equi-correlated IN in HAVING — exactly EXISTS with
             # the IN equality as one more pair; the lhs must itself live
             # on the frame (selected group column / aggregate leaf)
-            child = s2.get("child") or {}
-            child2 = rewrite(copy.deepcopy(child), allow_cols=True)
+            child2 = rewrite(
+                copy.deepcopy(s2.get("child") or {}), allow_cols=True
+            )
             lhs_sql = render(child2)
             if len(sel2) != 1:
                 raise SQLFrontError("HAVING IN subquery must select one item")
-            corr_inner, corr_outer, rest, residuals = (
-                _split_corr_conjuncts_res(
-                    wc2, scope, "HAVING IN", require_anchor=False
-                )
-            )
-            if not corr_inner and not residuals:
-                raise SQLFrontError(
-                    "correlated HAVING IN without an equi-correlation"
-                    " conjunct"
-                )
-            all_cols = _star_columns(star)
-            if all_cols is not None:
-                bad = sorted(set(corr_outer) - all_cols)
-                if bad:
-                    raise SQLFrontError(
-                        f"correlation references unknown columns {bad}"
-                    )
+            corr_inner, corr_outer, rest, residuals = split
             if residuals:
                 # round 11: residual conjuncts take the row-grain bundle
                 # (the marker arm's key-set dedup cannot carry them)
-                for ref in _refs_of(sel2[0]):
-                    if scope.side(ref) != "inner":
-                        raise SQLFrontError(
-                            "HAVING IN selects an outer column"
-                        )
-                cc, cond = _having_corr_in_residual(
-                    sel2[0], False, f"h{len(having_corr)}", lhs_sql,
-                    sorted({
+                having_corr.append(_in_bundle(
+                    sel2[0], False, lhs_sql, f"h{len(having_corr)}",
+                    inner_node, scope, tables, pairs, split,
+                    time_col, fact_table, star, frame_col=frame_col,
+                    lhs_frame_cols=sorted({
                         r["column_names"][-1] for r in _refs_of(child2)
                     }),
-                    inner_node, scope, tables, pairs,
-                    corr_inner, corr_outer, rest, residuals,
-                    frame_col, time_col, fact_table, star,
-                )
-                having_corr.append(cc)
-                return cond
+                ))
+                return having_corr[-1].cond_sql
             if sel2[0].get("class") != "COLUMN_REF" or scope.side(
                 sel2[0]
             ) != "inner":
@@ -4625,16 +4226,19 @@ def _extract_select_scalars(
             # column) tuple after a residual-conditioned row join
             # (CorrScalarCond.row_grain), so frame rows can never
             # duplicate. [NOT] IN with residuals rides the same bundle
-            # (_having_corr_in_residual): the IN equality becomes a
-            # counted leaf inside the bundle aggregation.
+            # (_in_bundle): the IN equality becomes a counted leaf inside
+            # the bundle aggregation.
             if sq != "ANY":
                 raise SQLFrontError(f"HAVING subquery type {sq}")
-            child = s2.get("child") or {}
-            lhs_sql = render(rewrite(copy.deepcopy(child), allow_cols=True))
+            child2 = rewrite(
+                copy.deepcopy(s2.get("child") or {}), allow_cols=True
+            )
+            lhs_sql = render(child2)
             if len(sel2) != 1:
                 raise SQLFrontError("HAVING subquery must select one item")
             item = dict(sel2[0])
             item["alias"] = ""
+            corr_inner, corr_outer, rest, residuals = split
             if s2.get("comparison_type") == "COMPARE_EQUAL":
                 # correlated NOT IN (negated =ANY; the positive form was
                 # served by the membership-arm branch above): membership
@@ -4662,41 +4266,20 @@ def _extract_select_scalars(
                     item2["alias"] = ""
                     key_items2 = [(item2, in_key)]
                     key_node2 = dict(item2)
-                corr_inner, corr_outer, rest, residuals = (
-                    _split_corr_conjuncts_res(
-                        wc2, scope, "HAVING NOT IN", require_anchor=False
-                    )
-                )
-                if not corr_inner and not residuals:
-                    raise SQLFrontError(
-                        "correlated HAVING NOT IN without an"
-                        " equi-correlation conjunct"
-                    )
-                all_cols = _star_columns(star)
-                if all_cols is not None:
-                    bad = sorted(set(corr_outer) - all_cols)
-                    if bad:
-                        raise SQLFrontError(
-                            f"correlation references unknown columns {bad}"
-                        )
                 if residuals:
                     # round 11: residual NOT IN rides the row-grain
                     # bundle with the exact three-valued guard (the
                     # marker-arm + count-guard pairing cannot carry a
                     # residual through its deduped key set)
-                    child3 = rewrite(copy.deepcopy(child), allow_cols=True)
-                    cc, cond = _having_corr_in_residual(
-                        sel2[0], True, f"h{len(having_corr)}",
-                        render(child3),
-                        sorted({
-                            r["column_names"][-1] for r in _refs_of(child3)
+                    having_corr.append(_in_bundle(
+                        sel2[0], True, lhs_sql, f"h{len(having_corr)}",
+                        inner_node, scope, tables, pairs, split,
+                        time_col, fact_table, star, frame_col=frame_col,
+                        lhs_frame_cols=sorted({
+                            r["column_names"][-1] for r in _refs_of(child2)
                         }),
-                        inner_node, scope, tables, pairs,
-                        corr_inner, corr_outer, rest, residuals,
-                        frame_col, time_col, fact_table, star,
-                    )
-                    having_corr.append(cc)
-                    return cond
+                    ))
+                    return having_corr[-1].cond_sql
                 if in_key in corr_inner or len(set(corr_inner)) != len(
                     corr_inner
                 ):
@@ -4752,14 +4335,9 @@ def _extract_select_scalars(
                 )
             cc = _parse_corr_quantified(
                 s2, negated, f"h{len(having_corr)}", item, lhs_sql,
-                scope, tables, pairs, _star_columns(star),
-                time_col, fact_table, star,
-                # round 11: HAVING serving can re-aggregate after a
-                # residual-conditioned join, so non-equi residual
-                # correlation is admitted here (and only here)
+                scope, tables, pairs, split, time_col, fact_table, star,
                 frame_col=frame_col,
             )
-            cc.pairs = [[frame_col(o), k] for o, k in cc.pairs]
             if not cc.cond_sql:
                 # positive-ANY op form: inline in post_filters, so force
                 # the LEFT-join + condition form (an inner join would
@@ -4947,20 +4525,15 @@ def _parse_semijoin(
         the bundle pairs, NOT IN / quantified keep their three-valued
         guard leaves — one bundle row per tuple, so no duplication."""
         sq = s2.get("subquery_type")
+        tag = f"o{len(corr_scalars)}"
         if sq == "EXISTS":
             arm = _parse_exists_arm(
-                s2, False, time_col, fact_table, star, outer_quals
+                s2, negated, time_col, fact_table, star, outer_quals, tag
             )
-            if arm.residual_sql:
-                # round 11 late: residual-carrying EXISTS (anchored or
-                # theta) composes under OR as a count bundle — one
-                # bundle row per tuple, no duplication
-                cc, cond = _or_exists_count_bundle(
-                    s2, negated, f"o{len(corr_scalars)}",
-                    time_col, fact_table, star, outer_quals,
-                )
-                corr_scalars.append(cc)
-                return cond
+            if isinstance(arm, ir.CorrScalarCond):
+                corr_scalars.append(arm)
+                return arm.cond_sql
+            arm.anti = False  # marker mode: the flag carries the polarity
             arm.marker = f"__m{len(arms)}"
             arms.append(arm)
             if negated:
@@ -4980,52 +4553,11 @@ def _parse_semijoin(
                 fact_table,
                 star,
                 outer_quals,
+                tag,
             )
-            if arm.residual_sql:
-                # round 11 late: residual-carrying [NOT] IN under OR —
-                # the HAVING-side row-grain bundle with the scan as the
-                # frame (the IN equality is a counted leaf; NOT IN keeps
-                # exact three-valued semantics in cond_sql)
-                inner_node2 = (s2.get("subquery") or {}).get("node") or {}
-                sel1 = inner_node2.get("select_list") or []
-                child2 = s2.get("child") or {}
-                if child2.get("class") != "COLUMN_REF" or len(sel1) != 1:
-                    # row-value IN (the child is a row() FUNCTION node,
-                    # the select list has >= 2 items): the bundle models
-                    # a scalar lhs only — decline to the fallback (this
-                    # was a KeyError crash, review finding)
-                    raise SQLFrontError(
-                        "row-value IN with a residual under OR"
-                    )
-                tables2, pairs2, _ic, scope2 = _subquery_scope(
-                    inner_node2, fact_table, star, outer_quals
-                )
-                for ref in _refs_of(sel1[0]):
-                    if scope2.side(ref) != "inner":
-                        raise SQLFrontError(
-                            "IN subquery selects an outer column"
-                        )
-                ci2, co2, rest2, residuals2 = _split_corr_conjuncts_res(
-                    inner_node2.get("where_clause"), scope2, "IN",
-                    require_anchor=False,
-                )
-                if not negated and sel1[0].get("class") == "COLUMN_REF":
-                    # positive IN: the IN equality is an exact equi
-                    # anchor (a NULL key never matches = non-membership),
-                    # so the bundle hash-joins on it instead of paying
-                    # the theta proof; the counted item leaf stays
-                    # (redundant within the keyed group, still exact)
-                    ci2 = ci2 + [sel1[0]["column_names"][-1]]
-                    co2 = co2 + [child2["column_names"][-1]]
-                cc, cond = _having_corr_in_residual(
-                    sel1[0], negated, f"o{len(corr_scalars)}",
-                    render(child2), sorted(_columns_of(child2)),
-                    inner_node2, scope2, tables2, pairs2,
-                    ci2, co2, rest2, residuals2,
-                    lambda n: n, time_col, fact_table, star,
-                )
-                corr_scalars.append(cc)
-                return cond
+            if isinstance(arm, ir.CorrScalarCond):
+                corr_scalars.append(arm)
+                return arm.cond_sql
             arm.anti = False  # marker mode: the flag carries the polarity
             arm.marker = f"__m{len(arms)}"
             arms.append(arm)

@@ -681,6 +681,56 @@ def test_having_exists_aggregate_filter_declines(ctx):
         ).collect()
 
 
+@pytest.mark.parametrize(
+    "sql, reason",
+    [
+        # select-list scalar: an OUTER aggregate inside its residual
+        (
+            """SELECT l_returnflag AS flag, COUNT(*) AS n,
+                      (SELECT COUNT(*) FROM lineitem l2
+                       WHERE l2.l_returnflag = lineitem.l_returnflag
+                         AND l2.l_linestatus < MAX(lineitem.l_returnflag))
+                      AS c
+               FROM lineitem GROUP BY l_returnflag""",
+            "aggregate inside the select-list scalar subquery filter",
+        ),
+        # WHERE scalar: the same gap
+        (
+            """SELECT COUNT(*) FROM lineitem WHERE l_quantity >
+                 (SELECT MAX(p_size) FROM part
+                  WHERE p_partkey = lineitem.l_partkey
+                    AND p_retailprice < SUM(lineitem.l_extendedprice))""",
+            "aggregate inside the scalar subquery filter",
+        ),
+        # quantified comparison under OR: unknown outer residual column
+        (
+            """SELECT COUNT(*) FROM lineitem WHERE l_tax > 0.07
+                  OR l_quantity > ANY
+                 (SELECT p_size FROM part
+                  WHERE p_partkey = lineitem.l_partkey
+                    AND p_retailprice < lineitem.l_bogus)""",
+            "references unknown outer columns ['l_bogus']",
+        ),
+    ],
+    ids=["select_scalar_outer_agg", "where_scalar_outer_agg",
+         "or_quantified_unknown_column"],
+)
+def test_residual_bundle_guards_decline(ctx, sql, reason):
+    """The row-grain residual bundle's shared guards decline these shapes
+    at parse (once each built an IR that crashed inside Catalyst without
+    a query record). Spark cannot run them either, so the call still
+    raises, but through the fallback: one sparksql record whose decision
+    names the reason, which Spark's error also carries as a note."""
+    before = len(ctx.query_history)
+    with pytest.raises(Exception) as ei:
+        ctx.sql(sql).collect()
+    assert len(ctx.query_history) == before + 1
+    rec = ctx.query_history[-1]
+    assert rec.backing == "sparksql"
+    assert reason in rec.decision, rec.decision
+    assert any(reason in n for n in getattr(ei.value, "__notes__", []))
+
+
 def test_having_corr_scalar_comparison(ctx, duck):
     """A correlated scalar inside a HAVING comparison (not quantified —
     plain >) serves through the same inlining: the rendered post-filter

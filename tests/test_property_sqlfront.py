@@ -11,6 +11,7 @@ counterexample with the offending SQL attached.
 import datetime
 import decimal
 import math
+from collections import Counter
 
 import duckdb
 import pytest
@@ -311,13 +312,37 @@ def setop_sqls(draw):
     )
 
 
+# every draw kind semijoin_sqls can take (WHERE arms, HAVING clauses,
+# select-list scalars). The semijoin fuzz runs one stratum per kind, which
+# pins that kind and draws everything else: a random draw over 25 kinds
+# left some kinds undrawn in about half of the 100-example runs. Every
+# kind used is counted, and a kind the fuzz never reached fails
+# test_semijoin_draw_kinds_all_ran (a sentinel once silently replaced
+# every correlated-HAVING draw, so that coverage never ran).
+ARM_KINDS = ["in_dim", "in_fact", "exists", "not_exists", "scalar",
+             "not_in", "corr_in", "quant", "corr_scalar",
+             "corr_not_in", "corr_quant"]
+HAVING_KINDS = ["none", "scalar", "hin", "hnot_in", "hexists", "hquant",
+                "hin_or", "hcorr_exists", "hcorr_quant", "hcorr_not_in",
+                "htheta"]
+SELECT_KINDS = ["none", "share", "corr_residual"]
+STRATA = (
+    ["arm:" + k for k in ARM_KINDS]
+    + ["having:" + k for k in HAVING_KINDS]
+    + ["select:" + k for k in SELECT_KINDS]
+)
+DRAWN: Counter = Counter()
+
+
 @st.composite
-def semijoin_sqls(draw):
+def semijoin_sqls(draw, stratum=None):
     """Random WHERE-subquery statements (round-8 surface): 1-2 conjunct
     arms drawn from {uncorrelated IN over a dim table, uncorrelated IN
     over the fact, [NOT] EXISTS equi-correlated on a dim table}, composed
     with ordinary predicates. Aggregates stay exact-valued (COUNT/MIN/MAX)
-    so row sets compare exactly."""
+    so row sets compare exactly. ``stratum`` (one of STRATA) pins the
+    first arm's, the HAVING clause's or the select-list scalar's kind."""
+    pinned = dict([stratum.split(":")]) if stratum else {}
     gcols = draw(st.lists(dim, min_size=1, max_size=2, unique=True))
     m = draw(st.sampled_from(METRICS))
     agg = draw(
@@ -341,11 +366,8 @@ def semijoin_sqls(draw):
         # variants: theta arms carry a residual, which the OR marker
         # composition declines (match sets are not distinct per row)
         if kind is None:
-            kind = draw(st.sampled_from(
-                ["in_dim", "in_fact", "exists", "not_exists", "scalar",
-                 "not_in", "corr_in", "quant", "corr_scalar",
-                 "corr_not_in", "corr_quant"]
-            ))
+            kind = draw(st.sampled_from(ARM_KINDS))
+        DRAWN["arm:" + kind] += 1
         if kind == "corr_not_in":
             # correlated NOT IN: multi-pair anti arm + per-group guard;
             # the CASE variant plants NULL members in SOME groups only
@@ -525,7 +547,8 @@ def semijoin_sqls(draw):
             f"WHERE o_orderkey = l_orderkey AND {resid})"
         )
 
-    conj = [arm() for _ in range(draw(st.integers(1, 2)))]
+    conj = [arm(pinned.get("arm"))]
+    conj += [arm() for _ in range(draw(st.integers(0, 1)))]
     if draw(st.booleans()):
         # OR-composed conjunct (marker joins / inline conditions). Only
         # kinds guaranteed residual-free are safe under OR for ARMS (a
@@ -545,7 +568,9 @@ def semijoin_sqls(draw):
         y = draw(st.integers(1995, 1998))
         conj.append(f"l_shipdate >= DATE '{y}-01-01'")
     sel = f"{', '.join(gcols)}, {agg} AS m0"
-    if draw(st.booleans()):
+    skind = pinned.get("select") or draw(st.sampled_from(SELECT_KINDS))
+    DRAWN["select:" + skind] += 1
+    if skind == "share":
         # SELECT-list scalar subquery (deferred projection) composed with
         # the WHERE subqueries; house-style DOUBLE casts keep the division
         # engine-exact (ir.ScalarSelectQuery typing note)
@@ -555,12 +580,35 @@ def semijoin_sqls(draw):
             " / (SELECT CAST(SUM(l_quantity) AS DOUBLE) FROM lineitem"
             f" WHERE l_quantity > {q2}) AS share"
         )
+    elif skind == "corr_residual":
+        # correlated SELECT-list scalar with a NON-EQUI residual over the
+        # selected group column: the row-grain bundle LEFT-joined onto
+        # the aggregated frame, anchored through the fact or residual-
+        # only (broadcast theta over the tiny part dim); the CASE makes
+        # the per-group match sets differ
+        g0 = gcols[0]
+        v = draw(st.sampled_from(DIMS[g0]))
+        if draw(st.booleans()):
+            fn = draw(st.sampled_from(
+                ["COUNT(*)", "MAX(l2.l_quantity)", "SUM(l2.l_quantity)"]
+            ))
+            th = draw(st.sampled_from([30, 46, 49]))
+            sub = (
+                f"SELECT {fn} FROM lineitem l2 WHERE l2.{g0} = lineitem.{g0}"
+                f" AND l2.l_quantity > CASE WHEN lineitem.{g0} = '{v}'"
+                f" THEN {th} ELSE {th - 10} END"
+            )
+        else:
+            sz = draw(st.integers(4, 9))
+            sub = (
+                f"SELECT MAX(p_size) FROM part WHERE p_size < {sz}"
+                f" AND p_size > CASE WHEN {g0} = '{v}' THEN 1 ELSE 3 END"
+            )
+        sel += f", CAST(({sub}) AS DOUBLE) AS cs"
     having = ""
-    if draw(st.booleans()):
-        hkind = draw(st.sampled_from(
-            ["scalar", "hin", "hnot_in", "hexists", "hquant", "hin_or",
-             "hcorr_exists", "hcorr_quant", "hcorr_not_in", "htheta"]
-        ))
+    hkind = pinned.get("having") or draw(st.sampled_from(HAVING_KINDS))
+    DRAWN["having:" + hkind] += 1
+    if hkind != "none":
         if hkind == "htheta":
             # round-11 late: residual-only quantified / [NOT] IN in
             # HAVING — the broadcast-theta row-grain bundle against the
@@ -833,14 +881,16 @@ def test_random_setops_match_duckdb(harness, sql):
     assert "sparksql" not in backing
 
 
+@pytest.mark.parametrize("stratum", STRATA)
 @settings(
-    max_examples=25 * _FUZZ_SCALE,
+    max_examples=max(2, 25 * _FUZZ_SCALE // len(STRATA)),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(sql=semijoin_sqls())
-def test_random_semijoins_match_duckdb(harness, sql):
+@given(data=st.data())
+def test_random_semijoins_match_duckdb(harness, stratum, data):
     ctx, con = harness
+    sql = data.draw(semijoin_sqls(stratum), label="sql")
     got = sorted(
         [tuple(_norm(x) for x in r) for r in ctx.sql(sql).collect()],
         key=_sort_key,
@@ -863,3 +913,14 @@ def test_random_semijoins_match_duckdb(harness, sql):
     assert backing.startswith("semijoin[") or backing.startswith(
         "scalarselect[semijoin["
     ), backing
+
+
+def test_semijoin_draw_kinds_all_ran():
+    """Runs after the fuzz tests above (file order): at scale 4 or more,
+    every semijoin_sqls draw kind must have been drawn at least once."""
+    if _FUZZ_SCALE < 4:
+        pytest.skip("draw-kind coverage is asserted at PYSPARKLINE_FUZZ_SCALE >= 4")
+    if not DRAWN:
+        pytest.skip("the semijoin fuzz did not run in this session")
+    missing = [k for k in STRATA if DRAWN[k] == 0]
+    assert not missing, f"never drawn: {missing} (counts: {dict(DRAWN)})"

@@ -445,6 +445,28 @@ def test_sql_theta_bad_k_rejected(ctx, k):
     assert ir.ThetaAgg("d", "o_orderstatus", k=1 << 26).k == 1 << 26
 
 
+def test_sql_fallback_error_carries_decline_reason(ctx):
+    """A statement Spark cannot run either keeps Spark's own error, with
+    the reason the rewrite declined attached as a note (engine-only
+    function names can never succeed in the fallback, so the decline
+    reason is the useful half of the answer)."""
+    from pyspark.errors import AnalysisException
+
+    before = len(ctx.query_history)
+    with pytest.raises(AnalysisException) as ei:
+        ctx.sql(
+            "SELECT theta_count_distinct(l_partkey, 100) AS d FROM lineitem"
+        )
+    assert len(ctx.query_history) == before + 1
+    assert ctx.query_history[-1].backing == "sparksql"
+    notes = getattr(ei.value, "__notes__", [])
+    assert any(
+        n.startswith("pysparkline declined the rewrite:")
+        and "power of two in [16, 2^26]" in n
+        for n in notes
+    ), notes
+
+
 def test_sql_theta_filtered(ctx, duck):
     """theta_count_distinct with FILTER — the SQL funnel shape."""
     sql = (
