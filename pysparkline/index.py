@@ -1221,6 +1221,20 @@ def _bucket_expr(time_col: str, granularity: str):
     return F.date_trunc(_TRUNC[granularity], F.col(time_col))
 
 
+def _file_key(p: str) -> str:
+    """A data file's path relative to the index root: its table directory,
+    the ``k=v`` partition directories under it and the file name
+    (``flat/__tpart=1996/part-0.parquet``). Manifests record the absolute
+    path at build time and listings give the current one; only this
+    suffix (scheme-free) still matches after the index is copied, moved
+    or read through a symlink."""
+    parts = p.split("/")
+    i = len(parts) - 2  # the file's own directory
+    while i > 0 and "=" in parts[i]:
+        i -= 1
+    return "/".join(parts[i:])
+
+
 class OlapIndex:
     """Built/loaded OLAP index rooted at a directory."""
 
@@ -1239,10 +1253,10 @@ class OlapIndex:
         self._file_manifest: dict[str, dict] | None = None
         self._file_manifest_tbl = None  # pyarrow Table twin of the dict
         self._input_files: list[str] | None = None
-        self._norm_paths: tuple[list, set] | None = None
+        self._path_keys: tuple[list, set] | None = None
         self._files_by_month = None
-        self._cube_manifests: dict[str, list | None] = {}
-        self._cube_files: dict[str, list[str]] = {}
+        self._aux_manifests: dict[tuple, list | None] = {}
+        self._aux_files: dict[tuple, list[str]] = {}
         self.epoch = 0  # bumped on invalidate(); versions compiled-plan caches
 
     # ------------------------------------------------------------------ build
@@ -2174,28 +2188,26 @@ class OlapIndex:
         return self._input_files
 
     def pruning_path_sets(self) -> tuple[list[str], set[str]]:
-        """(normalized flat listing, normalized manifested-file set) —
-        memoized per epoch. Path normalization over a 10^6-file listing
+        """(flat listing keys, manifested key set) under the index-relative
+        ``_file_key`` — memoized per epoch. Keying a 10^6-file listing
         costs ~0.5 s of driver time; paying it once per epoch instead of
         per query keeps repeat planning at set-lookup cost."""
-        if self._norm_paths is None:
-            from .planner import _norm_path  # lazy: planner imports index
-
-            listing = [_norm_path(p) for p in self.flat_input_files()]
+        if self._path_keys is None:
+            listing = [_file_key(p) for p in self.flat_input_files()]
             tbl = self.file_manifest_table()
             manifested = (
-                {_norm_path(p) for p in tbl.column("file").to_pylist()}
+                {_file_key(p) for p in tbl.column("file").to_pylist()}
                 if tbl is not None
                 else set()
             )
-            self._norm_paths = (listing, manifested)
-        return self._norm_paths
+            self._path_keys = (listing, manifested)
+        return self._path_keys
 
     def files_by_month(self):
         """The flat listing grouped by its ``__tpart=`` partition directory
         (memoized per epoch): ``(by_month, unmanifested_by_month)`` where
         ``by_month`` maps month string (or None for paths without a month
-        dir) -> (original paths, normalized paths) and
+        dir) -> (original paths, path keys) and
         ``unmanifested_by_month`` lists files absent from the manifest per
         month. ``by_month`` is None when no path carries a month dir
         (foreign layouts) — the planner then falls back to the full-listing
@@ -2225,28 +2237,44 @@ class OlapIndex:
             self._files_by_month = (by if any_month else None, unman)
         return self._files_by_month
 
-    def cube_file_manifest(self, name: str) -> list | None:
-        """Per-file stats rows for one cube (list of dicts: file, min__c /
-        max__c / set__c) — memoized per epoch; None when the cube predates
-        per-cube manifests. Cube manifests hold files × grain columns, so
-        full materialization is cheap (no vectorized pass needed)."""
-        if name not in self._cube_manifests:
-            info = self.manifest["cubes"][name].get("fileManifest")
-            if not info:
-                self._cube_manifests[name] = None
-            else:
+    def _aux_manifest(self, kind: str, name: str) -> list | None:
+        """Per-file stats rows (list of dicts: file, min__c / max__c /
+        set__c) of one cube or projection, ``kind`` naming its manifest
+        section ("cubes" or "projections") — memoized per epoch; None when
+        it predates per-file manifests. These manifests hold files × grain
+        columns, so full materialization is cheap (no vectorized pass
+        needed)."""
+        key = (kind, name)
+        if key not in self._aux_manifests:
+            info = self.manifest[kind][name].get("fileManifest")
+            rows = None
+            if info:
                 import pyarrow.parquet as pq
 
-                self._cube_manifests[name] = pq.read_table(
+                rows = pq.read_table(
                     os.path.join(self.path, info["path"])
                 ).to_pylist()
-        return self._cube_manifests[name]
+            self._aux_manifests[key] = rows
+        return self._aux_manifests[key]
+
+    def _aux_input_files(self, kind: str, name: str) -> list[str]:
+        """Current file listing of one cube or projection (memoized per
+        epoch)."""
+        key = (kind, name)
+        if key not in self._aux_files:
+            df = (
+                self._cube_base(name)
+                if kind == "cubes"
+                else self.projection_df(name)
+            )
+            self._aux_files[key] = list(df.inputFiles())
+        return self._aux_files[key]
+
+    def cube_file_manifest(self, name: str) -> list | None:
+        return self._aux_manifest("cubes", name)
 
     def cube_input_files(self, name: str) -> list[str]:
-        """Current file listing for one cube (memoized per epoch)."""
-        if name not in self._cube_files:
-            self._cube_files[name] = list(self._cube_base(name).inputFiles())
-        return self._cube_files[name]
+        return self._aux_input_files("cubes", name)
 
     def projection_df(self, name: str) -> DataFrame:
         """A narrow row-grain projection's relation (memoized per epoch)."""
@@ -2265,28 +2293,10 @@ class OlapIndex:
         return df
 
     def projection_file_manifest(self, name: str) -> list | None:
-        """Per-file stats rows for one projection (same format/semantics as
-        cube manifests; memoized per epoch)."""
-        key = f"proj:{name}"
-        if key not in self._cube_manifests:
-            info = self.manifest["projections"][name].get("fileManifest")
-            if not info:
-                self._cube_manifests[key] = None
-            else:
-                import pyarrow.parquet as pq
-
-                self._cube_manifests[key] = pq.read_table(
-                    os.path.join(self.path, info["path"])
-                ).to_pylist()
-        return self._cube_manifests[key]
+        return self._aux_manifest("projections", name)
 
     def projection_input_files(self, name: str) -> list[str]:
-        key = f"proj:{name}"
-        if key not in self._cube_files:
-            self._cube_files[key] = list(
-                self.projection_df(name).inputFiles()
-            )
-        return self._cube_files[key]
+        return self._aux_input_files("projections", name)
 
     def tune_read_parallelism(
         self, floor: int = 16 << 20, ceil: int = 128 << 20, per_core: int = 2
@@ -2339,101 +2349,24 @@ class OlapIndex:
             self._df_memo[key] = df
         return df
 
-    def _scan_partitions(self, rel_path: str, base: DataFrame) -> int:
-        """Scan-partition count of a parquet directory, from file metadata.
-
-        Reproduces FilePartition.maxSplitBytes + getFilePartitions (next-fit
-        decreasing over maxSplitBytes-sized pieces, openCostInBytes charged
-        per piece) so the answer matches ``base.rdd.getNumPartitions()``
-        bit-for-bit — WITHOUT the full physical-planning pass that ``.rdd``
-        forces per call (profiled 2.1 s of driver wall on a cold session's
-        first cube query; pinned equal by test_cube_layout's estimator
-        test). Falls back to ``.rdd`` when the files aren't stat-able
-        (non-local cache roots)."""
-        conf = self.spark.conf
-
-        def hidden(name: str) -> bool:
-            # Spark's file listing skips these (shouldFilterOutPathName):
-            # `_temporary/` and dot-file leftovers are never scanned, while
-            # `__tpart=...` partition directories (they hold an `=`) are
-            return name.startswith(".") or (
-                name.startswith("_") and "=" not in name
-            )
-
-        try:
-            sizes = []
-            for root, dirs, files in os.walk(os.path.join(self.path, rel_path)):
-                dirs[:] = [d for d in dirs if not hidden(d)]
-                for f in files:
-                    if f.endswith(".parquet") and not hidden(f):
-                        sizes.append(os.path.getsize(os.path.join(root, f)))
-            if not sizes:
-                return base.rdd.getNumPartitions()
-
-            def _bytes(key: str, default: int) -> int:
-                v = str(conf.get(key, str(default))).lower().strip()
-                units = {"kb": 10, "mb": 20, "gb": 30, "tb": 40,
-                         "k": 10, "m": 20, "g": 30, "t": 40, "b": 0}
-                for suf, shift in units.items():
-                    if v.endswith(suf):
-                        try:
-                            return int(float(v[: -len(suf)])) << shift
-                        except ValueError:
-                            return default
-                try:
-                    return int(v)
-                except ValueError:
-                    return default
-
-            max_part = _bytes("spark.sql.files.maxPartitionBytes", 128 << 20)
-            open_cost = _bytes("spark.sql.files.openCostInBytes", 4 << 20)
-            try:
-                min_parts = int(conf.get("spark.sql.files.minPartitionNum"))
-            except Exception:  # noqa: BLE001 — unset: leaf default parallelism
-                try:
-                    min_parts = int(
-                        conf.get("spark.sql.leafNodeDefaultParallelism")
-                    )
-                except Exception:  # noqa: BLE001
-                    min_parts = self.spark.sparkContext.defaultParallelism
-            total = sum(s + open_cost for s in sizes)
-            bytes_per_core = total // max(1, min_parts)
-            max_split = min(max_part, max(open_cost, bytes_per_core))
-            pieces: list[int] = []
-            for s in sizes:
-                while s > max_split:
-                    pieces.append(max_split)
-                    s -= max_split
-                if s > 0:
-                    pieces.append(s)
-            pieces.sort(reverse=True)
-            nparts = 0
-            cur = max_split + 1  # force-open the first partition
-            for p in pieces:
-                if cur + p > max_split:
-                    nparts += 1
-                    cur = 0
-                cur += p + open_cost
-            return max(1, nparts)
-        except OSError:
-            return base.rdd.getNumPartitions()
-
     def cube_df(self, name: str) -> DataFrame:
+        """The query-side cube relation: the (possibly cached) base under a
+        narrow ``coalesce`` sized by row count, not by file-split count — a
+        tiny cube must not pay 32 tasks per scan, and a huge one must not
+        collapse below the fleet size (capped at 2x default parallelism).
+
+        Spark decides the final width: a narrow coalesce never widens, so
+        ``CoalescedRDD`` keeps min(row-count width, scan partitions) and a
+        scan already at or below that width runs unchanged. Being a narrow
+        wrapper over the base, it still hits the in-memory columnar cache.
+        """
         key = f"cube_{name}"
         df = self._df_memo.get(key)
         if df is None:
-            base = self._cube_base(name)
-            # query-side partition count scales with cube size, not with the
-            # file-split count: a tiny cube must not pay 32 tasks per scan,
-            # and a huge one must not collapse below the fleet size. coalesce
-            # is a narrow wrapper OVER the (possibly cached) base, so the
-            # in-memory columnar cache is still hit.
             info = self.manifest["cubes"][name]
             by_rows = -(-int(info["rowCount"]) // self.CUBE_ROWS_PER_PARTITION)
             cap = 2 * self.spark.sparkContext.defaultParallelism
-            want = max(1, min(by_rows, cap))
-            nparts = self._scan_partitions(info["path"], base)
-            df = base.coalesce(want) if want < nparts else base
+            df = self._cube_base(name).coalesce(max(1, min(by_rows, cap)))
             self._df_memo[key] = df
         return df
 
@@ -2448,10 +2381,10 @@ class OlapIndex:
         self._file_manifest = None
         self._file_manifest_tbl = None
         self._input_files = None
-        self._norm_paths = None
+        self._path_keys = None
         self._files_by_month = None
-        self._cube_manifests = {}
-        self._cube_files = {}
+        self._aux_manifests = {}
+        self._aux_files = {}
         self.epoch += 1
 
     def append_batch(self, flat_batch: DataFrame) -> int:

@@ -79,39 +79,6 @@ def ensure_parallelism(df: DataFrame, width: int | None = None) -> DataFrame:
     return df.repartition(par)
 
 
-def _hash_partitioned_on(df: DataFrame, cols: tuple, n: int) -> bool:
-    """True when ``df``'s physical output partitioning is already a
-    HashPartitioning on a subset of ``cols`` with at least ``n`` partitions
-    — i.e. the downstream ClusteredDistribution(cols) is satisfied at fleet
-    width and a forced repartition would be a pure-overhead exchange
-    (VERDICT r11 #3: a bucketed table or an upstream repartition on the
-    same keys previously paid a redundant full shuffle).
-
-    Cost: one physical planning pass of the child (driver-side, no job).
-    When the guard passes, the SAME Dataset executes later and its memoized
-    QueryExecution is reused, so the pass is free; when it fails, the child
-    subplan is planned once more inside the full query — bounded, and tiny
-    next to the shuffle it avoids. Best-effort: any introspection problem
-    reports False (the pin proceeds, the safe direction)."""
-    try:
-        p = df._jdf.queryExecution().sparkPlan().outputPartitioning()
-        if p.getClass().getSimpleName() != "HashPartitioning":
-            return False
-        if p.numPartitions() < n:
-            return False
-        want = {c.lower() for c in cols}
-        exprs = p.expressions()
-        for i in range(exprs.size()):
-            e = exprs.apply(i)
-            if e.getClass().getSimpleName() != "AttributeReference":
-                return False
-            if e.name().lower() not in want:
-                return False
-        return exprs.size() > 0
-    except Exception:  # noqa: BLE001 — introspection is best-effort
-        return False
-
-
 def pinned_shuffle(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-repartition on ``cols`` at the session's configured shuffle
     width, with the partition count PINNED (user-specified N is exempt from
@@ -128,11 +95,13 @@ def pinned_shuffle(df: DataFrame, *cols: str) -> DataFrame:
     ``spark.sql.shuffle.partitions`` — the knob deployments already size
     to the fleet — so the choice is scale-adaptive, not a local constant.
 
-    No-op when the input already arrives hash-partitioned on (a subset of)
-    ``cols`` at >= that width — a bucketed table or an upstream repartition
-    on the same keys then keeps its zero-exchange plan.
+    Spark's own rules keep the pin from adding a second exchange:
+    ``CollapseRepartition`` merges it into a repartition directly below
+    it, and ``EnsureRequirements`` drops it when its child is already
+    hash-partitioned on the same expressions (matched by expression id,
+    through projections) at the same width. That includes the output of a
+    sort-merge join on the same keys, whose own exchanges AQE may then
+    coalesce; a pin on other keys survives into the final adaptive plan.
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    if _hash_partitioned_on(df, cols, n):
-        return df
     return df.repartition(n, *cols)

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import index as index_mod
 from . import ir, lowering
-from .index import OlapIndex
+from .index import OlapIndex, _file_key
 from .lowering import AggLoweringError, Backing
 from .metadata import FDGraph
 
@@ -609,13 +609,6 @@ def _intervals_overlap(row: dict, time_col: str, ivs: list) -> bool:
     return False
 
 
-def _norm_path(p: str) -> str:
-    for pre in ("file:///", "file:/"):
-        if p.startswith(pre):
-            return "/" + p[len(pre):].lstrip("/")
-    return p
-
-
 # built from the shared constant so the planner and index.files_by_month
 # cannot silently disagree on the partition directory name
 _MONTH_RX = re.compile(r"/" + re.escape(index_mod.MONTH_COL) + r"=([^/]+)/")
@@ -922,121 +915,95 @@ def prune_flat_files(
     per-row walk (`_file_passes`: value sets, OR trees, NOT, spatial) runs
     only on the survivors. Identical results to running the per-row walk
     alone — the vector pass is strictly conservative."""
-    tbl = None
-    fm_table_fn = getattr(index, "file_manifest_table", None)
-    if fm_table_fn is not None:
-        tbl = fm_table_fn()
+    tbl = index.file_manifest_table()
     if tbl is None:
+        # no columnar manifest: the exact per-row walk alone
         fm = index.file_manifest()
         if fm is None:
             return None
+        return _prune_files_per_row(
+            index.flat_input_files(), list(fm.values()), index.time_col, q
+        )
     f = getattr(q, "filter", None)
     ivs = getattr(q, "intervals", None) or []
     if f is None and not ivs:
         return None
+    import numpy as np
+
     all_files = index.flat_input_files()
     tcol = index.time_col
-
-    if tbl is not None:
-        import numpy as np
-
-        excluded, needs_row = _vector_excluded_mask(tbl, f, tcol, ivs)
-        keep_mask = ~excluded
-        row_idx = np.flatnonzero(needs_row & keep_mask)
-        if len(row_idx):
-            # materialize ONLY the columns the filter walk consults, ONLY
-            # for rows the vector pass couldn't decide — full-width
-            # to_pylist at 10^6 rows costs seconds
-            dims = f.referenced_columns() if f is not None else set()
-            dims = set(dims) | {tcol}
-            wanted = ["file"] + [
-                c
-                for c in tbl.column_names
-                if c.split("__", 1)[-1] in dims
-                and c.split("__", 1)[0] in ("min", "max", "set")
-            ]
-            rows = tbl.select(wanted).take(row_idx).to_pylist()
-            for i, row in zip(row_idx, rows):
-                ok = not ivs or _intervals_overlap(row, tcol, ivs)
-                if ok and f is not None:
-                    ok = _file_passes(row, f)
-                keep_mask[i] = ok
-        # normalize ONLY the kept manifest paths (arrow take, then Python
-        # over the pruned count — not the full listing)
-        passing = {
-            _norm_path(p)
-            for p in tbl.column("file")
-            .take(np.flatnonzero(keep_mask))
-            .to_pylist()
-        }
-        # normalized listing + manifested set are epoch-memoized on the
-        # index (a 10^6-file normalization costs ~0.5 s — once, not per
-        # query); stub/foreign indexes without the hook compute inline
-        paths_fn = getattr(index, "pruning_path_sets", None)
-        if paths_fn is not None:
-            normed, manifested_n = paths_fn()
-        else:
-            normed = [_norm_path(p) for p in all_files]
-            manifested_n = {
-                _norm_path(p) for p in tbl.column("file").to_pylist()
-            }
-        by_month = unman_by_month = None
-        iv_bounds = None
-        if ivs:
-            fbm_fn = getattr(index, "files_by_month", None)
-            if fbm_fn is not None:
-                iv_bounds = _parse_interval_bounds(ivs)
-                if iv_bounds is not None:
-                    by_month, unman_by_month = fbm_fn()
-        if by_month is not None:
-            # interval query over a month-partitioned layout: compose the
-            # keep list from interval-surviving months only, so this final
-            # Python loop scales with PRUNED file count, not total.
-            # Strict equivalence with the full walk: a month also counts as
-            # surviving when a passing file lives in it (possible when a
-            # file's time stats are absent/incomparable and the exact walk
-            # conservatively kept it) — an O(pruned) regex pass, and months
-            # the intervals exclude still contribute their unmanifested
-            # files (kept unconditionally — the month directory is never
-            # trusted over actual data stats, same as the full walk).
-            months_with_passing = {
-                m.group(1)
-                for m in (_MONTH_RX.search(q) for q in passing)
-                if m is not None
-            }
-            keep = []
-            for mkey, (origs, norms) in by_month.items():
-                if (
-                    mkey is None
-                    or mkey in months_with_passing
-                    or _month_survives(mkey, iv_bounds)
-                ):
-                    keep.extend(
-                        p
-                        for p, q in zip(origs, norms)
-                        if q in passing or q not in manifested_n
-                    )
-                else:
-                    keep.extend(unman_by_month.get(mkey, ()))
-        else:
-            keep = [
-                p
-                for p, np_ in zip(all_files, normed)
-                if np_ in passing or np_ not in manifested_n
-            ]
-    else:
-        by_norm = {_norm_path(k): v for k, v in fm.items()}
-        keep = []
-        for path in all_files:
-            row = by_norm.get(_norm_path(path))
-            if row is None:
-                keep.append(path)
-                continue
+    excluded, needs_row = _vector_excluded_mask(tbl, f, tcol, ivs)
+    keep_mask = ~excluded
+    row_idx = np.flatnonzero(needs_row & keep_mask)
+    if len(row_idx):
+        # materialize ONLY the columns the filter walk consults, ONLY
+        # for rows the vector pass couldn't decide — full-width
+        # to_pylist at 10^6 rows costs seconds
+        dims = f.referenced_columns() if f is not None else set()
+        dims = set(dims) | {tcol}
+        wanted = ["file"] + [
+            c
+            for c in tbl.column_names
+            if c.split("__", 1)[-1] in dims
+            and c.split("__", 1)[0] in ("min", "max", "set")
+        ]
+        rows = tbl.select(wanted).take(row_idx).to_pylist()
+        for i, row in zip(row_idx, rows):
             ok = not ivs or _intervals_overlap(row, tcol, ivs)
             if ok and f is not None:
                 ok = _file_passes(row, f)
-            if ok:
-                keep.append(path)
+            keep_mask[i] = ok
+    # key ONLY the kept manifest paths (arrow take, then Python over the
+    # pruned count — not the full listing)
+    passing = {
+        _file_key(p)
+        for p in tbl.column("file")
+        .take(np.flatnonzero(keep_mask))
+        .to_pylist()
+    }
+    # listing keys + manifested key set are epoch-memoized on the index (a
+    # 10^6-file pass costs ~0.5 s — once, not per query)
+    keys, manifested_n = index.pruning_path_sets()
+    by_month = unman_by_month = None
+    iv_bounds = _parse_interval_bounds(ivs) if ivs else None
+    if iv_bounds is not None:
+        by_month, unman_by_month = index.files_by_month()
+    if by_month is not None:
+        # interval query over a month-partitioned layout: compose the
+        # keep list from interval-surviving months only, so this final
+        # Python loop scales with PRUNED file count, not total.
+        # Strict equivalence with the full walk: a month also counts as
+        # surviving when a passing file lives in it (possible when a
+        # file's time stats are absent/incomparable and the exact walk
+        # conservatively kept it) — an O(pruned) regex pass, and months
+        # the intervals exclude still contribute their unmanifested
+        # files (kept unconditionally — the month directory is never
+        # trusted over actual data stats, same as the full walk).
+        months_with_passing = {
+            m.group(1)
+            for m in (_MONTH_RX.search(q) for q in passing)
+            if m is not None
+        }
+        keep = []
+        for mkey, (origs, norms) in by_month.items():
+            if (
+                mkey is None
+                or mkey in months_with_passing
+                or _month_survives(mkey, iv_bounds)
+            ):
+                keep.extend(
+                    p
+                    for p, q in zip(origs, norms)
+                    if q in passing or q not in manifested_n
+                )
+            else:
+                keep.extend(unman_by_month.get(mkey, ()))
+    else:
+        keep = [
+            p
+            for p, np_ in zip(all_files, keys)
+            if np_ in passing or np_ not in manifested_n
+        ]
     if len(keep) == len(all_files):
         return None
     return keep, len(all_files)
@@ -1053,8 +1020,7 @@ def prune_cube_files(
     columns (small at any data scale — file count is byte-floored), so the
     per-row walk suffices; unmanifested files (streaming appends before
     compaction) are always kept."""
-    rows_fn = getattr(index, "cube_file_manifest", None)
-    rows = rows_fn(name) if rows_fn is not None else None
+    rows = index.cube_file_manifest(name)
     if rows is None:
         return None
     files = index.cube_input_files(name)
@@ -1071,10 +1037,10 @@ def _prune_files_per_row(
     ivs = getattr(q, "intervals", None) or []
     if f is None and not ivs:
         return None
-    by_norm = {_norm_path(r["file"]): r for r in rows}
+    by_key = {_file_key(r["file"]): r for r in rows}
     keep = []
     for p in files:
-        row = by_norm.get(_norm_path(p))
+        row = by_key.get(_file_key(p))
         if row is None:
             keep.append(p)
             continue
@@ -1095,8 +1061,7 @@ def prune_projection_files(
     skipping on the projection's own per-file stats (its sort_cols ranges
     are tight by construction); intervals compare against the REAL time
     column's per-file min/max, so no bucket-alignment requirement."""
-    rows_fn = getattr(index, "projection_file_manifest", None)
-    rows = rows_fn(name) if rows_fn is not None else None
+    rows = index.projection_file_manifest(name)
     if rows is None:
         return None
     files = index.projection_input_files(name)

@@ -1405,9 +1405,14 @@ class OlapCatalog:
     def sql(self, sql: str) -> DataFrame:
         ctx = self.context_for(sql)
         if ctx is not None:
-            out = ctx.sql(sql)
-            self.query_history.append(ctx.query_history[-1])
-            return out
+            seen = len(ctx.query_history)
+            try:
+                return ctx.sql(sql)
+            finally:
+                # a statement whose fallback raised is still in the
+                # context's history; keep the catalog's in step
+                if len(ctx.query_history) > seen:
+                    self.query_history.append(ctx.query_history[-1])
         fed = self._federated_sql(sql)
         if fed is not None:
             return fed

@@ -31,7 +31,9 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..index import BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex, _bucket_expr
+from ..index import (
+    BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex, _bucket_expr, _file_key,
+)
 from ..metadata import StarSchema
 
 
@@ -394,7 +396,7 @@ class StreamingIngest:
         if fm_info is None:
             raise ValueError("index predates file manifests; rebuild it")
         if months is None:
-            known = set(idx.file_manifest() or {})
+            known = {_file_key(f) for f in idx.file_manifest() or {}}
             months = []
             for d in sorted(os.listdir(flat_root)):
                 if not d.startswith(f"{MONTH_COL}="):
@@ -405,7 +407,7 @@ class StreamingIngest:
                     for f in os.listdir(mdir)
                     if f.endswith(".parquet")
                 ]
-                if any(f"file:{f}" not in known and f not in known for f in files):
+                if any(_file_key(f) not in known for f in files):
                     months.append(d.split("=", 1)[1])
         if not months:
             return 0
@@ -449,17 +451,12 @@ class StreamingIngest:
             .agg(*manifest_stat_aggs(mm_cols, set_cols))
         )
         fm_path = os.path.join(idx.path, fm_info["path"])
-        prefixes = tuple(
-            p
-            for d in month_dirs
-            for p in (f"file:{d}{os.sep}", f"{d}{os.sep}")
-        )
-        kept = (
-            spark.read.parquet(fm_path)
-            .where(~F.col("file").startswith(prefixes[0]))
-        )
-        for p in prefixes[1:]:
-            kept = kept.where(~F.col("file").startswith(p))
+        # rewritten months' rows matched by their index-relative directory,
+        # not the build-time root (the index may have moved since)
+        stale = F.lit(False)
+        for m in months:
+            stale = stale | F.col("file").contains(f"/flat/{MONTH_COL}={m}/")
+        kept = spark.read.parquet(fm_path).where(~stale)
         merged = kept.unionByName(fresh, allowMissingColumns=True)
         tmp_fm = fm_path + "__compact"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp_fm)
@@ -501,9 +498,7 @@ class StreamingIngest:
             for f in os.listdir(root)
             if f.endswith(".parquet")
         ]
-        if not any(
-            f"file:{f}" not in known and f not in known for f in files
-        ):
+        if all(_file_key(f) in known for f in files):
             return False
         from ..index import parquet_write_options
 
@@ -556,7 +551,7 @@ class StreamingIngest:
                 continue
             root = os.path.join(idx.path, info["path"])
             known = {
-                r["file"]
+                _file_key(r["file"])
                 for r in (idx.projection_file_manifest(p.name) or [])
             }
             if not info.get("partitioned", True):
@@ -580,10 +575,7 @@ class StreamingIngest:
                     for f in os.listdir(pdir)
                     if f.endswith(".parquet")
                 ]
-                if any(
-                    f"file:{f}" not in known and f not in known
-                    for f in files
-                ):
+                if any(_file_key(f) not in known for f in files):
                     parts.append(d.split("=", 1)[1])
             if not parts:
                 continue

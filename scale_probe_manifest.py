@@ -89,9 +89,9 @@ class _StubIndex:
 
     def pruning_path_sets(self):
         if self._paths is None:
-            listing = [planner._norm_path(p) for p in self._files]
+            listing = [planner._file_key(p) for p in self._files]
             manifested = {
-                planner._norm_path(p)
+                planner._file_key(p)
                 for p in self._tbl.column("file").to_pylist()
             }
             self._paths = (listing, manifested)

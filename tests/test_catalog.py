@@ -339,3 +339,23 @@ def test_readme_explain_examples_stay_accurate(catalog):
         "correlated scalar 0: decorrelated GROUP BY (l_partkey)",
     ):
         assert marker in qx, marker
+
+
+def test_catalog_history_keeps_failed_fallback(spark):
+    """A statement routed to one context whose spark.sql fallback raises is
+    in that context's history; the catalog's history must record it too."""
+    from pyspark.errors import AnalysisException
+
+    ctx = OlapContext(
+        spark,
+        tpch.build_or_load_index(spark, SF_DIR),
+        base_tables=tpch.load_star_tables(spark, SF_DIR),
+    )
+    cat = OlapCatalog(spark, {"tpch": ctx})
+    with pytest.raises(AnalysisException):
+        # k = 100 is not a power of two: the rewrite declines, and Spark
+        # knows no such function
+        cat.sql("SELECT theta_count_distinct(l_partkey, 100) AS d FROM lineitem")
+    assert len(ctx.query_history) == 1
+    assert cat.query_history == ctx.query_history
+    assert cat.query_history[0].decision.startswith("fallback:")

@@ -442,39 +442,33 @@ def test_tune_read_parallelism_clamps(ctx):
         spark.conf.set("spark.sql.files.maxPartitionBytes", before)
 
 
-def test_scan_partitions_estimate_matches_spark(ctx):
-    """The metadata-only scan-partition estimator must reproduce Spark's
-    FilePartition packing bit-for-bit — cube_df's coalesce decision (and so
-    every cube-served plan) hangs on it, and the estimator exists precisely
-    to avoid the full physical-planning pass `.rdd.getNumPartitions()`
-    forces (r12: profiled 2.1 s of driver wall on a cold session)."""
-    idx = ctx.index
-    for name in idx.manifest["cubes"]:
-        base = idx._cube_base(name)
-        est = idx._scan_partitions(idx.manifest["cubes"][name]["path"], base)
-        actual = base.rdd.getNumPartitions()
-        assert est == actual, (name, est, actual)
-
-
-def test_scan_partitions_skips_hidden_leftovers(ctx, tmp_path):
-    """Leftovers Spark's file listing ignores — a `_temporary/` attempt
-    directory and a dot-file — must not count toward the estimate, while
-    `__tpart=` partition directories (the flat's layout) still do."""
-    import shutil
-
-    idx = ctx.index
-    copy = OlapIndex(ctx.spark, str(tmp_path), idx.manifest)
-    for rel in (idx.manifest["cubes"]["flags"]["path"], "flat"):
-        dst = os.path.join(str(tmp_path), rel)
-        shutil.copytree(os.path.join(idx.path, rel), dst)
-        files = glob.glob(os.path.join(dst, "**", "*.parquet"), recursive=True)
-        part = sorted(files)[0]
-        os.makedirs(os.path.join(dst, "_temporary", "0"))
-        shutil.copy(part, os.path.join(dst, "_temporary", "0", "part-x.parquet"))
-        shutil.copy(part, os.path.join(os.path.dirname(part), ".x.parquet"))
-        base = ctx.spark.read.parquet(dst)
-        assert base.count() == idx.spark.read.parquet(
-            os.path.join(idx.path, rel)
-        ).count()
-        est = copy._scan_partitions(rel, base)
-        assert est == base.rdd.getNumPartitions(), (rel, est)
+def test_cube_df_coalesce_never_widens_the_scan(ctx):
+    """cube_df's width is Spark's coalesce of the cube scan to its
+    row-count width: min(want, scan partitions), never wider than the scan,
+    rows unchanged. Two sizings exercise both sides of the min: scans split
+    into many 4 KB pieces under the default want (narrowed), and want
+    raised to the 2x-parallelism cap over the default scans (kept)."""
+    spark = ctx.spark
+    cap = 2 * spark.sparkContext.defaultParallelism
+    before = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    sides = set()
+    try:
+        for rows_per_part, split_bytes in ((None, "4096"), (1, before)):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
+            idx = OlapIndex(spark, ctx.index.path, ctx.index.manifest)
+            if rows_per_part:
+                idx.CUBE_ROWS_PER_PARTITION = rows_per_part
+            for name, info in idx.manifest["cubes"].items():
+                want = max(1, min(
+                    -(-int(info["rowCount"]) // idx.CUBE_ROWS_PER_PARTITION),
+                    cap,
+                ))
+                base, df = idx._cube_base(name), idx.cube_df(name)
+                scan = base.rdd.getNumPartitions()
+                got = df.rdd.getNumPartitions()
+                assert got == min(want, scan), (name, want, scan, got)
+                assert df.count() == base.count(), name
+                sides.add(scan > want)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+    assert sides == {True, False}

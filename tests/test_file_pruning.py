@@ -298,6 +298,44 @@ def test_vectorized_prune_equals_per_row_walk(ctx):
                                     slow and len(s_files))
 
 
+def test_moved_index_prunes_the_same_files(spark, fine_ctx, tmp_path):
+    """Manifests record each file's path at build time; an index copied to
+    another directory, or read through a symlink, must still match its
+    listing against them and prune the same files (relative to its root)
+    on the flat table, a cube and a projection."""
+    import os
+    import shutil
+
+    from pysparkline.index import OlapIndex
+
+    src = fine_ctx.index
+    copy_root = str(tmp_path / "copied")
+    shutil.copytree(src.path, copy_root)
+    link_root = str(tmp_path / "linked")
+    os.symlink(os.path.abspath(src.path), link_root)
+
+    q = _q3_spec()
+    prunes = (
+        lambda idx: planner.prune_flat_files(idx, q),
+        lambda idx: planner.prune_cube_files(idx, "market", q),
+        lambda idx: planner.prune_projection_files(idx, "li_order", q),
+    )
+
+    def relative(idx, res):
+        root = os.path.abspath(idx.path) + "/"
+        files, total = res
+        return sorted(p.split(root, 1)[1] for p in files), total
+
+    for prune in prunes:
+        want = prune(src)
+        assert want is not None and 0 < len(want[0]) < want[1]
+        for root in (copy_root, link_root):
+            moved = OlapIndex.load(spark, root)
+            got = prune(moved)
+            assert got is not None, root
+            assert relative(moved, got) == relative(src, want), root
+
+
 def test_appended_files_are_kept(spark, tmp_path):
     """Files appended after the build are absent from the manifest and must
     always be kept — pruned queries stay exact across appends."""
@@ -696,6 +734,46 @@ def test_compact_flat_restores_pruning(spark, tmp_path):
     )
     assert after == want
     # idempotent: nothing left to compact
+    assert ing.compact_flat() == 0
+
+
+def test_compact_flat_on_moved_index(spark, tmp_path):
+    """compact_flat on a copied index rewrites only the month holding
+    appended files and replaces that month's manifest rows: the manifest's
+    build-time paths are matched by their index-relative key."""
+    import glob
+    import os
+    import shutil
+
+    from pysparkline.index import IndexConfig, MetricSpec, OlapIndex
+    from pysparkline.streaming.ingest import StreamingIngest
+
+    def mk(lo, hi, months=2):
+        return spark.range(lo, hi).select(
+            F.to_timestamp(
+                F.concat(
+                    F.lit("2024-0"), (F.col("id") % months) + 1, F.lit("-15")
+                )
+            ).alias("ts"),
+            (F.col("id") % 100).alias("v"),
+        )
+
+    cfg = IndexConfig(
+        time_col="ts",
+        metrics=[MetricSpec("v_sum", "v", "sum")],
+        files_per_time_partition=4,
+        target_file_bytes=0,
+    )
+    idx = OlapIndex.build(spark, mk(0, 4000), cfg, str(tmp_path / "built"))
+    StreamingIngest(idx).process_batch(mk(4000, 5000, months=1), batch_id=-1)
+    moved_root = str(tmp_path / "moved")
+    shutil.copytree(idx.path, moved_root)
+    moved = OlapIndex.load(spark, moved_root)
+    ing = StreamingIngest(moved)
+    assert ing.compact_flat() == 1  # only 2024-01 got appended files
+    files = glob.glob(os.path.join(moved_root, "flat", "*", "*.parquet"))
+    manifest = moved.file_manifest()
+    assert len(manifest) == len(files)  # no stale rows left behind
     assert ing.compact_flat() == 0
 
 

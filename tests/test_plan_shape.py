@@ -9,6 +9,8 @@ BatchEvalPython in any hot path), star flattening must broadcast dimensions
 aggregation (two HashAggregate phases around one shuffle).
 """
 
+import re
+
 import pytest
 
 from pysparkline import ir, tpch
@@ -738,29 +740,78 @@ def test_lsh_candidate_stages_pinned_at_fleet_width(spark):
 
 
 def test_pinned_shuffle_skips_already_partitioned_input(spark):
-    """pinned_shuffle must be a no-op when the input is already
-    hash-partitioned on the same keys at >= the configured width (a
-    bucketed table or an upstream repartition) — the forced exchange was
-    pure overhead there (VERDICT r11 #3) — while narrow inputs still get
-    the pin, and different-key partitionings are re-pinned."""
+    """pinned_shuffle over an input already hash-partitioned on the same
+    keys at the configured width plans no second exchange — Spark's
+    CollapseRepartition merges a pin directly over a repartition, and
+    EnsureRequirements drops one behind a projection — while narrow,
+    differently-keyed and under-width inputs end at exactly one pin of
+    the configured width."""
+    from pyspark.sql import functions as F
+
+    from pysparkline.operators.util import pinned_shuffle
+
+    def exchanges(d) -> list[str]:
+        return [
+            ln for ln in _physical(d).splitlines() if "Exchange " in ln
+        ]
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.range(0, 1000).withColumn("user_id", F.col("id") % 50)
+    pre = df.repartition(n, "user_id")
+    proj = pre.withColumn("x", F.col("id") * 2)
+    for out in (
+        pinned_shuffle(pre, "user_id"),
+        # a superset of the keys directly above the repartition collapses
+        pinned_shuffle(pre, "user_id", "id"),
+        # a projection in between: the child's partitioning still matches
+        pinned_shuffle(proj, "user_id"),
+    ):
+        assert len(exchanges(out)) == 1, _physical(out)
+    # narrow / differently-keyed / under-width inputs: one pin at width n
+    under = df.repartition(max(1, n - 1), "user_id")
+    for inp in (df, df.repartition(n, "id"), under):
+        (ex,) = exchanges(pinned_shuffle(inp, "user_id"))
+        assert "REPARTITION_BY_NUM" in ex
+        assert re.search(rf"hashpartitioning\(user_id#\d+L?, {n}\)", ex), ex
+
+
+def test_pinned_shuffle_survives_aqe_over_coalesced_join(spark):
+    """A pin over a sort-merge join's byte-tiny output keeps its width in
+    the FINAL adaptive plan while AQE coalesces the join's own exchanges
+    around it (the LSH candidate-pair shape: join on the band key, pin on
+    the pair ids) — AQE never coalesces a REPARTITION_BY_NUM exchange."""
     from pyspark.sql import functions as F
 
     from pysparkline.operators.util import pinned_shuffle
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    df = spark.range(0, 1000).withColumn("user_id", F.col("id") % 50)
-    pre = df.repartition(n, "user_id")
-    assert pinned_shuffle(pre, "user_id") is pre  # satisfied: no exchange
-    # subset of the requested keys is also satisfied (co-location holds)
-    assert pinned_shuffle(pre, "user_id", "id") is pre
-    # narrow / differently-keyed inputs still pay exactly one pin
-    for inp in (df, df.repartition(n, "id")):
-        out = pinned_shuffle(inp, "user_id")
-        assert out is not inp
-        assert _physical(out).count("REPARTITION_BY_NUM") == 1
-    # fewer partitions than the configured width: re-pin (width is the point)
-    under = df.repartition(max(1, n - 1), "user_id")
-    assert pinned_shuffle(under, "user_id") is not under
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        a = spark.range(0, 2000).withColumn("k", F.col("id") % 100)
+        b = spark.range(0, 2000).select(
+            (F.col("id") % 100).alias("k2"), F.col("id").alias("v")
+        )
+        pairs = a.join(b, a.k == b.k2).select("id", "v")
+        # candidate-pair dedup: the aggregate reuses the pin's partitioning
+        out = (
+            pinned_shuffle(pairs, "id", "v").groupBy("id", "v").count()
+            .where(F.col("count") > 1)
+        )
+        assert out.collect() == []
+        plan = _physical(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and "SortMergeJoin" in final
+    # the join's input exchanges were coalesced: AQE was free to act here
+    assert "AQEShuffleRead coalesced" in final
+    pin = [ln for ln in final.splitlines() if "REPARTITION_BY_NUM" in ln]
+    assert len(pin) == 1, final
+    assert f", {n}), REPARTITION_BY_NUM" in pin[0], pin
+    # the aggregate reads the pinned stage directly, not coalesced
+    above = final[: final.index(pin[0])]
+    assert "AQEShuffleRead" not in above and "Exchange" not in above, final
 
 
 def test_event_window_over_prepartitioned_input_adds_no_exchange(spark):

@@ -214,8 +214,8 @@ def test_compact_projections_restores_pruning(spark, tmp_path):
     # post-compaction every file is manifested again and pruning engages
     rows = idx.projection_file_manifest("kv")
     files = idx.projection_input_files("kv")
-    known = {planner._norm_path(r["file"]) for r in rows}
-    assert all(planner._norm_path(f) in known for f in files)
+    known = {planner._file_key(r["file"]) for r in rows}
+    assert all(planner._file_key(f) in known for f in files)
     assert any("projection file manifest pruned" in x for x in dec.notes)
 
 
@@ -281,8 +281,8 @@ def test_unpartitioned_projection_lifecycle(spark, tmp_path):
     assert run() == expect(both)
     rows = idx.projection_file_manifest("kv")
     files = idx.projection_input_files("kv")
-    known = {planner._norm_path(r["file"]) for r in rows}
-    assert all(planner._norm_path(f) in known for f in files)
+    known = {planner._file_key(r["file"]) for r in rows}
+    assert all(planner._file_key(f) in known for f in files)
 
 
 def test_tpch_semijoin_outers_ride_projections(spark):
