@@ -307,6 +307,28 @@ class HistSpec:
         )
 
 
+def sketch_key(col: str, where=None):
+    """The input every distinct-count sketch (theta and HLL) is built from:
+    each non-NULL value of ``col`` as a non-empty long (xxhash64 of its
+    string form), NULL where the value is NULL or ``where`` is not true.
+    The DataSketches built-ins reject timestamp, decimal, boolean and date
+    inputs and skip ``''``, which COUNT(DISTINCT) counts."""
+    c = F.col(col)
+    keep = c.isNotNull() if where is None else where & c.isNotNull()
+    return F.when(keep, F.xxhash64(c.cast("string")))
+
+
+def hll_sketch_agg(col: str):
+    """Aggregate: the HLL sketch of ``col`` (input encoding: ``sketch_key``)."""
+    return F.hll_sketch_agg(sketch_key(col))
+
+
+def is_sketch_type(simple_type: str) -> bool:
+    """A binary, map or array column type: an HLL, theta, top-k or
+    histogram sketch rather than a scalar dim or measure."""
+    return simple_type == "binary" or simple_type.startswith(("map<", "array<"))
+
+
 @dataclass(frozen=True)
 class ThetaSpec:
     """A mergeable theta-sketch metric over a column — the thetaSketch
@@ -330,16 +352,9 @@ class ThetaSpec:
 
     def sketch_agg(self, where=None):
         """Aggregate: build the sketch from the raw column, skipping rows
-        where ``where`` is not true. Every non-NULL value reaches the
-        sketch as a non-empty long (xxhash64 of its string form): the
-        built-ins reject timestamp, decimal, boolean and date inputs and
-        skip ``''``, which COUNT(DISTINCT) counts. NULL stays NULL and is
-        not counted."""
-        c = F.col(self.col)
-        keep = c.isNotNull() if where is None else where & c.isNotNull()
+        where ``where`` is not true (input encoding: ``sketch_key``)."""
         return F.theta_sketch_agg(
-            F.when(keep, F.xxhash64(c.cast("string"))),
-            ir.theta_lg_nom_entries(self.k),
+            sketch_key(self.col, where), ir.theta_lg_nom_entries(self.k)
         )
 
     def merge_agg(self, where=None):
@@ -355,6 +370,9 @@ class ThetaSpec:
 # sketch format recorded with each manifest thetaSpec; a spec without it was
 # written by the KMV (array<long>) implementation this format replaced
 THETA_FORMAT = "datasketches"
+# input encoding recorded next to a manifest's hllCols; a manifest without it
+# was written when HLL sketches hashed CAST(col AS STRING), which drops ''
+HLL_FORMAT = "xxhash64"
 
 
 class IndexFormatError(ValueError):
@@ -369,6 +387,16 @@ def _theta_spec_from_dict(t: dict) -> ThetaSpec:
             "array<long> format; rebuild the index (OlapIndex.build)"
         )
     return ThetaSpec(t["col"], t["k"])
+
+
+def _hll_cols_from_dict(d: dict) -> list:
+    cols = list(d["hllCols"])
+    if cols and d.get("hllFormat") != HLL_FORMAT:
+        raise IndexFormatError(
+            f"HLL sketches {cols} hash CAST(col AS STRING), which drops ''; "
+            "rebuild the index (OlapIndex.build)"
+        )
+    return cols
 
 
 @dataclass(frozen=True)
@@ -554,6 +582,10 @@ class IndexConfig:
                 {"name": m.name, "expr": m.expr, "agg": m.agg} for m in self.metrics
             ],
             "hllCols": list(self.hll_cols),
+            # guarded: HLL-free manifests stay byte-identical. The input
+            # encoding participates in build-cache keys, so indexes whose
+            # sketches drop '' rebuild
+            **({"hllFormat": HLL_FORMAT} if self.hll_cols else {}),
             "cubes": [
                 {
                     "name": c.name,
@@ -628,7 +660,7 @@ class IndexConfig:
         return IndexConfig(
             time_col=d["timeCol"],
             metrics=[MetricSpec(m["name"], m["expr"], m["agg"]) for m in d["metrics"]],
-            hll_cols=list(d["hllCols"]),
+            hll_cols=_hll_cols_from_dict(d),
             cubes=[
                 CubeSpec(
                     c["name"],
@@ -1249,7 +1281,8 @@ class OlapIndex:
             else None
         )
         self._df_memo: dict[str, "DataFrame"] = {}
-        self._cached: set[str] = set()
+        # cube name -> the columns cache_cubes pinned for it
+        self._pinned: dict[str, frozenset] = {}
         self._file_manifest: dict[str, dict] | None = None
         self._file_manifest_tbl = None  # pyarrow Table twin of the dict
         self._input_files: list[str] | None = None
@@ -1724,7 +1757,7 @@ class OlapIndex:
         for m in metrics:
             aggs.append(METRIC_BUILD_FNS[m.agg](F.expr(m.expr)).alias(m.col_name))
         for c in hll_cols:
-            aggs.append(F.hll_sketch_agg(F.col(c).cast("string")).alias(f"hll_{c}"))
+            aggs.append(hll_sketch_agg(c).alias(f"hll_{c}"))
         for h in hist_specs:
             aggs.append(h.count_array().alias(h.col_name))
         for t in config.cube_theta_specs(cube):
@@ -2333,8 +2366,8 @@ class OlapIndex:
     CUBE_ROWS_PER_PARTITION = 64_000
 
     def _cube_base(self, name: str) -> DataFrame:
-        """The cube relation at native file-split parallelism — what gets
-        cached, so cache materialization parallelizes across the fleet."""
+        """The on-disk cube relation, every column, at native file-split
+        parallelism."""
         key = f"cube_{name}__base"
         df = self._df_memo.get(key)
         if df is None:
@@ -2349,35 +2382,66 @@ class OlapIndex:
             self._df_memo[key] = df
         return df
 
-    def cube_df(self, name: str) -> DataFrame:
-        """The query-side cube relation: the (possibly cached) base under a
-        narrow ``coalesce`` sized by row count, not by file-split count — a
-        tiny cube must not pay 32 tasks per scan, and a huge one must not
-        collapse below the fleet size (capped at 2x default parallelism).
+    def cube_column_types(self, name: str) -> dict[str, str]:
+        """Column name -> simpleString type of a cube, from the manifest
+        (the read-back schema stamped at build); manifests without the
+        stamp ask the relation."""
+        cols = self.manifest["cubes"][name].get("columns")
+        if cols:
+            return {c: (m or {}).get("type", "") for c, m in cols.items()}
+        return {
+            f.name: f.dataType.simpleString()
+            for f in self._cube_base(name).schema.fields
+        }
 
-        Spark decides the final width: a narrow coalesce never widens, so
-        ``CoalescedRDD`` keeps min(row-count width, scan partitions) and a
-        scan already at or below that width runs unchanged. Being a narrow
-        wrapper over the base, it still hits the in-memory columnar cache.
+    def pinned_columns(self, name: str) -> frozenset | None:
+        """The columns ``cache_cubes`` pinned for cube ``name``; None when
+        the cube is not pinned."""
+        return self._pinned.get(name)
+
+    def cube_df(self, name: str, columns=None) -> DataFrame:
+        """The query-side cube relation for a query reading ``columns``
+        (None: every column). It is the pinned relation when
+        ``cache_cubes`` pinned them all, else the full on-disk relation:
+        HLL, theta, top-k and histogram sketches are never pinned.
+
+        Either relation sits under a narrow ``coalesce`` sized by row
+        count, not by file-split count — a tiny cube must not pay 32 tasks
+        per scan, and a huge one must not collapse below the fleet size
+        (capped at 2x default parallelism). Spark decides the final width:
+        a narrow coalesce never widens, so ``CoalescedRDD`` keeps
+        min(row-count width, scan partitions) and a scan already at or
+        below that width runs unchanged. Being a narrow wrapper over the
+        pinned relation, it still hits the in-memory columnar cache.
         """
-        key = f"cube_{name}"
+        held = self._pinned.get(name)
+        pinned = held is not None and held.issuperset(
+            self.cube_column_types(name) if columns is None else columns
+        )
+        key = f"cube_{name}__pinned" if pinned else f"cube_{name}"
         df = self._df_memo.get(key)
         if df is None:
             info = self.manifest["cubes"][name]
             by_rows = -(-int(info["rowCount"]) // self.CUBE_ROWS_PER_PARTITION)
             cap = 2 * self.spark.sparkContext.defaultParallelism
-            df = self._cube_base(name).coalesce(max(1, min(by_rows, cap)))
+            src = (
+                self._df_memo[f"cube_{name}__pin"]
+                if pinned
+                else self._cube_base(name)
+            )
+            df = src.coalesce(max(1, min(by_rows, cap)))
             self._df_memo[key] = df
         return df
 
     def invalidate(self) -> None:
-        """Drop memoized/cached relations (after streaming appends). Bumps
-        the epoch so downstream compiled-plan caches (OlapContext) discard
-        DataFrames that still reference the pre-append file listing."""
-        for key in self._cached:
-            self._df_memo[key].unpersist()
+        """Drop memoized relations and unpin the cubes (after streaming
+        appends). Bumps the epoch so downstream compiled-plan caches
+        (OlapContext) discard DataFrames that still reference the
+        pre-append file listing."""
+        for name in self._pinned:
+            self._df_memo[f"cube_{name}__pin"].unpersist()
         self._df_memo.clear()
-        self._cached.clear()
+        self._pinned.clear()
         self._file_manifest = None
         self._file_manifest_tbl = None
         self._input_files = None
@@ -2398,23 +2462,35 @@ class OlapIndex:
         return ingest.rows_ingested
 
     def cache_cubes(self, eager: bool = True) -> None:
-        """Pin every cube in executor memory — the analog of Druid holding
-        segments resident on historicals. Cubes are the small, hot artifacts
+        """Pin every cube's scalar columns (dims, bucket, count, scalar
+        measures) in executor memory — the analog of Druid holding segments
+        resident on historicals. Cubes are the small, hot artifacts
         (pre-aggregated: orders of magnitude under the flat data), so this is
         the right default for an interactive-BI session even at 100 TB scale.
+
+        Sketch columns (binary, map and array: HLL, theta, top-k maps,
+        histograms) stay in parquet, where the OS page cache holds them
+        compressed: the in-memory columnar cache compresses scalar columns
+        (dictionary, run-length) but stores binary and map columns raw, so
+        pinned sketches cost several times their parquet bytes. A query
+        that reads a sketch column scans the on-disk cube (``cube_df``).
 
         Eager materialization submits one count() job per cube from a thread
         pool — Spark schedules them concurrently, so warmup is bounded by the
         largest cube, not the sum."""
         fresh = []
         for name in self.manifest["cubes"]:
-            key = f"cube_{name}__base"
-            if key not in self._cached:
-                base = self._cube_base(name).cache()
-                self._df_memo[key] = base
-                self._df_memo.pop(f"cube_{name}", None)  # rebuild view on base
-                self._cached.add(key)
-                fresh.append(base)
+            if name in self._pinned:
+                continue
+            scalars = [
+                c
+                for c, t in self.cube_column_types(name).items()
+                if not is_sketch_type(t)
+            ]
+            pin = self._cube_base(name).select(*scalars).cache()
+            self._df_memo[f"cube_{name}__pin"] = pin
+            self._pinned[name] = frozenset(scalars)
+            fresh.append(pin)
         if eager and fresh:
             from concurrent.futures import ThreadPoolExecutor
 

@@ -29,7 +29,9 @@ from datetime import datetime, timedelta
 from pyspark.sql import Column, DataFrame, functions as F
 
 from . import ir
-from .index import BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex, ThetaSpec
+from .index import (
+    BUCKET_COL, COUNT_COL, MONTH_COL, OlapIndex, ThetaSpec, hll_sketch_agg,
+)
 
 # granularities coarser-or-equal relationships, coarsest first
 _GRAN_ORDER = [
@@ -127,6 +129,10 @@ class Backing:
         # per-cell top-m maps instead of aggregating a dimension the cube
         # grain doesn't even carry
         self.topk = None
+        # cube measure and sketch columns the merge-form aggregations read
+        # (recorded by _preagg_agg): the planner picks the pinned or the
+        # on-disk cube relation by them
+        self.reads: set[str] = set()
 
     @property
     def preagg(self) -> bool:
@@ -471,14 +477,24 @@ def _theta_out(a: ir.AggSpec, sk: Column) -> Column:
 
 
 def _cube_theta_spec(
-    idx: OlapIndex, a: ir.AggSpec, cube_cols: set
+    backing: Backing, a: ir.AggSpec, cube_cols
 ) -> ThetaSpec:
     """The cube's pre-built sketch for ``a`` — only one built with the SAME
     (col, k) serves the query (another k retains a different sample)."""
     ts = ThetaSpec(a.field_name, a.k)
-    if ts not in idx.config.theta_specs or ts.col_name not in cube_cols:
+    if (
+        ts not in backing.index.config.theta_specs
+        or ts.col_name not in cube_cols
+    ):
         raise AggLoweringError(f"no theta sketch {ts.col_name} in cube")
+    backing.reads.add(ts.col_name)
     return ts
+
+
+def _read(backing: Backing, col: str) -> Column:
+    """Cube column ``col``, recorded in ``backing.reads``."""
+    backing.reads.add(col)
+    return F.col(col)
 
 
 def _raw_agg(a: ir.AggSpec) -> Column:
@@ -523,9 +539,9 @@ def _raw_agg(a: ir.AggSpec) -> Column:
         return _hist_quantile_expr(spec.count_array(), a).alias(a.name)
     if isinstance(a, ir.HyperUniqueAgg):
         # raw backing: build the sketch on the fly
-        return F.hll_sketch_estimate(
-            F.hll_sketch_agg(F.col(a.field_name).cast("string"))
-        ).alias(a.name)
+        return F.hll_sketch_estimate(hll_sketch_agg(a.field_name)).alias(
+            a.name
+        )
     if isinstance(a, (ir.ThetaAgg, ir.ThetaSketchAgg)):
         sk = ThetaSpec(a.field_name, a.k).sketch_agg()
         return _theta_out(a, sk).alias(a.name)
@@ -537,7 +553,7 @@ def _raw_agg(a: ir.AggSpec) -> Column:
 def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
     """Merge-form aggregation over a cube backing."""
     idx = backing.index
-    cube_cols = set(backing.df.columns)
+    cube_cols = set(idx.cube_column_types(backing.cube_name))
     # note: no "count" here — count(col) over a pre-agg backing would need a
     # pre-built non-null-count metric; metric_by_expr lookup handles that
     fns = {"sum": F.sum, "min": F.min, "max": F.max}
@@ -553,7 +569,7 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
         # sum merges with sum; min with min; max with max; count partials
         # merge by summing (AggregateTransform.scala:331-347)
         merge = F.sum if a.fn == "count" else fns[a.fn]
-        return merge(F.col(m.col_name)).alias(a.name)
+        return merge(_read(backing, m.col_name)).alias(a.name)
     if isinstance(a, ir.FilteredAgg):
         grain = set(
             idx.manifest["cubes"][backing.cube_name]["dims"]
@@ -575,11 +591,13 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
             if m is None or m.col_name not in cube_cols:
                 raise AggLoweringError(f"no pre-built metric for filtered {expr}")
             merge = F.sum if inner.fn == "count" else fns[inner.fn]
-            return merge(F.when(cond, F.col(m.col_name))).alias(a.name)
+            return merge(F.when(cond, _read(backing, m.col_name))).alias(
+                a.name
+            )
         if isinstance(inner, (ir.ThetaAgg, ir.ThetaSketchAgg)):
             # union only matching partials — condition already grain-checked
             # above
-            sk = _cube_theta_spec(idx, inner, cube_cols).merge_agg(cond)
+            sk = _cube_theta_spec(backing, inner, cube_cols).merge_agg(cond)
             return _theta_out(inner, sk).alias(a.name)
         raise AggLoweringError(f"unsupported filtered inner agg {inner!r}")
     if isinstance(a, ir.CardinalityAgg):
@@ -589,7 +607,7 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
         # (AggregateTransform.scala:454-479 cardinality->hyperUnique switch)
         if len(a.field_names) == 1 and f"hll_{a.field_names[0]}" in cube_cols:
             return F.hll_sketch_estimate(
-                F.hll_union_agg(F.col(f"hll_{a.field_names[0]}"))
+                F.hll_union_agg(_read(backing, f"hll_{a.field_names[0]}"))
             ).alias(a.name)
         raise AggLoweringError(
             "cardinality fields not in cube grain and no sketch"
@@ -625,7 +643,7 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
             )
         merged = F.array(
             *[
-                F.sum(F.element_at(F.col(hs.col_name), i + 1))
+                F.sum(F.element_at(_read(backing, hs.col_name), i + 1))
                 for i in range(a.nbins)
             ]
         )
@@ -634,9 +652,11 @@ def _preagg_agg(a: ir.AggSpec, backing: Backing) -> Column:
         sk = f"hll_{a.field_name}"
         if sk not in cube_cols:
             raise AggLoweringError(f"no HLL sketch {sk} in cube")
-        return F.hll_sketch_estimate(F.hll_union_agg(F.col(sk))).alias(a.name)
+        return F.hll_sketch_estimate(
+            F.hll_union_agg(_read(backing, sk))
+        ).alias(a.name)
     if isinstance(a, (ir.ThetaAgg, ir.ThetaSketchAgg)):
-        sk = _cube_theta_spec(idx, a, cube_cols).merge_agg()
+        sk = _cube_theta_spec(backing, a, cube_cols).merge_agg()
         return _theta_out(a, sk).alias(a.name)
     if isinstance(a, ir.AvgAgg):
         raise AggLoweringError("AvgAgg must be pre-decomposed (see lower_groupby)")

@@ -238,10 +238,14 @@ def _topk_eligible(
                 continue
             if norm(tk.metric) != norm(want):
                 continue
-            if tk.col_name not in index.cube_df(name).columns:
+            if tk.col_name not in index.cube_column_types(name):
                 continue
             backing = Backing.cube(index, name)
             backing.topk = tk
+            backing.reads.add(tk.col_name)
+            rel = _cube_relation(index, name, backing, set())
+            if rel:
+                notes.append(f"cube {name} relation: {rel}")
             notes.append(
                 f"approx TopN: cube {name} serves dim {tk.dim} from its "
                 f"top-{tk.m} map (est-ranked; exact when no cell "
@@ -1181,17 +1185,31 @@ def _cube_scan_bytes_per_row(
     sketchy = _query_has_sketch_aggs(q)
     total = 0.0
     for c, meta in (info.get("columns") or {}).items():
-        t = (meta or {}).get("type", "")
-        is_sketch = (
-            t == "binary" or t.startswith("map<") or t.startswith("array<")
-        )
         if c in dims:
             if c not in referenced:
                 continue
-        elif is_sketch and not sketchy:
+        elif not sketchy and index_mod.is_sketch_type(
+            (meta or {}).get("type", "")
+        ):
             continue
         total += col_bpr.get(c, 0.0)
     return total or info.get("bytesPerRow")
+
+
+def _cube_relation(
+    index: OlapIndex, name: str, backing: Backing, referenced: set
+) -> str | None:
+    """Point a cube backing at the pinned relation when it holds every cube
+    column the lowering reads, else at the on-disk relation. Returns the
+    choice for a pinned cube ("pinned" or "disk: needs sketch columns
+    [...]"), None for an unpinned one."""
+    cols = backing.reads | (referenced & index.cube_column_types(name).keys())
+    backing.df = index.cube_df(name, cols)
+    held = index.pinned_columns(name)
+    if held is None:
+        return None
+    missing = cols - held
+    return f"disk: needs sketch columns {sorted(missing)}" if missing else "pinned"
 
 
 def _pruned_cube_df(index: OlapIndex, name: str, files: list[str]) -> DataFrame:
@@ -1310,16 +1328,24 @@ def choose_backing(
                 # kept-file ratio (files are byte-floored, so the count
                 # ratio tracks the byte ratio) — and take the cheapest.
                 # Deterministic: ties fall to rowCount then name; manifests
-                # predating the stamp keep the pure rowCount order.
+                # predating the stamp keep the pure rowCount order. A cube
+                # the pin serves is scanned whole from memory (the in-memory
+                # scan's batch statistics prune): a pruned file list would
+                # be a new relation the cache never matches, so such a cube
+                # is neither file-pruned nor priced as pruned.
                 scored = []
                 for rows, name, b in candidates:
-                    pr = prune_cube_files(index, name, q)
+                    rel = _cube_relation(index, name, b, referenced)
+                    pr = (
+                        None if rel == "pinned"
+                        else prune_cube_files(index, name, q)
+                    )
                     ratio = len(pr[0]) / pr[1] if pr and pr[1] else 1.0
                     bpr = _cube_scan_bytes_per_row(
                         index.manifest["cubes"][name], q, referenced
                     )
                     cost = rows * bpr * ratio if bpr else None
-                    scored.append((cost, rows, name, b, pr))
+                    scored.append((cost, rows, name, b, pr, rel))
                 if all(s[0] is not None for s in scored):
                     scored.sort(key=lambda s: (s[0], s[1], s[2]))
                     if len(scored) > 1 and scored[0][2] != min(
@@ -1331,12 +1357,14 @@ def choose_backing(
                         )
                 else:
                     scored.sort(key=lambda s: (s[1], s[2]))
-                cost, rows, name, backing, pr = scored[0]
+                cost, rows, name, backing, pr, rel = scored[0]
                 notes.append(
                     f"chose cube {name} ({rows} rows"
                     + (f", ~{int(cost)} kept bytes)" if cost is not None
                        else ")")
                 )
+                if rel:
+                    notes.append(f"cube {name} relation: {rel}")
                 if pr is not None:
                     files, total = pr
                     notes.append(

@@ -195,6 +195,8 @@ class OlapContext:
         prep(self.spark)
         self._fd_graph = FDGraph(self.fds) if self.fds else None
         self._plan_cache: dict = {}
+        # SQL text -> plan-cache key: a repeated statement skips parse_sql
+        self._sql_keys: dict[str, str] = {}
         self._plan_epoch = self.index.epoch
         self._feedback = planner.GroupCountFeedback()
         if self.persist_feedback:
@@ -261,18 +263,11 @@ class OlapContext:
         DataFrame, so only job execution is paid — the serving posture of an
         OLAP endpoint (the reference's Druid side equally reused compiled
         segment plans across repeated queries)."""
-        if self._plan_epoch != self.index.epoch:
-            # the index was appended/compacted: cached plans reference a
-            # stale file listing
-            self._plan_cache.clear()
-            self._plan_epoch = self.index.epoch
-        self._harvest_feedback()
-        key = json.dumps(spec.to_dict(), sort_keys=True, default=str)
-        cached = self._plan_cache.get(key)
-        if cached is not None:
-            df, record = cached
-            self.query_history.append(record)
+        key = self._spec_key(spec)
+        df = self._cached_plan(key)
+        if df is not None:
             return df
+
         def memo(df: DataFrame, explain: str, backing: str) -> DataFrame:
             record = QueryRecord(spec.to_dict(), explain, backing)
             self.query_history.append(record)
@@ -311,6 +306,26 @@ class OlapContext:
         if self._feedback_eligible(spec):
             self._pending_obs.append([df, record, spec, key, 0])
             del self._pending_obs[:-64]  # bounded
+        return df
+
+    @staticmethod
+    def _spec_key(spec: ir.QuerySpec) -> str:
+        return json.dumps(spec.to_dict(), sort_keys=True, default=str)
+
+    def _cached_plan(self, key: str) -> DataFrame | None:
+        """The compiled plan cached under ``key`` (recorded in the query
+        history), or None. Drops every cached plan first when the index
+        epoch moved: they reference a stale file listing."""
+        if self._plan_epoch != self.index.epoch:
+            self._plan_cache.clear()
+            self._sql_keys.clear()
+            self._plan_epoch = self.index.epoch
+        self._harvest_feedback()
+        cached = self._plan_cache.get(key)
+        if cached is None:
+            return None
+        df, record = cached
+        self.query_history.append(record)
         return df
 
     @staticmethod
@@ -1065,12 +1080,21 @@ class OlapContext:
                 err.add_note(f"pysparkline declined the rewrite: {e}")
                 raise
 
+        key = self._sql_keys.get(sql)
+        if key is not None:
+            df = self._cached_plan(key)
+            if df is not None:
+                return df
         try:
             spec = self._parse_sql(sql)
         except SQLFrontError as e:
             return fallback(e)
         try:
-            return self.query(spec)
+            df = self.query(spec)
+            if len(self._sql_keys) >= 256:  # bounded like the plan cache
+                self._sql_keys.pop(next(iter(self._sql_keys)))
+            self._sql_keys[sql] = self._spec_key(spec)
+            return df
         except SQLFrontError as e:
             # lowering-time declines (round-8 review finding #4): e.g. a
             # dim-grain WHERE-subquery arm whose base table isn't
@@ -1295,6 +1319,7 @@ class OlapContext:
         """CLEAR DRUID CACHE analog: drop memoized/pinned backings and
         compiled plans so the next query re-reads the index from disk."""
         self._plan_cache.clear()
+        self._sql_keys.clear()
         self.index.invalidate()
 
     def owned_tables(self) -> set[str]:
