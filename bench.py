@@ -282,7 +282,7 @@ def main() -> None:
         from pysparkline.index import PARTITION_FORMATS
 
         gran = ctx.index.config.partition_granularity
-        nfiles = len(ctx.index.flat_input_files())
+        nfiles = len(ctx.index.scan_files("flat").listing)
         fmt = PARTITION_FORMATS.get(gran, "yyyy-MM")
         key = hashlib.sha256(
             json.dumps(

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -1267,6 +1268,82 @@ def _file_key(p: str) -> str:
     return "/".join(parts[i:])
 
 
+_MONTH_DIR_RX = re.compile(r"/" + re.escape(MONTH_COL) + r"=([^/]+)/")
+
+
+@dataclass
+class ScanFiles:
+    """One index relation's files as the planner prunes them: the per-file
+    stats manifest (pyarrow Table: file, min__c / max__c / set__c), the
+    current listing, each listed file's ``_file_key``, the manifested key
+    set, and the listing grouped by its ``__tpart=`` directory.
+    ``OlapIndex.scan_files`` memoizes one per relation per epoch: keying a
+    10^6-file listing costs ~0.5 s of driver time, paid once per epoch
+    instead of per query.
+
+    ``by_month`` maps month string (None for paths without a month dir) ->
+    (paths, keys), and is None when no path carries a month dir;
+    ``unmanifested_by_month`` lists each month's files absent from the
+    manifest (appended after the build), which pruning always keeps. The
+    grouping lets interval pruning walk only interval-surviving months'
+    files, so the per-query Python loop scales with the pruned file count,
+    not the total (SCALE.md)."""
+
+    table: object
+    listing: list
+    keys: list
+    manifested: set
+    by_month: dict | None
+    unmanifested_by_month: dict
+    time_col: str  # the column the relation's intervals compare against
+
+    @staticmethod
+    def build(table, listing: list, time_col: str) -> "ScanFiles":
+        keys = [_file_key(p) for p in listing]
+        manifested = {_file_key(p) for p in table.column("file").to_pylist()}
+        by: dict = {}
+        unman: dict = {}
+        for p, k in zip(listing, keys):
+            m = _MONTH_DIR_RX.search(p)
+            month = m.group(1) if m else None
+            b = by.setdefault(month, ([], []))
+            b[0].append(p)
+            b[1].append(k)
+            if k not in manifested:
+                unman.setdefault(month, []).append(p)
+        any_month = any(m is not None for m in by)
+        return ScanFiles(
+            table, listing, keys, manifested, by if any_month else None,
+            unman, time_col,
+        )
+
+
+# every flat, cube and projection entry carries these; the planner prunes
+# and prices each relation from them
+RELATION_STAMPS = (
+    "fileManifest", "rowCount", "bytesPerRow", "columnBytesPerRow",
+)
+
+
+def _check_relation_stamps(manifest: dict) -> None:
+    # the flat table's file manifest sits at the manifest's top level
+    entries = {
+        "flat": {
+            **manifest["flat"], "fileManifest": manifest.get("fileManifest"),
+        }
+    }
+    for kind in ("cube", "projection"):
+        for name, entry in (manifest.get(kind + "s") or {}).items():
+            entries[f"{kind} {name}"] = entry
+    for what, entry in entries.items():
+        missing = [s for s in RELATION_STAMPS if entry.get(s) is None]
+        if missing:
+            raise IndexFormatError(
+                f"{what} lacks {missing} in its manifest entry; rebuild the "
+                "index (OlapIndex.build)"
+            )
+
+
 class OlapIndex:
     """Built/loaded OLAP index rooted at a directory."""
 
@@ -1275,6 +1352,7 @@ class OlapIndex:
         self.path = path
         self.manifest = manifest
         self.config = IndexConfig.from_dict(manifest["config"])
+        _check_relation_stamps(manifest)
         self._star = (
             StarSchema.from_json(json.dumps(manifest["star"]))
             if manifest.get("star")
@@ -1283,13 +1361,7 @@ class OlapIndex:
         self._df_memo: dict[str, "DataFrame"] = {}
         # cube name -> the columns cache_cubes pinned for it
         self._pinned: dict[str, frozenset] = {}
-        self._file_manifest: dict[str, dict] | None = None
-        self._file_manifest_tbl = None  # pyarrow Table twin of the dict
-        self._input_files: list[str] | None = None
-        self._path_keys: tuple[list, set] | None = None
-        self._files_by_month = None
-        self._aux_manifests: dict[tuple, list | None] = {}
-        self._aux_files: dict[tuple, list[str]] = {}
+        self._scan_files: dict[tuple, ScanFiles] = {}
         self.epoch = 0  # bumped on invalidate(); versions compiled-plan caches
 
     # ------------------------------------------------------------------ build
@@ -2002,8 +2074,7 @@ class OlapIndex:
         cube's grain columns only: BUCKET min/max serves interval pruning
         (eligibility already guarantees bucket-aligned intervals, so the
         bucket-value comparison is exact), dim min/max + size-capped exact
-        value sets serve selector/IN/bound pruning. Cube manifests are
-        tiny (files × grain columns), so the planner walks them per-row."""
+        value sets serve selector/IN/bound pruning."""
         from pyspark.sql import types as ST
 
         cdf = spark.read.parquet(cube_path)
@@ -2181,133 +2252,51 @@ class OlapIndex:
             self._df_memo["flat"] = df
         return df
 
-    def flat_root(self) -> str:
-        return os.path.join(self.path, self.manifest["flat"].get("path", "flat"))
+    def relation_entry(self, kind: str, name: str | None = None) -> dict:
+        """The manifest entry of one scan relation: the flat table
+        (``kind`` "flat", no name), cube ``name`` ("cube") or projection
+        ``name`` ("projection")."""
+        if kind == "flat":
+            return self.manifest["flat"]
+        return self.manifest[kind + "s"][name]
 
-    def file_manifest_table(self):
-        """The per-file stats manifest as a pyarrow Table (columns: file,
-        min__c / max__c / set__c), loaded driver-side — no Spark job — and
-        memoized per epoch. None when the index predates file manifests.
-        The planner's vectorized coarse pruning pass works on this columnar
-        form; at 100 TB file counts (~10^6 manifest rows) the per-row dict
-        materialization alone costs seconds, so conversion happens only for
-        rows that survive the coarse pass."""
-        info = self.manifest.get("fileManifest")
-        if not info:
-            return None
-        if self._file_manifest_tbl is None:
+    def relation_df(self, kind: str, name: str | None = None) -> DataFrame:
+        """The on-disk relation of one scan relation, every column, at
+        native file-split parallelism."""
+        if kind == "flat":
+            return self.flat_df()
+        if kind == "cube":
+            return self._cube_base(name)
+        return self.projection_df(name)
+
+    def relation_root(self, kind: str, name: str | None = None) -> str:
+        return os.path.join(self.path, self.relation_entry(kind, name)["path"])
+
+    def scan_files(self, kind: str, name: str | None = None) -> ScanFiles:
+        """The listing and per-file manifest of one scan relation, read
+        driver-side (pyarrow, no Spark job) and memoized per epoch. Files
+        appended after the build are listed but unmanifested; pruning keeps
+        them. Cube intervals compare against the per-file BUCKET min/max
+        (cube eligibility requires bucket-aligned intervals, so that is
+        exact); flat and projection intervals against the time column."""
+        key = (kind, name)
+        sf = self._scan_files.get(key)
+        if sf is None:
             import pyarrow.parquet as pq
 
-            self._file_manifest_tbl = pq.read_table(
-                os.path.join(self.path, info["path"])
+            # the flat table's file manifest sits at the top level
+            holder = self.manifest if kind == "flat" else self.relation_entry(
+                kind, name
             )
-        return self._file_manifest_tbl
-
-    def file_manifest(self) -> dict[str, dict] | None:
-        """file path -> per-file stats row (min__c / max__c / set__c).
-        None when the index predates file manifests. Files appended after the
-        build are simply absent, and the pruner keeps unknown files."""
-        tbl = self.file_manifest_table()
-        if tbl is None:
-            return None
-        if self._file_manifest is None:
-            self._file_manifest = {r["file"]: r for r in tbl.to_pylist()}
-        return self._file_manifest
-
-    def flat_input_files(self) -> list[str]:
-        """Current flat file listing (memoized per epoch)."""
-        if self._input_files is None:
-            self._input_files = list(self.flat_df().inputFiles())
-        return self._input_files
-
-    def pruning_path_sets(self) -> tuple[list[str], set[str]]:
-        """(flat listing keys, manifested key set) under the index-relative
-        ``_file_key`` — memoized per epoch. Keying a 10^6-file listing
-        costs ~0.5 s of driver time; paying it once per epoch instead of
-        per query keeps repeat planning at set-lookup cost."""
-        if self._path_keys is None:
-            listing = [_file_key(p) for p in self.flat_input_files()]
-            tbl = self.file_manifest_table()
-            manifested = (
-                {_file_key(p) for p in tbl.column("file").to_pylist()}
-                if tbl is not None
-                else set()
+            sf = ScanFiles.build(
+                pq.read_table(
+                    os.path.join(self.path, holder["fileManifest"]["path"])
+                ),
+                list(self.relation_df(kind, name).inputFiles()),
+                BUCKET_COL if kind == "cube" else self.time_col,
             )
-            self._path_keys = (listing, manifested)
-        return self._path_keys
-
-    def files_by_month(self):
-        """The flat listing grouped by its ``__tpart=`` partition directory
-        (memoized per epoch): ``(by_month, unmanifested_by_month)`` where
-        ``by_month`` maps month string (or None for paths without a month
-        dir) -> (original paths, path keys) and
-        ``unmanifested_by_month`` lists files absent from the manifest per
-        month. ``by_month`` is None when no path carries a month dir
-        (foreign layouts) — the planner then falls back to the full-listing
-        walk. This is what lets interval pruning iterate only
-        interval-surviving months' files: the per-query Python loop scales
-        with PRUNED file count, not total (the last O(total-files)
-        driver-side cost — SCALE.md)."""
-        if self._files_by_month is None:
-            import re
-
-            listing, manifested = self.pruning_path_sets()
-            origs = self.flat_input_files()
-            rx = re.compile(r"/" + re.escape(MONTH_COL) + r"=([^/]+)/")
-            by: dict = {}
-            unman: dict = {}
-            any_month = False
-            for p, np_ in zip(origs, listing):
-                m = rx.search(p)
-                key = m.group(1) if m else None
-                if key is not None:
-                    any_month = True
-                b = by.setdefault(key, ([], []))
-                b[0].append(p)
-                b[1].append(np_)
-                if np_ not in manifested:
-                    unman.setdefault(key, []).append(p)
-            self._files_by_month = (by if any_month else None, unman)
-        return self._files_by_month
-
-    def _aux_manifest(self, kind: str, name: str) -> list | None:
-        """Per-file stats rows (list of dicts: file, min__c / max__c /
-        set__c) of one cube or projection, ``kind`` naming its manifest
-        section ("cubes" or "projections") — memoized per epoch; None when
-        it predates per-file manifests. These manifests hold files × grain
-        columns, so full materialization is cheap (no vectorized pass
-        needed)."""
-        key = (kind, name)
-        if key not in self._aux_manifests:
-            info = self.manifest[kind][name].get("fileManifest")
-            rows = None
-            if info:
-                import pyarrow.parquet as pq
-
-                rows = pq.read_table(
-                    os.path.join(self.path, info["path"])
-                ).to_pylist()
-            self._aux_manifests[key] = rows
-        return self._aux_manifests[key]
-
-    def _aux_input_files(self, kind: str, name: str) -> list[str]:
-        """Current file listing of one cube or projection (memoized per
-        epoch)."""
-        key = (kind, name)
-        if key not in self._aux_files:
-            df = (
-                self._cube_base(name)
-                if kind == "cubes"
-                else self.projection_df(name)
-            )
-            self._aux_files[key] = list(df.inputFiles())
-        return self._aux_files[key]
-
-    def cube_file_manifest(self, name: str) -> list | None:
-        return self._aux_manifest("cubes", name)
-
-    def cube_input_files(self, name: str) -> list[str]:
-        return self._aux_input_files("cubes", name)
+            self._scan_files[key] = sf
+        return sf
 
     def projection_df(self, name: str) -> DataFrame:
         """A narrow row-grain projection's relation (memoized per epoch)."""
@@ -2324,12 +2313,6 @@ class OlapIndex:
             df = reader.parquet(os.path.join(self.path, entry["path"]))
             self._df_memo[key] = df
         return df
-
-    def projection_file_manifest(self, name: str) -> list | None:
-        return self._aux_manifest("projections", name)
-
-    def projection_input_files(self, name: str) -> list[str]:
-        return self._aux_input_files("projections", name)
 
     def tune_read_parallelism(
         self, floor: int = 16 << 20, ceil: int = 128 << 20, per_core: int = 2
@@ -2350,7 +2333,7 @@ class OlapIndex:
         while 16 MB keeps every core fed at the bench scale. Returns
         the chosen byte size."""
         total = 0
-        for root, _dirs, files in os.walk(self.flat_root()):
+        for root, _dirs, files in os.walk(self.relation_root("flat")):
             for f in files:
                 if f.endswith(".parquet"):
                     total += os.path.getsize(os.path.join(root, f))
@@ -2442,13 +2425,7 @@ class OlapIndex:
             self._df_memo[f"cube_{name}__pin"].unpersist()
         self._df_memo.clear()
         self._pinned.clear()
-        self._file_manifest = None
-        self._file_manifest_tbl = None
-        self._input_files = None
-        self._path_keys = None
-        self._files_by_month = None
-        self._aux_manifests = {}
-        self._aux_files = {}
+        self._scan_files.clear()
         self.epoch += 1
 
     def append_batch(self, flat_batch: DataFrame) -> int:

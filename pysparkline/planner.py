@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import index as index_mod
 from . import ir, lowering
-from .index import OlapIndex, _file_key
+from .index import _MONTH_DIR_RX, OlapIndex, _file_key
 from .lowering import AggLoweringError, Backing
 from .metadata import FDGraph
 
@@ -42,6 +42,11 @@ class PlanDecision:
     cube_name: str | None = None
     estimated_groups: float | None = None
     notes: list[str] = field(default_factory=list)
+    # the index relation scanned from files, (kind, name) as in
+    # OlapIndex.relation_entry; None for a pinned cube or a base scan
+    scan: tuple | None = None
+    # (kept, total) files when the per-file manifest pruned that scan
+    kept_files: tuple | None = None
 
     def pretty(self) -> str:
         head = f"backing={self.backing}" + (
@@ -613,11 +618,6 @@ def _intervals_overlap(row: dict, time_col: str, ivs: list) -> bool:
     return False
 
 
-# built from the shared constant so the planner and index.files_by_month
-# cannot silently disagree on the partition directory name
-_MONTH_RX = re.compile(r"/" + re.escape(index_mod.MONTH_COL) + r"=([^/]+)/")
-
-
 def _parse_interval_bounds(ivs: list):
     """Intervals parsed to [(start_dt|None, end_dt|None)] ONCE per query —
     the month loop must not re-parse the same ISO strings per month. None
@@ -907,35 +907,27 @@ def _vector_excluded_mask(tbl, f, time_col: str, ivs: list):
     return excluded, needs_row
 
 
-def prune_flat_files(
-    index: OlapIndex, q: ir.QuerySpec
+def prune_files(
+    index: OlapIndex, kind: str, name: str | None, q: ir.QuerySpec
 ) -> tuple[list[str], int] | None:
-    """Explicit file list for ``q`` over the flat backing, or None when the
-    manifest is absent / the query prunes nothing. Unmanifested files (e.g.
-    appended after the build) are always kept.
+    """Explicit file list for ``q`` over one scan relation (the flat table,
+    a cube or a projection: ``OlapIndex.relation_entry``), or None when the
+    query prunes nothing. Unmanifested files (e.g. appended after the
+    build) are always kept.
 
     Two passes: a vectorized arrow min/max pass excludes the bulk of the
     files in milliseconds even at 10^6 manifest rows, then the exact
     per-row walk (`_file_passes`: value sets, OR trees, NOT, spatial) runs
     only on the survivors. Identical results to running the per-row walk
     alone — the vector pass is strictly conservative."""
-    tbl = index.file_manifest_table()
-    if tbl is None:
-        # no columnar manifest: the exact per-row walk alone
-        fm = index.file_manifest()
-        if fm is None:
-            return None
-        return _prune_files_per_row(
-            index.flat_input_files(), list(fm.values()), index.time_col, q
-        )
     f = getattr(q, "filter", None)
     ivs = getattr(q, "intervals", None) or []
     if f is None and not ivs:
         return None
     import numpy as np
 
-    all_files = index.flat_input_files()
-    tcol = index.time_col
+    sf = index.scan_files(kind, name)
+    tbl, tcol = sf.table, sf.time_col
     excluded, needs_row = _vector_excluded_mask(tbl, f, tcol, ivs)
     keep_mask = ~excluded
     row_idx = np.flatnonzero(needs_row & keep_mask)
@@ -965,14 +957,8 @@ def prune_flat_files(
         .take(np.flatnonzero(keep_mask))
         .to_pylist()
     }
-    # listing keys + manifested key set are epoch-memoized on the index (a
-    # 10^6-file pass costs ~0.5 s — once, not per query)
-    keys, manifested_n = index.pruning_path_sets()
-    by_month = unman_by_month = None
     iv_bounds = _parse_interval_bounds(ivs) if ivs else None
-    if iv_bounds is not None:
-        by_month, unman_by_month = index.files_by_month()
-    if by_month is not None:
+    if iv_bounds is not None and sf.by_month is not None:
         # interval query over a month-partitioned layout: compose the
         # keep list from interval-surviving months only, so this final
         # Python loop scales with PRUNED file count, not total.
@@ -985,11 +971,11 @@ def prune_flat_files(
         # trusted over actual data stats, same as the full walk).
         months_with_passing = {
             m.group(1)
-            for m in (_MONTH_RX.search(q) for q in passing)
+            for m in (_MONTH_DIR_RX.search(k) for k in passing)
             if m is not None
         }
         keep = []
-        for mkey, (origs, norms) in by_month.items():
+        for mkey, (origs, keys) in sf.by_month.items():
             if (
                 mkey is None
                 or mkey in months_with_passing
@@ -997,79 +983,20 @@ def prune_flat_files(
             ):
                 keep.extend(
                     p
-                    for p, q in zip(origs, norms)
-                    if q in passing or q not in manifested_n
+                    for p, k in zip(origs, keys)
+                    if k in passing or k not in sf.manifested
                 )
             else:
-                keep.extend(unman_by_month.get(mkey, ()))
+                keep.extend(sf.unmanifested_by_month.get(mkey, ()))
     else:
         keep = [
             p
-            for p, np_ in zip(all_files, keys)
-            if np_ in passing or np_ not in manifested_n
+            for p, k in zip(sf.listing, sf.keys)
+            if k in passing or k not in sf.manifested
         ]
-    if len(keep) == len(all_files):
+    if len(keep) == len(sf.listing):
         return None
-    return keep, len(all_files)
-
-
-def prune_cube_files(
-    index: OlapIndex, name: str, q: ir.QuerySpec
-) -> tuple[list[str], int] | None:
-    """Explicit file list for ``q`` over cube ``name``, or None when the
-    cube has no per-file manifest / the query prunes nothing. Same
-    conservative semantics as prune_flat_files; intervals compare against
-    per-file BUCKET min/max, exact because cube eligibility already
-    requires bucket-aligned intervals. Cube manifests hold files × grain
-    columns (small at any data scale — file count is byte-floored), so the
-    per-row walk suffices; unmanifested files (streaming appends before
-    compaction) are always kept."""
-    rows = index.cube_file_manifest(name)
-    if rows is None:
-        return None
-    files = index.cube_input_files(name)
-    return _prune_files_per_row(files, rows, index_mod.BUCKET_COL, q)
-
-
-def _prune_files_per_row(
-    files: list[str], rows: list, time_col: str, q: ir.QuerySpec
-) -> tuple[list[str], int] | None:
-    """Per-row manifest walk shared by cube and projection pruning (their
-    manifests are byte-floored-small; the flat path keeps its vectorized
-    arrow pass). Same conservative semantics as prune_flat_files."""
-    f = getattr(q, "filter", None)
-    ivs = getattr(q, "intervals", None) or []
-    if f is None and not ivs:
-        return None
-    by_key = {_file_key(r["file"]): r for r in rows}
-    keep = []
-    for p in files:
-        row = by_key.get(_file_key(p))
-        if row is None:
-            keep.append(p)
-            continue
-        ok = not ivs or _intervals_overlap(row, time_col, ivs)
-        if ok and f is not None:
-            ok = _file_passes(row, f)
-        if ok:
-            keep.append(p)
-    if len(keep) == len(files):
-        return None
-    return keep, len(files)
-
-
-def prune_projection_files(
-    index: OlapIndex, name: str, q: ir.QuerySpec
-) -> tuple[list[str], int] | None:
-    """Explicit file list for ``q`` over projection ``name`` — whole-file
-    skipping on the projection's own per-file stats (its sort_cols ranges
-    are tight by construction); intervals compare against the REAL time
-    column's per-file min/max, so no bucket-alignment requirement."""
-    rows = index.projection_file_manifest(name)
-    if rows is None:
-        return None
-    files = index.projection_input_files(name)
-    return _prune_files_per_row(files, rows, index.time_col, q)
+    return keep, len(sf.listing)
 
 
 def _columns_provable(q: ir.QuerySpec) -> bool:
@@ -1137,16 +1064,6 @@ def covering_projections(
     return [name for _w, name in sorted(out)]
 
 
-def choose_projection(
-    index: OlapIndex, referenced: set, q: ir.QuerySpec
-) -> str | None:
-    """The NARROWEST covering projection, or None (legacy/width order —
-    choose_backing upgrades to kept-bytes cost when the manifests carry
-    bytesPerRow stamps)."""
-    cov = covering_projections(index, referenced, q)
-    return cov[0] if cov else None
-
-
 _SKETCH_AGG_TYPES = (
     ir.CardinalityAgg, ir.HyperUniqueAgg, ir.ThetaAgg, ir.ThetaSketchAgg,
     ir.HistQuantileAgg, ir.QuantileAgg,
@@ -1165,7 +1082,7 @@ def _query_has_sketch_aggs(q: ir.QuerySpec) -> bool:
 
 def _cube_scan_bytes_per_row(
     info: dict, q: ir.QuerySpec, referenced: set
-) -> float | None:
+) -> float:
     """Estimated bytes/row a cube scan actually READS for ``q`` — the
     column-store cost, not the row width. Whole-row pricing made
     sketch-heavy small cubes (HLL binaries + top-k maps are ~90% of their
@@ -1175,12 +1092,8 @@ def _cube_scan_bytes_per_row(
     SCALAR measure column (over-counts the 2-3 the lowering touches, but
     scalar measures are thin and near-uniform across candidates, so the
     ordering stays fair); sketch-typed columns (binary/map/array) are
-    charged only when the query carries sketch-consuming aggregates.
-    None when the manifest predates the per-column stamp — the caller
-    falls back to whole-row, then to rowCount order."""
-    col_bpr = info.get("columnBytesPerRow")
-    if not col_bpr:
-        return info.get("bytesPerRow")
+    charged only when the query carries sketch-consuming aggregates."""
+    col_bpr = info["columnBytesPerRow"]
     dims = set(info.get("dims") or [])
     sketchy = _query_has_sketch_aggs(q)
     total = 0.0
@@ -1193,7 +1106,31 @@ def _cube_scan_bytes_per_row(
         ):
             continue
         total += col_bpr.get(c, 0.0)
-    return total or info.get("bytesPerRow")
+    return total or info["bytesPerRow"]
+
+
+def _kept_bytes(
+    index: OlapIndex, kind: str, name: str | None, q: ir.QuerySpec,
+    referenced: set, pr: tuple | None,
+) -> float:
+    """Estimated bytes a scan of one relation reads for ``q``: rowCount x
+    bytes/row of the columns it reads x the kept-file ratio of ``pr``
+    (``prune_files``; files are byte-floored, so the count ratio tracks
+    the byte ratio). Cubes price ``_cube_scan_bytes_per_row``'s columns;
+    the flat table and projections price the referenced columns plus the
+    time column (column store), so a flat-vs-projection choice prices the
+    same column set on both sides and reduces to kept-file ratios and
+    in-situ compression."""
+    info = index.relation_entry(kind, name)
+    if kind == "cube":
+        bpr = _cube_scan_bytes_per_row(info, q, referenced)
+    else:
+        col_bpr = info["columnBytesPerRow"]
+        scan_cols = referenced | {index.time_col}
+        got = [col_bpr[c] for c in scan_cols if c in col_bpr]
+        bpr = sum(got) if got else info["bytesPerRow"]
+    ratio = len(pr[0]) / pr[1] if pr else 1.0
+    return info["rowCount"] * bpr * ratio
 
 
 def _cube_relation(
@@ -1212,36 +1149,37 @@ def _cube_relation(
     return f"disk: needs sketch columns {sorted(missing)}" if missing else "pinned"
 
 
-def _pruned_cube_df(index: OlapIndex, name: str, files: list[str]) -> DataFrame:
-    base = index._cube_base(name)
-    rel = index.manifest["cubes"][name]["path"]
-    return _pruned_aux_df(index, base, rel, files)
-
-
-def _pruned_aux_df(
-    index: OlapIndex, base: DataFrame, rel: str, files: list[str]
+def _pruned_df(
+    index: OlapIndex, kind: str, name: str | None, files: list[str]
 ) -> DataFrame:
-    import os
-
-    if not files:
-        return base.where(F.lit(False))
-    root = os.path.join(index.path, rel)
-    return (
-        index.spark.read.schema(base.schema)
-        .option("basePath", root)
-        .parquet(*files)
-    )
-
-
-def _pruned_flat_df(index: OlapIndex, files: list[str]) -> DataFrame:
+    """The relation re-read over its kept files only (uncoalesced)."""
+    base = index.relation_df(kind, name)
     if not files:
         # provably empty — keep the schema, skip the scan entirely
-        return index.flat_df().where(F.lit(False))
+        return base.where(F.lit(False))
     return (
-        index.spark.read.schema(index.flat_df().schema)
-        .option("basePath", index.flat_root())
+        index.spark.read.schema(base.schema)
+        .option("basePath", index.relation_root(kind, name))
         .parquet(*files)
     )
+
+
+def _read_relation(
+    index: OlapIndex, backing: Backing, decision: PlanDecision, kind: str,
+    name: str | None, pr: tuple | None,
+) -> None:
+    """Record the scan relation that serves ``decision`` and, when the
+    manifest pruned it, point the backing at the kept files."""
+    decision.scan = (kind, name)
+    if pr is None:
+        return
+    files, total = pr
+    decision.kept_files = (len(files), total)
+    label = "" if kind == "flat" else kind + " "
+    decision.notes.append(
+        f"{label}file manifest pruned scan: {len(files)}/{total} files"
+    )
+    backing.df = _pruned_df(index, kind, name, files)
 
 
 def choose_backing(
@@ -1323,129 +1261,80 @@ def choose_backing(
                 # cost tie-breaker (VERDICT r10 missing #1): rowCount
                 # ordering alone lets the smallest cube beat a larger but
                 # better-pruning rollup. Score each eligible cube by
-                # ESTIMATED BYTES SCANNED after manifest pruning —
-                # bytesPerRow (on-disk stamp from the build) x rowCount x
-                # kept-file ratio (files are byte-floored, so the count
-                # ratio tracks the byte ratio) — and take the cheapest.
-                # Deterministic: ties fall to rowCount then name; manifests
-                # predating the stamp keep the pure rowCount order. A cube
-                # the pin serves is scanned whole from memory (the in-memory
-                # scan's batch statistics prune): a pruned file list would
-                # be a new relation the cache never matches, so such a cube
-                # is neither file-pruned nor priced as pruned.
+                # ESTIMATED BYTES SCANNED after manifest pruning
+                # (_kept_bytes) and take the cheapest. Deterministic: ties
+                # fall to rowCount then name. A cube the pin serves is
+                # scanned whole from memory (the in-memory scan's batch
+                # statistics prune): a pruned file list would be a new
+                # relation the cache never matches, so such a cube is
+                # neither file-pruned nor priced as pruned.
                 scored = []
                 for rows, name, b in candidates:
                     rel = _cube_relation(index, name, b, referenced)
                     pr = (
                         None if rel == "pinned"
-                        else prune_cube_files(index, name, q)
+                        else prune_files(index, "cube", name, q)
                     )
-                    ratio = len(pr[0]) / pr[1] if pr and pr[1] else 1.0
-                    bpr = _cube_scan_bytes_per_row(
-                        index.manifest["cubes"][name], q, referenced
-                    )
-                    cost = rows * bpr * ratio if bpr else None
+                    cost = _kept_bytes(index, "cube", name, q, referenced, pr)
                     scored.append((cost, rows, name, b, pr, rel))
-                if all(s[0] is not None for s in scored):
-                    scored.sort(key=lambda s: (s[0], s[1], s[2]))
-                    if len(scored) > 1 and scored[0][2] != min(
-                        scored, key=lambda s: (s[1], s[2])
-                    )[2]:
-                        notes.append(
-                            "cost tie-breaker: kept-bytes order overrode "
-                            "rowCount order"
-                        )
-                else:
-                    scored.sort(key=lambda s: (s[1], s[2]))
+                scored.sort(key=lambda s: (s[0], s[1], s[2]))
+                if len(scored) > 1 and scored[0][2] != min(
+                    scored, key=lambda s: (s[1], s[2])
+                )[2]:
+                    notes.append(
+                        "cost tie-breaker: kept-bytes order overrode "
+                        "rowCount order"
+                    )
                 cost, rows, name, backing, pr, rel = scored[0]
                 notes.append(
-                    f"chose cube {name} ({rows} rows"
-                    + (f", ~{int(cost)} kept bytes)" if cost is not None
-                       else ")")
+                    f"chose cube {name} ({rows} rows, ~{int(cost)} kept bytes)"
                 )
                 if rel:
                     notes.append(f"cube {name} relation: {rel}")
-                if pr is not None:
-                    files, total = pr
-                    notes.append(
-                        f"cube file manifest pruned scan: "
-                        f"{len(files)}/{total} files"
-                    )
-                    backing.df = _pruned_cube_df(index, name, files)
-                return backing, PlanDecision("cube", name, est, notes)
+                decision = PlanDecision("cube", name, est, notes)
+                if rel != "pinned":
+                    _read_relation(index, backing, decision, "cube", name, pr)
+                return backing, decision
 
     if referenced <= flat_cols:
         notes.append("flat backing: all referenced columns in flattened star")
         backing = Backing.flat(index)
+        scan, pr = "flat", prune_files(index, "flat", None, q)
+        proj = None
         cov = covering_projections(index, referenced, q)
-        proj = cov[0] if cov else None
-        flat_pr: tuple | None = None
-        flat_pruned = False
         if cov:
             # kept-bytes cost competition (VERDICT r10 missing #1): a
             # covering projection wins over the flat (and over a wider
-            # sibling) only when its estimated post-pruning bytes —
-            # bytesPerRow x rows x kept-file ratio — are smaller; the flat's
-            # z-order manifest may prune a predicate a projection's sort
-            # cannot. Width order stands in when any stamp is missing.
-            flat_pr = prune_flat_files(index, q)
-            flat_pruned = True
-            flat_info = index.manifest.get("flat") or {}
-            # price only the columns the scan reads (column store): the
-            # per-column stamp makes flat-vs-projection a fair fight —
-            # both sides read the same referenced set, so the decision
-            # reduces to kept-file ratios + in-situ compression. Whole-row
-            # widths stand in when a manifest predates the stamp.
-            scan_cols = referenced | {index.time_col}
-
-            def _row_bytes(info):
-                col_bpr = info.get("columnBytesPerRow")
-                if not col_bpr:
-                    return info.get("bytesPerRow")
-                got = [col_bpr[c] for c in scan_cols if c in col_bpr]
-                if not got:
-                    return info.get("bytesPerRow")
-                return sum(got)
-
-            def _cost(bpr, rows, pr):
-                if not bpr or not rows:
-                    return None
-                ratio = len(pr[0]) / pr[1] if pr and pr[1] else 1.0
-                return bpr * rows * ratio
-
+            # sibling) only when its estimated post-pruning bytes are
+            # smaller; the flat's z-order manifest may prune a predicate a
+            # projection's sort cannot.
+            flat_cost = _kept_bytes(index, "flat", None, q, referenced, pr)
             scored = []
             for name in cov:
-                info = index.manifest["projections"][name]
-                ppr = prune_projection_files(index, name, q)
-                c = _cost(_row_bytes(info), info.get("rowCount"), ppr)
-                scored.append((c, len(info["columns"]), name, ppr))
-            flat_cost = _cost(
-                _row_bytes(flat_info), flat_info.get("rowCount"), flat_pr,
-            )
-            if flat_cost is not None and all(
-                s[0] is not None for s in scored
-            ):
-                scored.sort(key=lambda s: (s[0], s[1], s[2]))
-                best = scored[0]
-                # the flat must be meaningfully cheaper (25%+) to override
-                # a covering projection: the byte model can't see the
-                # projection's sort selectivity (tight row groups on its
-                # own predicates), and near-ties at small scale are
-                # footer-overhead noise
-                if best[0] <= flat_cost * 1.25:
-                    proj, proj_pr = best[2], best[3]
-                    notes.append(
-                        f"kept-bytes cost: projection {proj} "
-                        f"~{int(best[0])} B vs flat ~{int(flat_cost)} B"
-                    )
-                else:
-                    proj = None
-                    notes.append(
-                        f"kept-bytes cost: flat ~{int(flat_cost)} B beats "
-                        f"projection {best[2]} ~{int(best[0])} B"
-                    )
+                ppr = prune_files(index, "projection", name, q)
+                scored.append((
+                    _kept_bytes(index, "projection", name, q, referenced, ppr),
+                    len(index.manifest["projections"][name]["columns"]),
+                    name,
+                    ppr,
+                ))
+            best = min(scored, key=lambda s: (s[0], s[1], s[2]))
+            # the flat must be meaningfully cheaper (25%+) to override
+            # a covering projection: the byte model can't see the
+            # projection's sort selectivity (tight row groups on its
+            # own predicates), and near-ties at small scale are
+            # footer-overhead noise
+            if best[0] <= flat_cost * 1.25:
+                scan, proj, pr = "projection", best[2], best[3]
+                notes.append(
+                    f"kept-bytes cost: projection {proj} "
+                    f"~{int(best[0])} B vs flat ~{int(flat_cost)} B"
+                )
             else:
-                proj_pr = next(s[3] for s in scored if s[2] == proj)
+                notes.append(
+                    f"kept-bytes cost: flat ~{int(flat_cost)} B beats "
+                    f"projection {best[2]} ~{int(best[0])} B"
+                )
         if proj is not None:
             # narrow row-grain projection covers the query: identical rows,
             # a fraction of the column bytes, sorted for its own predicates
@@ -1455,23 +1344,8 @@ def choose_backing(
                 f"({len(info['columns'])} cols vs {len(flat_cols)} flat)"
             )
             backing.df = index.projection_df(proj)
-            if proj_pr is not None:
-                files, total = proj_pr
-                notes.append(
-                    f"projection file manifest pruned scan: "
-                    f"{len(files)}/{total} files"
-                )
-                backing.df = _pruned_aux_df(
-                    index, backing.df, info["path"], files
-                )
-        else:
-            pr = flat_pr if flat_pruned else prune_flat_files(index, q)
-            if pr is not None:
-                files, total = pr
-                notes.append(
-                    f"file manifest pruned scan: {len(files)}/{total} files"
-                )
-                backing.df = _pruned_flat_df(index, files)
+        decision = PlanDecision("flat", None, est, notes)
+        _read_relation(index, backing, decision, scan, proj, pr)
         n = _distinct_skew_buckets(q, est, backing.df)
         if n > 1:
             backing.distinct_buckets = n
@@ -1479,7 +1353,7 @@ def choose_backing(
                 f"distinct-agg skew guard: est groups {int(est)} < shuffle "
                 f"parallelism — value-space bucketed x{n}"
             )
-        return backing, PlanDecision("flat", None, est, notes)
+        return backing, decision
 
     if base_df is not None:
         notes.append(

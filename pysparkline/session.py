@@ -1288,30 +1288,25 @@ class OlapContext:
             return "\n".join(lines)
         spec, backing, decision = self.plan(spec)
         lines = [f"query shape: {type(spec).__name__}", decision.pretty()]
-        if decision.backing == "flat":
-            from . import planner as _planner
-
-            pr = _planner.prune_flat_files(self.index, spec)
-            if pr is None:
-                total = len(self.index.flat_input_files())
-                lines.append(
-                    f"pruning: no file-level pruning (scan {total}/{total}"
-                    " files; partition/row-group pruning still applies)"
-                )
-            else:
-                kept, total = pr
-                pct = 100.0 * len(kept) / max(total, 1)
-                lines.append(
-                    f"pruning: keep {len(kept)}/{total} files"
-                    f" ({pct:.1f}%) via the per-file manifest"
-                )
-        elif decision.backing == "cube" and decision.cube_name:
-            info = self.index.manifest["cubes"].get(decision.cube_name, {})
-            if info.get("rowCount") is not None:
-                lines.append(
-                    f"cube rows: {info['rowCount']} (vs flat"
-                    f" {self.index.manifest['flat'].get('rowCount', '?')})"
-                )
+        if decision.kept_files is not None:
+            kept, total = decision.kept_files
+            pct = 100.0 * kept / max(total, 1)
+            lines.append(
+                f"pruning: keep {kept}/{total} files"
+                f" ({pct:.1f}%) via the per-file manifest"
+            )
+        elif decision.scan is not None:
+            total = len(self.index.scan_files(*decision.scan).listing)
+            lines.append(
+                f"pruning: no file-level pruning (scan {total}/{total}"
+                " files; partition/row-group pruning still applies)"
+            )
+        if decision.backing == "cube" and decision.cube_name:
+            m = self.index.manifest
+            lines.append(
+                f"cube rows: {m['cubes'][decision.cube_name]['rowCount']}"
+                f" (vs flat {m['flat']['rowCount']})"
+            )
         lines.append(f"spec: {json.dumps(spec.to_dict(), default=str)}")
         return "\n".join(lines)
 

@@ -235,7 +235,7 @@ class StreamingIngest:
         t = self.index.config.time_col
         lo, hi = batch_df.agg(F.min(t), F.max(t)).collect()[0]
         m = self.index.manifest
-        m["flat"]["rowCount"] = m["flat"].get("rowCount", 0) + n
+        m["flat"]["rowCount"] += n
 
         def absent(v) -> bool:  # empty initial build stores str(None)
             return v in (None, "None", "")
@@ -343,7 +343,7 @@ class StreamingIngest:
             spark, final, cfg, cube, path, self.index.path, rows,
             # the manifest's on-disk stamp seeds the byte floor — no probe
             # write per compaction
-            bpr_hint=info.get("bytesPerRow"),
+            bpr_hint=info["bytesPerRow"],
         )
         import shutil
 
@@ -392,11 +392,9 @@ class StreamingIngest:
 
         idx, cfg, spark = self.index, self.index.config, self.index.spark
         flat_root = os.path.join(idx.path, "flat")
-        fm_info = idx.manifest.get("fileManifest")
-        if fm_info is None:
-            raise ValueError("index predates file manifests; rebuild it")
+        fm_info = idx.manifest["fileManifest"]
         if months is None:
-            known = {_file_key(f) for f in idx.file_manifest() or {}}
+            known = idx.scan_files("flat").manifested
             months = []
             for d in sorted(os.listdir(flat_root)):
                 if not d.startswith(f"{MONTH_COL}="):
@@ -546,14 +544,9 @@ class StreamingIngest:
         for p in cfg.projections:
             if names is not None and p.name not in names:
                 continue
-            info = idx.manifest.get("projections", {}).get(p.name)
-            if info is None or not info.get("fileManifest"):
-                continue
+            info = idx.manifest["projections"][p.name]
             root = os.path.join(idx.path, info["path"])
-            known = {
-                _file_key(r["file"])
-                for r in (idx.projection_file_manifest(p.name) or [])
-            }
+            known = idx.scan_files("projection", p.name).manifested
             if not info.get("partitioned", True):
                 # byte-floor-collapsed layout (no time dirs): the whole
                 # projection is smaller than ~one target file by

@@ -12,7 +12,10 @@ this probe measures them:
      resolution.
   B. DRIVER-COST scaling: the pruning loop is driver-side Python over
      manifest rows — replicate the real rows to 10^5 and 10^6 files (the
-     hundreds-of-partitions regime) and time `prune_flat_files` itself.
+     hundreds-of-partitions regime) and time `planner.prune_files` itself,
+     on the flat manifest and on a 10^5-row projection manifest (row grain:
+     projections reach flat-like file counts), next to the exact per-row
+     walk alone.
 
 Usage: python scale_probe_manifest.py   (prints one JSON line)
 """
@@ -24,11 +27,12 @@ import os
 import shutil
 import tempfile
 import time
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
 from pysparkline import ir, planner, tpch
-from pysparkline.index import OlapIndex
+from pysparkline.index import OlapIndex, ScanFiles
 from pysparkline.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -63,58 +67,71 @@ def _probe_query(f: ir.FilterSpec) -> ir.GroupByQuery:
 
 
 class _StubIndex:
-    """prune_flat_files sees only file_manifest_table()/file_manifest()/
-    flat_input_files()/time_col (+ the memoized path hooks real indexes
-    carry) — enough to drive every pruning path over a synthetic listing."""
+    """prune_files reads only ``scan_files(kind, name)`` — enough to drive
+    every pruning path over a synthetic listing."""
 
-    def __init__(self, fm_tbl, files: list, time_col: str, use_table: bool,
-                 with_months: bool = False):
-        self._tbl, self._files, self.time_col = fm_tbl, files, time_col
-        self._use_table = use_table
-        self._with_months = with_months
-        self._dict = None
-        self._paths = None
-        self._fbm = None
+    def __init__(self, sf: ScanFiles):
+        self._sf = sf
 
-    def file_manifest_table(self):
-        return self._tbl if self._use_table else None
+    def scan_files(self, kind, name=None) -> ScanFiles:
+        return self._sf
 
-    def file_manifest(self):
-        if self._dict is None:
-            self._dict = {r["file"]: r for r in self._tbl.to_pylist()}
-        return self._dict
 
-    def flat_input_files(self):
-        return self._files
+def _replicate(base_tbl, tcol: str, n: int, rel: str):
+    """``base_tbl``'s rows replicated to ``n`` files under ``rel``, with an
+    honest month layout: replica r is one month of a ~10-year span, and its
+    dir label AND time stats agree (ScanFiles.by_month's contract on a real
+    index). Returns (manifest table, listing)."""
+    import datetime as _dt
 
-    def pruning_path_sets(self):
-        if self._paths is None:
-            listing = [planner._file_key(p) for p in self._files]
-            manifested = {
-                planner._file_key(p)
-                for p in self._tbl.column("file").to_pylist()
-            }
-            self._paths = (listing, manifested)
-        return self._paths
+    import pyarrow as pa
 
-    def files_by_month(self):
-        if not self._with_months:
-            return None, {}
-        if self._fbm is None:
-            listing, manifested = self.pruning_path_sets()
-            by, unman = {}, {}
-            any_month = False
-            for p, np_ in zip(self._files, listing):
-                m = planner._MONTH_RX.search(p)
-                key = m.group(1) if m else None
-                any_month = any_month or key is not None
-                b = by.setdefault(key, ([], []))
-                b[0].append(p)
-                b[1].append(np_)
-                if np_ not in manifested:
-                    unman.setdefault(key, []).append(p)
-            self._fbm = (by if any_month else None, unman)
-        return self._fbm
+    tmin_i = base_tbl.schema.get_field_index(f"min__{tcol}")
+    tmax_i = base_tbl.schema.get_field_index(f"max__{tcol}")
+    t_type = base_tbl.column(tmin_i).type
+    nrow = base_tbl.num_rows
+    parts, files = [], []
+    for r in range(-(-n // nrow)):
+        y, mo = 1993 + (r // 12) % 10, 1 + r % 12
+        paths = [
+            f"/synthetic/{rel}/part{r}/__tpart={y:04d}-{mo:02d}/f{i}.parquet"
+            for i in range(nrow)
+        ]
+        lo, hi = _dt.datetime(y, mo, 3), _dt.datetime(y, mo, 27)
+        if pa.types.is_date(t_type):
+            lo, hi = lo.date(), hi.date()
+        t = base_tbl.set_column(
+            base_tbl.schema.get_field_index("file"), "file", pa.array(paths)
+        )
+        t = t.set_column(tmin_i, f"min__{tcol}", pa.array([lo] * nrow, t_type))
+        t = t.set_column(tmax_i, f"max__{tcol}", pa.array([hi] * nrow, t_type))
+        parts.append(t)
+        files.extend(paths)
+    return pa.concat_tables(parts).slice(0, n), files[:n]
+
+
+def _per_row_walk(sf: ScanFiles, rows: list, q) -> int:
+    """The exact per-row walk alone (`_intervals_overlap` + `_file_passes`
+    over every manifest row, keyed by ``_file_key``; ``rows`` is the
+    manifest's ``to_pylist()``) — the reference the vector pass equals.
+    Returns the kept file count."""
+    by_key = {planner._file_key(r["file"]): r for r in rows}
+    kept = 0
+    for k in sf.keys:
+        row = by_key.get(k)
+        ok = row is None or not q.intervals or planner._intervals_overlap(
+            row, sf.time_col, q.intervals
+        )
+        if ok and row is not None and q.filter is not None:
+            ok = planner._file_passes(row, q.filter)
+        kept += ok
+    return kept
+
+
+def _timed_ms(fn) -> tuple:
+    t0 = time.perf_counter()
+    res = fn()
+    return res, round((time.perf_counter() - t0) * 1e3, 1)
 
 
 def main() -> None:
@@ -145,11 +162,10 @@ def main() -> None:
         idx = OlapIndex.build(spark, flat, cfg, os.path.join(tmp, "idx"))
         out["build_s"] = round(time.perf_counter() - t0, 2)
 
-        t0 = time.perf_counter()
-        fm = idx.file_manifest()
-        out["manifest_load_ms"] = round((time.perf_counter() - t0) * 1e3, 1)
-        out["n_files"] = len(idx.flat_input_files())
-        out["n_manifest_rows"] = len(fm)
+        sf, ms = _timed_ms(lambda: idx.scan_files("flat"))
+        out["manifest_load_ms"] = ms
+        out["n_files"] = len(idx.scan_files("flat").listing)
+        out["n_manifest_rows"] = sf.table.num_rows
 
         for name, f in [
             ("q3", Q3_FILTER), ("q10", Q10_FILTER),
@@ -157,10 +173,9 @@ def main() -> None:
         ]:
             q = _probe_query(f)
             t0 = time.perf_counter()
-            pr = planner.prune_flat_files(idx, q)
+            pr = planner.prune_files(idx, "flat", None, q)
             ms = round((time.perf_counter() - t0) * 1e3, 1)
-            kept, total = pr if pr is not None else (idx.flat_input_files(),
-                                                     out["n_files"])
+            kept, total = pr if pr is not None else (sf.listing, len(sf.listing))
             out[name] = {
                 "kept": len(kept), "total": total,
                 "keep_pct": round(100 * len(kept) / total, 1),
@@ -168,95 +183,76 @@ def main() -> None:
             }
             # correctness spot-check: the pruned scan returns the same rows
             got = (
-                planner._pruned_flat_df(idx, kept)
+                planner._pruned_df(idx, "flat", None, kept)
                 .where(lowering_filter(f)).count()
             )
             want = idx.flat_df().where(lowering_filter(f)).count()
             assert got == want, (name, got, want)
 
         # ---- B. driver-cost scaling over synthetic listings -------------
-        import pyarrow as pa
-
-        base_tbl = idx.file_manifest_table()
         tcol = idx.time_col
-        tmin_i = base_tbl.schema.get_field_index(f"min__{tcol}")
-        tmax_i = base_tbl.schema.get_field_index(f"max__{tcol}")
-        t_type = base_tbl.column(tmin_i).type
+        q10 = _probe_query(Q10_FILTER)
+        # the round-5 interval path: a 1-year query over the ~10-year
+        # span must cost O(pruned) driver time, not O(total) — months
+        # outside the intervals never enter the Python keep loop
+        iv_q = ir.GroupByQuery(
+            dimensions=[ir.DefaultDim("l_returnflag")],
+            aggregations=[ir.CountAgg("n")],
+            granularity="all",
+            filter=FLAG_FILTER,
+            intervals=[ir.Interval("1997-01-01", "1998-01-01")],
+        )
         scaling = {}
         for n in (100_000, 1_000_000):
-            reps = -(-n // base_tbl.num_rows)
-            parts = []
-            files_big = []
-            for r in range(reps):
-                # honest month layout: replica r is one month of a ~10-year
-                # span — dir label AND time stats agree (files_by_month's
-                # contract on a real index)
-                y, mo = 1993 + (r // 12) % 10, 1 + r % 12
-                month = f"{y:04d}-{mo:02d}"
-                paths = [
-                    f"/synthetic/part{r}/__tpart={month}/f{i}.parquet"
-                    for i in range(base_tbl.num_rows)
-                ]
-                import datetime as _dt
-
-                lo = _dt.datetime(y, mo, 3)
-                hi = _dt.datetime(y, mo, 27)
-                if pa.types.is_date(t_type):
-                    lo, hi = lo.date(), hi.date()
-                nrow = base_tbl.num_rows
-                t = base_tbl.set_column(
-                    base_tbl.schema.get_field_index("file"),
-                    "file",
-                    pa.array(paths),
-                )
-                t = t.set_column(
-                    tmin_i, f"min__{tcol}", pa.array([lo] * nrow, t_type)
-                )
-                t = t.set_column(
-                    tmax_i, f"max__{tcol}", pa.array([hi] * nrow, t_type)
-                )
-                parts.append(t)
-                files_big.extend(paths)
-            big = pa.concat_tables(parts).slice(0, n)
-            files_big = files_big[:n]
-            for use_table, label in ((True, "vector"), (False, "per_row")):
-                if not use_table and n > 100_000:
-                    continue  # the 1M per-row walk was measured at 15.6 s
-                stub = _StubIndex(big, files_big, tcol, use_table)
-                if not use_table:
-                    stub.file_manifest()  # pre-build dict outside the timer
-                t0 = time.perf_counter()
-                planner.prune_flat_files(stub, _probe_query(Q10_FILTER))
-                scaling[f"{n}_files_{label}_prune_ms"] = round(
-                    (time.perf_counter() - t0) * 1e3, 1
-                )
-            # the round-5 interval path: a 1-year query over the ~10-year
-            # span must cost O(pruned) driver time, not O(total) — months
-            # outside the intervals never enter the Python keep loop
-            iv_q = ir.GroupByQuery(
-                dimensions=[ir.DefaultDim("l_returnflag")],
-                aggregations=[ir.CountAgg("n")],
-                granularity="all",
-                filter=FLAG_FILTER,
-                intervals=[ir.Interval("1997-01-01", "1998-01-01")],
+            big, files = _replicate(sf.table, tcol, n, "flat")
+            # the epoch memo (keys, month groups), outside the timer
+            big_sf = ScanFiles.build(big, files, tcol)
+            stub = _StubIndex(big_sf)
+            _, scaling[f"{n}_files_vector_prune_ms"] = _timed_ms(
+                lambda: planner.prune_files(stub, "flat", None, q10)
             )
-            for with_months, label in (
-                (True, "interval_month_sharded"),
-                (False, "interval_full_walk"),
+            if n == 100_000:  # the 1M per-row walk was measured at 15.6 s
+                rows = big.to_pylist()
+                _, scaling[f"{n}_files_per_row_prune_ms"] = _timed_ms(
+                    lambda: _per_row_walk(big_sf, rows, q10)
+                )
+            for grouped, label in (
+                (big_sf, "interval_month_sharded"),
+                (replace(big_sf, by_month=None), "interval_full_walk"),
             ):
-                stub = _StubIndex(big, files_big, tcol, True,
-                                  with_months=with_months)
-                stub.pruning_path_sets()  # epoch memo, outside the timer
-                if with_months:
-                    stub.files_by_month()
-                t0 = time.perf_counter()
-                pr = planner.prune_flat_files(stub, iv_q)
-                scaling[f"{n}_files_{label}_prune_ms"] = round(
-                    (time.perf_counter() - t0) * 1e3, 1
+                pr, scaling[f"{n}_files_{label}_prune_ms"] = _timed_ms(
+                    lambda: planner.prune_files(
+                        _StubIndex(grouped), "flat", None, iv_q
+                    )
                 )
                 scaling[f"{n}_files_{label}_kept"] = (
                     len(pr[0]) if pr else None
                 )
+        # a row-grain projection manifest at flat-like file count: an
+        # orderkey range (its sort key) over one year
+        proj_q = ir.GroupByQuery(
+            dimensions=[ir.DefaultDim("l_returnflag")],
+            aggregations=[ir.CountAgg("n")],
+            granularity="all",
+            filter=ir.BoundFilter("l_orderkey", 1000, 50_000),
+            intervals=[ir.Interval("1997-01-01", "1998-01-01")],
+        )
+        n = 100_000
+        big, files = _replicate(
+            idx.scan_files("projection", "li_order").table, tcol, n, "proj"
+        )
+        big_sf = ScanFiles.build(big, files, tcol)
+        pr, scaling[f"{n}_proj_files_vector_prune_ms"] = _timed_ms(
+            lambda: planner.prune_files(
+                _StubIndex(big_sf), "projection", "li_order", proj_q
+            )
+        )
+        rows = big.to_pylist()
+        kept, scaling[f"{n}_proj_files_per_row_prune_ms"] = _timed_ms(
+            lambda: _per_row_walk(big_sf, rows, proj_q)
+        )
+        assert kept == (len(pr[0]) if pr else n), (kept, pr and len(pr[0]))
+        scaling[f"{n}_proj_files_kept"] = kept
         out["driver_scaling"] = scaling
 
         # ---- A2. real build at the DEFAULT byte-floored layout ----------
@@ -276,7 +272,7 @@ def main() -> None:
         idx2 = OlapIndex.build(spark, flat, cfg2, os.path.join(tmp, "idx2"))
         floored: dict = {
             "build_s": round(time.perf_counter() - t0, 2),
-            "n_files": len(idx2.flat_input_files()),
+            "n_files": len(idx2.scan_files("flat").listing),
             "partition_granularity": idx2.config.partition_granularity,
         }
         for name, f in [
@@ -285,10 +281,10 @@ def main() -> None:
         ]:
             q = _probe_query(f)
             t0 = time.perf_counter()
-            pr = planner.prune_flat_files(idx2, q)
+            pr = planner.prune_files(idx2, "flat", None, q)
             ms = round((time.perf_counter() - t0) * 1e3, 1)
             kept, total = pr if pr is not None else (
-                idx2.flat_input_files(), floored["n_files"]
+                idx2.scan_files("flat").listing, floored["n_files"]
             )
             floored[name] = {
                 "kept": len(kept), "total": total,
@@ -296,7 +292,7 @@ def main() -> None:
                 "prune_ms": ms,
             }
             got = (
-                planner._pruned_flat_df(idx2, kept)
+                planner._pruned_df(idx2, "flat", None, kept)
                 .where(lowering_filter(f)).count()
             )
             want = idx2.flat_df().where(lowering_filter(f)).count()

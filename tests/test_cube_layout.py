@@ -53,11 +53,10 @@ def test_tpch_cubes_carry_manifest_and_compression(ctx):
     for name, info in ctx.index.manifest["cubes"].items():
         assert info.get("fileManifest"), name
         assert info.get("compression", 0) > 0, name
-        rows = ctx.index.cube_file_manifest(name)
-        assert rows and all("file" in r for r in rows), name
+        tbl = ctx.index.scan_files("cube", name).table
+        assert tbl.num_rows and "file" in tbl.column_names, name
         # grain stats present: bucket min/max at least
-        assert any(k.startswith("min____bucket") or k == "min____bucket"
-                   or k.startswith("min__") for k in rows[0])
+        assert "min____bucket" in tbl.column_names, name
 
 
 def test_cube_files_are_dim_sorted(ctx):
@@ -99,14 +98,14 @@ def test_cube_file_pruning_multi_file(spark, tmp_path):
         files_per_time_partition=8,
     )
     idx = OlapIndex.build(spark, flat, cfg, str(tmp_path / "idx"))
-    total = len(idx.cube_input_files("k"))
+    total = len(idx.scan_files("cube", "k").listing)
     assert total > 1, "fixture must produce a multi-file cube"
     q = ir.GroupByQuery(
         dimensions=[ir.DefaultDim("k")],
         filter=ir.SelectorFilter("k", "k3"),
         aggregations=[ir.FieldAgg("sum", "sv", "v"), ir.CountAgg("n")],
     )
-    pr = planner.prune_cube_files(idx, "k", q)
+    pr = planner.prune_files(idx, "cube", "k", q)
     assert pr is not None
     files, tot = pr
     assert tot == total and 0 < len(files) < total
@@ -144,7 +143,7 @@ def test_cube_interval_pruning_on_bucket(spark, tmp_path):
         intervals=[ir.Interval("1996-01-01", "1996-03-01")],
         aggregations=[ir.CountAgg("n")],
     )
-    pr = planner.prune_cube_files(idx, "k", q)
+    pr = planner.prune_files(idx, "cube", "k", q)
     # with dims-leading sort, bucket ranges may straddle files; pruning
     # must stay CONSERVATIVE (None or a correct subset)
     ctx = OlapContext(spark, idx)
@@ -411,7 +410,7 @@ def test_floored_flat_row_groups_are_skippable(spark, tmp_path):
         files_per_time_partition=8,
     )
     idx = OlapIndex.build(spark, flat, cfg, str(tmp_path / "idx"))
-    files = [f for f in idx.flat_input_files()]
+    files = [f for f in idx.scan_files("flat").listing]
     assert files
     f = files[0].replace("file:", "")
     md = pq.ParquetFile(f).metadata

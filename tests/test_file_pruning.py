@@ -5,13 +5,14 @@ segments (docs/benchmark/BenchMarkDetails.org:165-190): selective non-time
 predicates skipped whole segments. Here the index build persists per-file
 min/max + exact value sets (index._build_file_manifest) over a layout
 range-clustered on config.sort_cols, and the planner turns filter trees into
-an explicit file list driver-side (planner.prune_flat_files) — no Spark job,
+an explicit file list driver-side (planner.prune_files) — no Spark job,
 no footer reads, conservative on every unknown.
 """
 
 from __future__ import annotations
 
 import datetime
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,8 +125,9 @@ def _q3_spec():
 
 def test_manifest_built_and_covers_all_files(ctx):
     idx = ctx.index
-    fm = idx.file_manifest()
-    assert fm is not None and len(fm) == len(idx.flat_input_files())
+    sf = idx.scan_files("flat")
+    assert sf.table.num_rows == len(sf.listing)
+    assert sf.manifested == set(sf.keys)
     info = idx.manifest["fileManifest"]
     assert "c_mktsegment" in info["setCols"]
     assert "l_returnflag" in info["setCols"]
@@ -161,14 +163,16 @@ def test_prune_fraction_is_material(fine_ctx):
     regime only engages when months exceed target_file_bytes."""
     ctx = fine_ctx
     spec = _q3_spec()
-    files, total = planner.prune_flat_files(ctx.index, spec)
+    files, total = planner.prune_files(ctx.index, "flat", None, spec)
     iv_only = ir.GroupByQuery(
         dimensions=[ir.DefaultDim("l_orderkey")],
         intervals=[ir.Interval("1996-06-01", None)],
         aggregations=[ir.CountAgg("n")],
     )
-    pr = planner.prune_flat_files(ctx.index, iv_only)
-    iv_files = pr[0] if pr is not None else ctx.index.flat_input_files()
+    pr = planner.prune_files(ctx.index, "flat", None, iv_only)
+    iv_files = (
+        pr[0] if pr is not None else ctx.index.scan_files("flat").listing
+    )
     assert len(files) < 0.5 * len(iv_files), (len(files), len(iv_files), total)
 
 
@@ -178,33 +182,16 @@ def test_impossible_selector_prunes_everything(ctx):
         filter=ir.SelectorFilter("c_mktsegment", "NO_SUCH_SEGMENT"),
         aggregations=[ir.CountAgg("n")],
     )
-    files, total = planner.prune_flat_files(ctx.index, spec)
+    files, total = planner.prune_files(ctx.index, "flat", None, spec)
     assert files == [] and total > 0
     assert ctx.query(spec).count() == 0
 
 
-def test_vectorized_prune_equals_per_row_walk(ctx):
-    """The arrow coarse pass + survivor walk must return exactly the file
-    list the pure per-row walk does, across the filter-shape zoo (it exists
-    only to cut 10^6-row planning cost, never to change results)."""
-
-    class _DictOnly:
-        """Forces prune_flat_files onto the legacy dict path."""
-
-        def __init__(self, idx):
-            self._idx = idx
-            self.time_col = idx.time_col
-
-        def file_manifest_table(self):
-            return None
-
-        def file_manifest(self):
-            return self._idx.file_manifest()
-
-        def flat_input_files(self):
-            return self._idx.flat_input_files()
-
-    specs = [
+def prune_zoo() -> list:
+    """Filter- and interval-shape zoo over TPC-H columns: every shape the
+    vector pass treats differently from the per-row walk. Also read by
+    plans/routing_snapshot.py."""
+    return [
         _q3_spec(),
         ir.GroupByQuery(
             dimensions=[ir.DefaultDim("l_returnflag")],
@@ -286,16 +273,56 @@ def test_vectorized_prune_equals_per_row_walk(ctx):
             aggregations=[ir.CountAgg("n")],
         ),
     ]
-    for spec in specs:
-        fast = planner.prune_flat_files(ctx.index, spec)
-        slow = planner.prune_flat_files(_DictOnly(ctx.index), spec)
-        # the contract is the file SET (the month-grouped interval path
-        # composes keeps per month, so emission order differs); sorted
-        # compare still catches duplicates
-        f_files = sorted(fast[0]) if fast is not None else None
-        s_files = sorted(slow[0]) if slow is not None else None
-        assert f_files == s_files, (spec.filter, fast and len(f_files),
-                                    slow and len(s_files))
+
+
+def _walk_every_row(idx, kind, name, q):
+    """Reference pruning: the exact per-row walk (`_intervals_overlap` +
+    `_file_passes`) over every manifest row, keeping unmanifested files."""
+    f, ivs = q.filter, q.intervals or []
+    if f is None and not ivs:
+        return None
+    sf = idx.scan_files(kind, name)
+    passing = set()
+    for row in sf.table.to_pylist():
+        ok = not ivs or planner._intervals_overlap(row, sf.time_col, ivs)
+        if ok and f is not None:
+            ok = planner._file_passes(row, f)
+        if ok:
+            passing.add(planner._file_key(row["file"]))
+    keep = [
+        p
+        for p, k in zip(sf.listing, sf.keys)
+        if k in passing or k not in sf.manifested
+    ]
+    return None if len(keep) == len(sf.listing) else (keep, len(sf.listing))
+
+
+def test_vectorized_prune_equals_per_row_walk(ctx, fine_ctx):
+    """The arrow coarse pass + survivor walk must return exactly the file
+    list the pure per-row walk does, across the filter-shape zoo, on the
+    flat table, every cube and every projection (it exists only to cut
+    10^6-row planning cost, never to change results)."""
+    specs = prune_zoo()
+    pruned = 0
+    for idx in (ctx.index, fine_ctx.index):
+        relations = (
+            [("flat", None)]
+            + [("cube", n) for n in idx.manifest["cubes"]]
+            + [("projection", n) for n in idx.manifest["projections"]]
+        )
+        for (kind, name), spec in itertools.product(relations, specs):
+            fast = planner.prune_files(idx, kind, name, spec)
+            slow = _walk_every_row(idx, kind, name, spec)
+            # the contract is the file SET (the month-grouped interval path
+            # composes keeps per month, so emission order differs); sorted
+            # compare still catches duplicates
+            f_files = sorted(fast[0]) if fast is not None else None
+            s_files = sorted(slow[0]) if slow is not None else None
+            assert f_files == s_files, (kind, name, spec.filter,
+                                        fast and len(f_files),
+                                        slow and len(s_files))
+            pruned += fast is not None and kind != "flat"
+    assert pruned, "the zoo must prune some cube or projection files"
 
 
 def test_moved_index_prunes_the_same_files(spark, fine_ctx, tmp_path):
@@ -316,9 +343,9 @@ def test_moved_index_prunes_the_same_files(spark, fine_ctx, tmp_path):
 
     q = _q3_spec()
     prunes = (
-        lambda idx: planner.prune_flat_files(idx, q),
-        lambda idx: planner.prune_cube_files(idx, "market", q),
-        lambda idx: planner.prune_projection_files(idx, "li_order", q),
+        lambda idx: planner.prune_files(idx, "flat", None, q),
+        lambda idx: planner.prune_files(idx, "cube", "market", q),
+        lambda idx: planner.prune_files(idx, "projection", "li_order", q),
     )
 
     def relative(idx, res):
@@ -334,6 +361,37 @@ def test_moved_index_prunes_the_same_files(spark, fine_ctx, tmp_path):
             got = prune(moved)
             assert got is not None, root
             assert relative(moved, got) == relative(src, want), root
+
+
+@pytest.mark.parametrize(
+    "stamp", ["fileManifest", "rowCount", "bytesPerRow", "columnBytesPerRow"]
+)
+def test_missing_relation_stamp_asks_for_rebuild(spark, ctx, tmp_path, stamp):
+    """Every flat, cube and projection entry carries the stamps pruning and
+    pricing read; a manifest without one fails on load, asking for a
+    rebuild, instead of planning on a fallback."""
+    import copy
+    import json
+
+    from pysparkline.index import MANIFEST, IndexFormatError, OlapIndex
+
+    full = ctx.index.manifest
+    cube = next(iter(full["cubes"]))
+    proj = next(iter(full["projections"]))
+    for where in ("flat", "cube", "projection"):
+        m = copy.deepcopy(full)
+        if where == "flat":
+            # the flat table's file manifest sits at the top level
+            holder = m if stamp == "fileManifest" else m["flat"]
+        else:
+            holder = m[where + "s"][cube if where == "cube" else proj]
+        del holder[stamp]
+        root = tmp_path / f"{where}_{stamp}"
+        root.mkdir()
+        with open(root / MANIFEST, "w") as fh:
+            json.dump(m, fh, default=str)
+        with pytest.raises(IndexFormatError, match="rebuild"):
+            OlapIndex.load(spark, str(root))
 
 
 def test_appended_files_are_kept(spark, tmp_path):
@@ -375,7 +433,7 @@ def test_pruned_plan_reads_fewer_files(ctx):
     """The executed plan's scan reads only the kept files (file-level skip,
     not just a predicate over the full listing)."""
     spec = _q3_row_grain_spec()
-    files, total = planner.prune_flat_files(ctx.index, spec)
+    files, total = planner.prune_files(ctx.index, "flat", None, spec)
     df = ctx.query(spec)
     df.collect()
     assert len(df.inputFiles()) == len(files) < total
@@ -414,7 +472,7 @@ def test_zorder_prunes_on_every_dimension(spark, tmp_path):
             filter=filt,
             aggregations=[ir.CountAgg("n")],
         )
-        res = planner.prune_flat_files(idx, q)
+        res = planner.prune_files(idx, "flat", None, q)
         assert res is not None
         return res
 
@@ -516,7 +574,7 @@ def test_byte_floor_collapses_small_partitions(spark, tmp_path):
     idx = OlapIndex.build(spark, df, cfg, str(tmp_path / "floored"))
     assert idx.config.partition_granularity == "year"
     by_part: dict[str, int] = {}
-    for f in idx.flat_input_files():
+    for f in idx.scan_files("flat").listing:
         m = f.split("__tpart=")[1].split("/")[0]
         by_part[m] = by_part.get(m, 0) + 1
     assert sorted(by_part) == ["2023", "2024"], by_part
@@ -565,7 +623,7 @@ def test_byte_floor_collapses_small_partitions(spark, tmp_path):
         intervals=[ir.Interval(None, "2023-12-01")],
         aggregations=[ir.CountAgg("n")],
     )
-    res = planner.prune_flat_files(idx, spec_old)
+    res = planner.prune_files(idx, "flat", None, spec_old)
     assert res is not None and len(res[0]) < res[1]
 
 
@@ -660,13 +718,15 @@ def test_prune_is_conservative_fuzz(spark, ctx):
             filter=f,
             aggregations=[ir.CountAgg("n")],
         )
-        res = planner.prune_flat_files(idx, q)
+        res = planner.prune_files(idx, "flat", None, q)
         if res is None:
             return
         files, total = res
         cond = low.filter_to_column(f)
         full = flat.where(cond).count()
-        pruned = planner._pruned_flat_df(idx, files).where(cond).count()
+        pruned = (
+            planner._pruned_df(idx, "flat", None, files).where(cond).count()
+        )
         assert pruned == full, (f, len(files), total, pruned, full)
 
     run()
@@ -706,13 +766,13 @@ def test_compact_flat_restores_pruning(spark, tmp_path):
     )
     ctx = OlapContext(spark, idx, fact_name="cfact")
     before = sorted(map(tuple, ctx.query(spec).collect()))
-    res_before = planner.prune_flat_files(idx, spec)
+    res_before = planner.prune_files(idx, "flat", None, spec)
     kept_before, total_before = len(res_before[0]), res_before[1]
 
     n = ing.compact_flat()
     assert n == 2  # both months got appended files
 
-    res_after = planner.prune_flat_files(idx, spec)
+    res_after = planner.prune_files(idx, "flat", None, spec)
     kept_after, total_after = len(res_after[0]), res_after[1]
     # every file known again and the selector prunes materially
     assert kept_after < total_after
@@ -772,8 +832,8 @@ def test_compact_flat_on_moved_index(spark, tmp_path):
     ing = StreamingIngest(moved)
     assert ing.compact_flat() == 1  # only 2024-01 got appended files
     files = glob.glob(os.path.join(moved_root, "flat", "*", "*.parquet"))
-    manifest = moved.file_manifest()
-    assert len(manifest) == len(files)  # no stale rows left behind
+    # no stale rows left behind
+    assert moved.scan_files("flat").table.num_rows == len(files)
     assert ing.compact_flat() == 0
 
 

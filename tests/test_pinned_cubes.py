@@ -189,7 +189,7 @@ def test_pruned_multi_file_cube_reads_pin(spark, tmp_path):
         aggregations=[ir.CountAgg("n"), ir.FieldAgg("sum", "sv", "v")],
     )
     idx = OlapIndex.load(spark, path)
-    assert len(idx.cube_input_files("km")) > 1
+    assert len(idx.scan_files("cube", "km").listing) > 1
     disk = OlapContext(spark, idx)
     want = _rows(disk.query(q))
     assert "cube file manifest pruned scan: 1/" in (

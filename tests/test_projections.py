@@ -105,7 +105,7 @@ def test_projection_file_pruning_selector(spark, pidx):
         filter=ir.SelectorFilter("k", "k3"),
         aggregations=[ir.FieldAgg("sum", "sv", "v")],
     )
-    pr = planner.prune_projection_files(pidx, "kv", q)
+    pr = planner.prune_files(pidx, "projection", "kv", q)
     assert pr is not None
     files, total = pr
     assert 0 < len(files) < total
@@ -212,10 +212,8 @@ def test_compact_projections_restores_pruning(spark, tmp_path):
     got_post, dec = run()
     assert got_post == exp
     # post-compaction every file is manifested again and pruning engages
-    rows = idx.projection_file_manifest("kv")
-    files = idx.projection_input_files("kv")
-    known = {planner._file_key(r["file"]) for r in rows}
-    assert all(planner._file_key(f) in known for f in files)
+    sf = idx.scan_files("projection", "kv")
+    assert set(sf.keys) <= sf.manifested
     assert any("projection file manifest pruned" in x for x in dec.notes)
 
 
@@ -279,10 +277,8 @@ def test_unpartitioned_projection_lifecycle(spark, tmp_path):
     n = StreamingIngest(idx).compact_projections()
     assert n > 0
     assert run() == expect(both)
-    rows = idx.projection_file_manifest("kv")
-    files = idx.projection_input_files("kv")
-    known = {planner._file_key(r["file"]) for r in rows}
-    assert all(planner._file_key(f) in known for f in files)
+    sf = idx.scan_files("projection", "kv")
+    assert set(sf.keys) <= sf.manifested
 
 
 def test_tpch_semijoin_outers_ride_projections(spark):

@@ -329,8 +329,9 @@ def test_explain_rewrite_sql(ctx):
 
 def test_explain_rewrite_carries_pruning_stats(ctx):
     """The explain block shows the decision a user needs to see: chosen
-    backing, the file-pruning keep ratio on flat scans, and cube-vs-flat
-    row counts on cube routes (DruidMetadataCommands.scala:49-77 analog)."""
+    backing, the file-pruning keep ratio the planner recorded on flat, cube
+    and projection scans, and cube-vs-flat row counts on cube routes
+    (DruidMetadataCommands.scala:49-77 analog)."""
     import re
 
     # selective flat-served scan: keep ratio present and well-formed
@@ -352,6 +353,35 @@ ORDER BY l_orderkey LIMIT 10
     )
     if "backing=cube" in txt2:
         assert re.search(r"cube rows: \d+ \(vs flat \d+\)", txt2), txt2
+
+    # cube and projection routes report the keep ratio the planner
+    # recorded, on a floor-free build whose cubes and projections are
+    # multi-file (at sf0.001 the byte floor leaves each of them one file)
+    from pysparkline import tpch
+    from pysparkline.session import OlapContext
+
+    cfg = tpch.tpch_index_config()
+    cfg.target_file_bytes = 0
+    fine = OlapContext(
+        ctx.spark, tpch.build_or_load_index(ctx.spark, SF, config=cfg)
+    )
+    routes = {
+        "backing=cube": """
+SELECT c_mktsegment, count(*) AS n FROM lineitem
+WHERE c_mktsegment = 'BUILDING' GROUP BY c_mktsegment""",
+        "projection li_order covers the scan": """
+SELECT l_orderkey, l_returnflag FROM lineitem
+WHERE l_orderkey < 300
+  AND l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-03-01'""",
+    }
+    for route, sql in routes.items():
+        txt = fine.explain_rewrite(sql)
+        kind = route.split()[0].replace("backing=", "")
+        assert route in txt, txt
+        assert f"{kind} file manifest pruned scan" in txt, txt
+        m = re.search(r"pruning: keep (\d+)/(\d+) files \((\d+\.\d)%\)", txt)
+        assert m, txt
+        assert 0 < int(m.group(1)) < int(m.group(2)), txt
 
 
 def test_sql_quantile_rewrites_and_matches(ctx, duck):
